@@ -26,6 +26,8 @@ machinery with an extra group key (graph_extraction.py:373-448).
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -320,45 +322,133 @@ def cooccurrence_edges(
     )
 
 
+def doc_edges(
+    ms: list[tuple[str, int, int]],
+    dist: int,
+    unit: str,
+    sent_start: list[int] | None = None,
+    sent_end: list[int] | None = None,
+    pol: list[float] | None = None,
+) -> list[tuple]:
+    """Edges of ONE document: the reference's block scan
+    (graph_extraction.py:315-369).
+
+    ms: mentions (char_id, start_idx, end_idx) sorted by
+    (start_idx, end_idx, char_id); sent_start/sent_end: token bounds
+    of the document's sentences in order (sentence unit or polarity);
+    pol: per-sentence polarity. → sorted [(src, dst, weight[, polarity])].
+
+    A token's sentence and a block's candidate mentions (start inside
+    the block) are both found by bisection, so a block costs only its
+    own mentions.
+    """
+    starts = [s for _, s, _ in ms]
+
+    def sent_of(tok: int) -> int:
+        return bisect_right(sent_start, tok) - 1
+
+    if unit == "tokens":
+        blocks = {(s - dist, e + dist) for _, s, e in ms}
+    elif unit == "sentences":
+        last = len(sent_start) - 1
+        blocks = {
+            (sent_start[max(0, sent_of(s) - dist)],
+             sent_end[min(last, sent_of(e - 1) + dist)])
+            for _, s, e in ms
+        }
+    else:
+        raise ValueError(f"unknown unit: {unit}")
+    pairs = set()
+    for bs, be in blocks:
+        in_block = [
+            i for i in range(bisect_left(starts, bs), bisect_right(starts, be))
+            if ms[i][2] <= be
+        ]
+        for a, i in enumerate(in_block):
+            ki = ms[i][0]
+            for j in in_block[a + 1:]:
+                if ms[j][0] != ki:
+                    pairs.add((i, j))
+    edges: dict[tuple[str, str], list] = {}
+    # sorted: polarity sums add in one fixed order
+    for i, j in sorted(pairs):
+        k1, k2 = ms[i][0], ms[j][0]
+        ent = edges.setdefault((k1, k2) if k1 < k2 else (k2, k1), [0, 0.0])
+        ent[0] += 1
+        if pol is not None:
+            between = pol[sent_of(ms[i][1]): sent_of(ms[j][1]) + 1]
+            ent[1] += max(between, key=abs)
+    if pol is None:
+        return [(src, dst, w) for (src, dst), (w, _) in sorted(edges.items())]
+    return [(src, dst, w, p) for (src, dst), (w, p) in sorted(edges.items())]
+
+
+EDGES_SCHEMA = "doc_id string, src string, dst string, weight long"
+
+
 def cooccurrence_edges_grouped(
-    mentions_df: DataFrame,
+    mentions_df: DataFrame | None = None,
     dist: int = 1,
     unit: str = "sentences",
     tokens_df: DataFrame | None = None,
     polarities_df: DataFrame | None = None,
     sent_info_df: DataFrame | None = None,
+    *,
+    documents_df: DataFrame | None = None,
+    gazetteer: list[str] | set[str] | None = None,
+    min_appearances: int = 0,
 ) -> DataFrame:
-    """Per-document exact extraction in ONE shuffle — the parity/fast
+    """Per-document exact extraction (``doc_edges``) — the parity/fast
     path for the common shape (many modest documents). Identical output
-    to ``cooccurrence_edges`` (the join path stays for huge single
-    documents / dynamic variants); equality is property-tested.
+    to ``cooccurrence_edges``, whose join path stays for huge single
+    documents (one document's scan cannot spread over tasks) and the
+    dynamic variants; equality is property-tested.
 
-    Runs the reference's sorted early-break block scan
-    (graph_extraction.py:315-369) per doc inside an Arrow batch.
+    Two inputs:
 
-    Execution shape: mentions and sentence-bound rows are UNIONED with
-    a kind tag, repartitioned+sorted by doc_id, and processed by ONE
-    ``mapInPandas`` call per Arrow batch (trailing doc carried across
-    batch boundaries) — per-document Python-call overhead, the scale
-    killer of a per-group cogroup at 10^12 docs, never happens.
+    * a mentions table ``mentions_df`` (doc_id, char_id, start_idx,
+      end_idx): mentions and sentence-bound rows are UNIONED with a
+      kind tag, repartitioned+sorted by doc_id, and processed by ONE
+      ``mapInPandas`` call per Arrow batch (trailing doc carried across
+      batch boundaries) — per-document Python-call overhead, the scale
+      killer of a per-group cogroup at 10^12 docs, never happens;
+    * ``documents_df`` (doc_id, text) with a ``gazetteer``: the
+      one-crossing path. Each document's sentence tokens are computed
+      JVM-side by the tokenizer expression and cross into Python ONCE,
+      one row per document, through ``mapInArrow``; there rule NER
+      (``ner.gazetteer_runs``), graph-rules unification
+      (``unify_core.unify_doc`` with ``min_appearances``) and
+      ``doc_edges`` run back to back. No shuffle: a document is one
+      row, so doc_id must be unique in the table. It equals
+      ``rule_ner_sentences`` → ``graph_rules_unify(min_appearances=)``
+      → this function over the unified mentions; it takes no
+      polarities, and ``min_appearances`` applies to this input only.
     """
+    if documents_df is not None:
+        if mentions_df is not None or gazetteer is None or (
+            polarities_df is not None
+        ):
+            raise ValueError(
+                "documents_df takes a gazetteer and no mentions_df or "
+                "polarities_df"
+            )
+        return _one_crossing_edges(
+            documents_df, set(gazetteer), dist, unit, min_appearances
+        )
     import pandas as pd
 
     with_pol = polarities_df is not None
     need_sent = unit == "sentences" or with_pol
     assert not need_sent or tokens_df is not None or sent_info_df is not None
 
-    schema = "doc_id string, src string, dst string, weight long" + (
-        ", polarity double" if with_pol else ""
-    )
-
+    schema = EDGES_SCHEMA + (", polarity double" if with_pol else "")
     cols = ["doc_id", "src", "dst", "weight"] + (
         ["polarity"] if with_pol else []
     )
 
-    def extract(mpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
+    def extract(mpdf: pd.DataFrame, spdf: pd.DataFrame) -> list[tuple]:
         if mpdf.empty:
-            return pd.DataFrame(columns=cols)
+            return []
         doc_id = mpdf["doc_id"].iloc[0]
         ms = sorted(
             zip(
@@ -369,59 +459,16 @@ def cooccurrence_edges_grouped(
             key=lambda m: (m[1], m[2], m[0]),
         )
         sent_start = sent_end = pol = None
-        sent_of = {}
         if need_sent:
             spdf = spdf.sort_values("sent_idx")
             sent_start = spdf["sent_start"].astype(int).tolist()
             sent_end = spdf["sent_end"].astype(int).tolist()
             if with_pol:
                 pol = spdf["polarity"].astype(float).tolist()
-            for si, (a, b) in enumerate(zip(sent_start, sent_end)):
-                for tix in range(a, b):
-                    sent_of[tix] = si
-        # blocks
-        if unit == "tokens":
-            blocks = [(s - dist, e + dist) for _, s, e in ms]
-        else:
-            nsent = len(sent_start)
-            bl = set()
-            for _, s, e in ms:
-                s0 = max(0, sent_of[s] - dist)
-                s1 = min(nsent - 1, sent_of[e - 1] + dist)
-                bl.add((sent_start[s0], sent_end[s1]))
-            blocks = sorted(bl)
-        # pair scan with early break over sorted mentions
-        pairs = set()
-        n = len(ms)
-        for bs, be in blocks:
-            in_block = []
-            for i in range(n):
-                k, s, e = ms[i]
-                if s >= bs and e <= be:
-                    in_block.append(i)
-                if s > be:
-                    break
-            for ai in range(len(in_block)):
-                for bi in range(ai + 1, len(in_block)):
-                    i, j = in_block[ai], in_block[bi]
-                    if ms[i][0] != ms[j][0]:
-                        pairs.add((i, j))
-        edges: dict[tuple[str, str], list] = {}
-        for i, j in pairs:
-            k1, k2 = ms[i][0], ms[j][0]
-            key = (min(k1, k2), max(k1, k2))
-            ent = edges.setdefault(key, [0, 0.0])
-            ent[0] += 1
-            if with_pol:
-                si, sj = sent_of[ms[i][1]], sent_of[ms[j][1]]
-                between = pol[si : sj + 1]
-                ent[1] += max(between, key=abs)
-        rows = []
-        for (src, dst), (w, p) in sorted(edges.items()):
-            rows.append(
-                (doc_id, src, dst, w) + ((p,) if with_pol else ())
-            )
-        return pd.DataFrame(rows, columns=cols)
+        return [
+            (doc_id,) + e
+            for e in doc_edges(ms, dist, unit, sent_start, sent_end, pol)
+        ]
 
     m = mentions_df.select("doc_id", "char_id", "start_idx", "end_idx")
     if need_sent:
@@ -468,14 +515,85 @@ def cooccurrence_edges_grouped(
     from renard_spark.operators.utils import map_in_pandas_by_key
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
+        rows = []
         for _, g in pdf.groupby("doc_id", sort=False):
-            outs.append(extract(g[g["_kind"] == 1], g[g["_kind"] == 0]))
-        if not outs:
-            return pd.DataFrame(columns=cols)
-        return pd.concat(outs, ignore_index=True)
+            rows.extend(extract(g[g["_kind"] == 1], g[g["_kind"] == 0]))
+        return pd.DataFrame(rows, columns=cols)
 
     return map_in_pandas_by_key(tagged, process, schema=schema)
+
+
+def _one_crossing_edges(
+    documents_df: DataFrame,
+    gazetteer: set[str],
+    dist: int,
+    unit: str,
+    min_appearances: int,
+) -> DataFrame:
+    """documents → edges in one ``mapInArrow`` over one row per
+    document (see ``cooccurrence_edges_grouped``)."""
+    from renard_spark.operators.tokenize import sentence_token_arrays
+
+    if unit not in ("tokens", "sentences"):
+        raise ValueError(f"unknown unit: {unit}")
+
+    def run(batches):
+        import pyarrow as pa
+
+        from renard_spark.operators.ner import gazetteer_runs
+        from renard_spark.operators.unify_core import unify_doc
+
+        for batch in batches:
+            doc_ids = batch.column(0).to_pylist()
+            sents = batch.column(1)
+            valid = sents.is_valid().to_pylist() if sents.null_count else None
+            # offsets index the child arrays: sentences of document d are
+            # [doc_off[d], doc_off[d+1]), tokens of sentence k are
+            # toks[tok_off[k]:tok_off[k+1]]. Token positions stay
+            # batch-global: edges depend only on positions relative to
+            # the document's own mentions and sentences.
+            doc_off = sents.offsets.to_pylist()
+            tok_off = sents.values.offsets.to_pylist()
+            toks = sents.values.values.to_pylist()
+            out_doc, out_src, out_dst, out_w = [], [], [], []
+            for d, doc_id in enumerate(doc_ids):
+                if valid is not None and not valid[d]:
+                    continue
+                first, stop = doc_off[d], doc_off[d + 1]
+                mentions = []
+                for k in range(first, stop):
+                    mentions += gazetteer_runs(
+                        toks[tok_off[k]:tok_off[k + 1]], gazetteer, tok_off[k]
+                    )
+                if not mentions:
+                    continue
+                ms = sorted(
+                    ((c["char_id"], s, e)
+                     for c in unify_doc(mentions,
+                                        min_appearances=min_appearances)
+                     for _, s, e in c["mentions"]),
+                    key=lambda m: (m[1], m[2], m[0]),
+                )
+                edges = doc_edges(
+                    ms, dist, unit, tok_off[first:stop], tok_off[first + 1:stop + 1]
+                )
+                for src, dst, w in edges:
+                    out_doc.append(doc_id)
+                    out_src.append(src)
+                    out_dst.append(dst)
+                    out_w.append(w)
+            if out_doc:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(out_doc, pa.string()),
+                     pa.array(out_src, pa.string()),
+                     pa.array(out_dst, pa.string()),
+                     pa.array(out_w, pa.int64())],
+                    names=["doc_id", "src", "dst", "weight"],
+                )
+
+    return documents_df.select(
+        "doc_id", sentence_token_arrays().alias("sents")
+    ).mapInArrow(run, schema=EDGES_SCHEMA)
 
 
 def add_window_ids(

@@ -22,6 +22,9 @@ with end_idx exclusive and mention_str = " ".join(tokens).
 
 from __future__ import annotations
 
+import re
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -299,6 +302,33 @@ def model_ner(
 
 
 CAP_TOKEN_RE = r"^[A-Z][a-z']*$"
+_CAP_TOKEN = re.compile(CAP_TOKEN_RE)
+
+
+def gazetteer_runs(
+    toks: Sequence[str], gazetteer: set[str], offset: int = 0
+) -> list[tuple[str, int, int]]:
+    """(surface, start_idx, end_idx) of every maximal run of capitalized
+    tokens of one sentence whose joined surface is in ``gazetteer``;
+    indices are ``offset`` + position, end exclusive. The per-sentence
+    scan of ``rule_ner_sentences`` and of the one-crossing
+    co-occurrence path (``cooccur.cooccurrence_edges_grouped``)."""
+    match = _CAP_TOKEN.match
+    out = []
+    n = len(toks)
+    i = 0
+    while i < n:
+        if match(toks[i]):
+            j = i + 1
+            while j < n and match(toks[j]):
+                j += 1
+            surface = " ".join(toks[i:j])
+            if surface in gazetteer:
+                out.append((surface, offset + i, offset + j))
+            i = j
+        else:
+            i += 1
+    return out
 
 
 def rule_ner(
@@ -361,12 +391,9 @@ def rule_ner_sentences(
     punctuation token breaks them), so run detection is sentence-local:
     one Arrow-batched mapInPandas, gazetteer broadcast in the closure.
     Output identical to rule_ner (property-tested)."""
-    import re
-
     import pandas as pd
 
     gaz = set(surface_gazetteer)
-    cap = re.compile(CAP_TOKEN_RE)
 
     def run(batches):
         for pdf in batches:
@@ -374,21 +401,10 @@ def rule_ner_sentences(
             for doc_id, off, toks in zip(
                 pdf["doc_id"], pdf["sent_start"], pdf["toks"]
             ):
-                n = len(toks)
-                i = 0
-                while i < n:
-                    if cap.match(toks[i]):
-                        j = i
-                        while j < n and cap.match(toks[j]):
-                            j += 1
-                        surface = " ".join(toks[i:j])
-                        if surface in gaz:
-                            rows.append(
-                                (doc_id, int(off) + i, int(off) + j, surface)
-                            )
-                        i = j
-                    else:
-                        i += 1
+                rows.extend(
+                    (doc_id, s, e, surface)
+                    for surface, s, e in gazetteer_runs(list(toks), gaz, int(off))
+                )
             yield pd.DataFrame(
                 rows, columns=["doc_id", "start_idx", "end_idx", "mention_str"]
             )

@@ -214,8 +214,13 @@ def pattern_relations(
         & (F.col("_vt") < F.col("obj_start")),
     )
     # first (lowest-position) verb between the pair wins — the pair is
-    # identified by its subject mention (subj_start/subj_end are unique
-    # per (doc, sentence) by the window order above)
+    # identified by its subject mention. (subj_start, subj_end) is NOT
+    # unique per (doc, sentence): naive_unify's coref path can emit two
+    # char_ids at one span. Such duplicates sort next to each other in
+    # the lead() window, so every one but the last pairs with a
+    # successor at the same span, whose verb-between filter
+    # (subj_end <= _vt < obj_start) is empty; only the last one of a
+    # span reaches w2 with hits.
     w2 = Window.partitionBy("doc_id", "sent_idx", "subj_start", "subj_end").orderBy(
         "_vt"
     )

@@ -21,7 +21,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # word characters (incl. apostrophes) run, else any single non-space
@@ -50,24 +50,22 @@ def sentences(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Token table: (doc_id, sent_idx, tok_idx, tok_in_sent, token).
-
-    tok_idx is the document-global token index (the reference's flat
-    ``tokens`` list position, core.py:165-166). Computed entirely with
-    array higher-order functions — per-sentence offsets come from one
-    ordered fold over the sentence array, so the whole tokenizer is
-    NARROW (zero shuffles): at 10^12 docs the token table needs no
-    exchange at all until an operator actually groups it.
-    """
+def sentence_token_arrays(text_col: str = "text") -> Column:
+    """Per-document array<array<string>>: the tokens of each non-blank
+    sentence, in order — the one tokenizer expression every tokenized
+    form (``tokens``, ``sentence_tokens``, the one-crossing
+    co-occurrence path) derives from."""
     pieces = F.filter(
         F.split(F.col(text_col), SENT_SPLIT_RE), lambda s: F.trim(s) != ""
     )
-    sent_toks = F.transform(
+    return F.transform(
         pieces, lambda s: F.regexp_extract_all(s, F.lit(TOKEN_RE), 0)
     )
-    # ordered fold → global start offset of each sentence
-    offs = F.aggregate(
+
+
+def _sentence_offsets(sent_toks: Column) -> Column:
+    """Ordered fold → global start offset of each sentence."""
+    return F.aggregate(
         sent_toks,
         F.struct(
             F.lit(0).alias("total"),
@@ -79,6 +77,20 @@ def tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
         ),
         lambda acc: acc["offs"],
     )
+
+
+def tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Token table: (doc_id, sent_idx, tok_idx, tok_in_sent, token).
+
+    tok_idx is the document-global token index (the reference's flat
+    ``tokens`` list position, core.py:165-166). Computed entirely with
+    array higher-order functions — per-sentence offsets come from one
+    ordered fold over the sentence array, so the whole tokenizer is
+    NARROW (zero shuffles): at 10^12 docs the token table needs no
+    exchange at all until an operator actually groups it.
+    """
+    sent_toks = sentence_token_arrays(text_col)
+    offs = _sentence_offsets(sent_toks)
     per_sent = df.select(
         "doc_id",
         F.posexplode(F.arrays_zip(sent_toks, offs)).alias("sent_idx", "_z"),
@@ -107,24 +119,8 @@ def sentence_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     sent_end, toks array<string>) — fully narrow (zero shuffles), the
     preferred upstream for sentence-scoped operators. sent_start/end
     are global token indices (end exclusive)."""
-    pieces = F.filter(
-        F.split(F.col(text_col), SENT_SPLIT_RE), lambda s: F.trim(s) != ""
-    )
-    sent_toks = F.transform(
-        pieces, lambda s: F.regexp_extract_all(s, F.lit(TOKEN_RE), 0)
-    )
-    offs = F.aggregate(
-        sent_toks,
-        F.struct(
-            F.lit(0).alias("total"),
-            F.expr("array()").cast("array<int>").alias("offs"),
-        ),
-        lambda acc, x: F.struct(
-            (acc["total"] + F.size(x)).alias("total"),
-            F.concat(acc["offs"], F.array(acc["total"])).alias("offs"),
-        ),
-        lambda acc: acc["offs"],
-    )
+    sent_toks = sentence_token_arrays(text_col)
+    offs = _sentence_offsets(sent_toks)
     return df.select(
         "doc_id",
         F.posexplode(F.arrays_zip(sent_toks, offs)).alias("sent_idx", "_z"),

@@ -25,8 +25,9 @@ from __future__ import annotations
 
 import re
 from collections import Counter, deque
+from functools import lru_cache
 from itertools import combinations
-from typing import Iterable, Optional
+from typing import Iterable, NamedTuple, Optional
 
 from renard_spark.functions.names import parse_name
 from renard_spark.resources.gazetteers import (
@@ -36,6 +37,8 @@ from renard_spark.resources.gazetteers import (
     is_female_title,
     is_male_pronoun,
     is_male_title,
+    names_of_nickname,
+    nicknames_of,
 )
 
 UNKNOWN, MALE, FEMALE = "UNKNOWN", "MALE", "FEMALE"
@@ -57,6 +60,48 @@ def _related_after_title_removal(p1, p2, extra_hypo) -> bool:
     if raw1 == "" or raw2 == "":
         return False
     return raw1.lower() == raw2.lower() or hypocorism_related(raw1, raw2, extra_hypo)
+
+
+class _NameFeatures(NamedTuple):
+    """What the pair rules read of one name, computed once per name:
+    lowercased pre-processed form and title-stripped form with their
+    hypocorism sets, lowercased first and last names. ``related`` is
+    the hypocorism / title-removal / shared last / shared first rules
+    of ``hypocorism_related`` and ``_related_after_title_removal``
+    without an extra hypocorism table."""
+
+    pre: str
+    pre_hypo: frozenset
+    raw: str
+    raw_hypo: frozenset
+    first: str
+    last: str
+
+    def related(self, o: "_NameFeatures") -> bool:
+        return (
+            (self.pre != "" and o.pre != ""
+             and (self.pre == o.pre or o.pre in self.pre_hypo))
+            or (self.raw != "" and o.raw != ""
+                and (self.raw == o.raw or o.raw in self.raw_hypo))
+            or (self.last != "" and self.last == o.last)
+            or (self.first != "" and self.first == o.first)
+        )
+
+
+@lru_cache(maxsize=1 << 16)
+def _name_features(pre: str, lang: str) -> _NameFeatures:
+    """Memoized like ``parse_name``: corpora repeat the same names."""
+    parsed = parse_name(pre, lang)
+    pre_l = pre.lower()
+    raw_l = parsed.without_title.lower()
+    return _NameFeatures(
+        pre_l, _hypocorisms(pre_l), raw_l, _hypocorisms(raw_l),
+        parsed.first.lower(), parsed.last.lower(),
+    )
+
+
+def _hypocorisms(name_l: str) -> frozenset:
+    return frozenset(nicknames_of(name_l) | names_of_nickname(name_l))
 
 
 def _names_in_coref(name1: str, name2: str, chains: Iterable[Chain]) -> bool:
@@ -149,19 +194,27 @@ def unify_doc(
     pre = {n: _preprocess_name(n, lang, ignore_leading_determiner) for n in names}
     parsed = {n: parse_name(pre[n], lang) for n in names}
 
+    if extra_hypocorisms:
+        def name_rule(n1: str, n2: str) -> bool:
+            p1, p2 = parsed[n1], parsed[n2]
+            return (
+                hypocorism_related(pre[n1], pre[n2], extra_hypocorisms)
+                or _related_after_title_removal(p1, p2, extra_hypocorisms)
+                or (p1.last != "" and p1.last.lower() == p2.last.lower())
+                or (p1.first != "" and p1.first.lower() == p2.first.lower())
+            )
+    else:
+        feats = {n: _name_features(pre[n], lang) for n in names}
+
+        def name_rule(n1: str, n2: str) -> bool:
+            return feats[n1].related(feats[n2])
+
     adj: dict[str, set[str]] = {n: set() for n in names}
     for n1, n2 in combinations(names, 2):
-        p1, p2 = parsed[n1], parsed[n2]
-        if (
-            hypocorism_related(pre[n1], pre[n2], extra_hypocorisms)
-            or _related_after_title_removal(p1, p2, extra_hypocorisms)
-            or (p1.last != "" and p1.last.lower() == p2.last.lower())
-            or (p1.first != "" and p1.first.lower() == p2.first.lower())
-            or (
-                chains is not None
-                and link_corefs_mentions
-                and _names_in_coref(n1, n2, chains)
-            )
+        if name_rule(n1, n2) or (
+            chains is not None
+            and link_corefs_mentions
+            and _names_in_coref(n1, n2, chains)
         ):
             adj[n1].add(n2)
             adj[n2].add(n1)
@@ -210,13 +263,15 @@ def unify_doc(
     if chains is not None:
         characters = assign_coreference_mentions(characters, chains)
 
+    if min_appearances <= 0:
+        return characters
+
     # GraphRules variant: count only mentions whose surface ∈ names
-    return [
-        c
-        for c in characters
-        if sum(1 for m in c["mentions"] if m[0] in set(c["names"]))
-        >= min_appearances
-    ]
+    def appearances(c: dict) -> int:
+        names_ = set(c["names"])
+        return sum(1 for m in c["mentions"] if m[0] in names_)
+
+    return [c for c in characters if appearances(c) >= min_appearances]
 
 
 def assign_coreference_mentions(

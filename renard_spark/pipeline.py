@@ -48,11 +48,21 @@ def character_graph_pipeline(
     Mirrors the reference's preconfigured ``co_occurrence_pipeline``
     (preconfigured.py:36-37; default dist (1,'sentences')).
 
-    cooccur_path: 'grouped' (one-shuffle per-doc exact path, default)
-    or 'joins' (distributed containment joins — the huge-doc /
-    dynamic-window scale path). persist=True caches the two stage
-    tables every downstream branch re-reads (tokens, unified mentions)
-    so the lazy DAG doesn't recompute ingest+tokenize per branch.
+    cooccur_path: 'grouped' (per-doc exact path, default) or 'joins'
+    (distributed containment joins — the scale path for huge single
+    documents, whose per-doc scan cannot spread over tasks, and for
+    dynamic windows). persist=True caches the two stage tables every
+    downstream branch re-reads (tokens, unified mentions) so the lazy
+    DAG doesn't recompute ingest+tokenize per branch.
+
+    The default configuration — rule NER, the 'graph_rules' unifier,
+    no coref chains (given or model-computed), no additional NER
+    classes, no polarities, no dynamic window, cooccur_path 'grouped'
+    — computes ``edges`` in ONE Python crossing per document with no
+    shuffle (``cooccurrence_edges_grouped`` over the documents and the
+    gazetteer); ``entities`` and ``unified_mentions`` stay the same
+    stage tables, computed only if read. Every other configuration
+    runs co-occurrence over the unified-mentions table.
 
     Model-backed stages swap in behind the same schemas (the
     reference's pluggable-step semantics): ``ner_model_factory``
@@ -115,7 +125,24 @@ def character_graph_pipeline(
     if dynamic_window is not None:
         mentions = cooccur.add_window_ids(mentions, dynamic_window, dynamic_overlap)
         group_col = "window_id"
-    if cooccur_path == "grouped" and group_col is None:
+    one_crossing = (
+        ner_model_factory is None
+        and unifier == "graph_rules"
+        and corefs_df is None
+        and not additional_ner_classes
+        and polarities_df is None
+        and group_col is None
+        and cooccur_path == "grouped"
+    )
+    if one_crossing:
+        edges = cooccur.cooccurrence_edges_grouped(
+            documents_df=docs,
+            gazetteer=gazetteer,
+            dist=dist[0],
+            unit=dist[1],
+            min_appearances=min_appearances,
+        )
+    elif cooccur_path == "grouped" and group_col is None:
         edges = cooccur.cooccurrence_edges_grouped(
             mentions,
             dist=dist[0],

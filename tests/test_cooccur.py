@@ -204,3 +204,90 @@ def test_grouped_path_equals_join_path(spark):
         pol=True,
     )
     assert a == b
+
+
+_FILLER = ["the", "walked", "with", "and", "said", "to", "a", "letter", ","]
+_CAPS = ["London", "The", "Pemberley", "Sunday"]
+
+
+def _random_text(rng, gazetteer, n_sent):
+    sents = []
+    for _ in range(n_sent):
+        words = []
+        for _ in range(rng.randint(1, 14)):
+            r = rng.random()
+            if r < 0.35:
+                words.append(rng.choice(gazetteer))
+            elif r < 0.45:
+                words.append(rng.choice(_CAPS))
+            else:
+                words.append(rng.choice(_FILLER))
+        sents.append(" ".join(words) + rng.choice([".", "!", "?"]))
+    return " ".join(sents)
+
+
+def _random_corpus(spark, rng, gazetteer, n_docs=24):
+    """Narrative documents with the edge shapes mixed in: empty, blank
+    and NULL text, no gazetteer mention, a single sentence."""
+    rows = [
+        ("empty", ""),
+        ("blank", "   "),
+        ("null", None),
+        ("no_mention", "the letter walked to London. said the Sunday!"),
+        ("one_sentence", _random_text(rng, gazetteer, 1)),
+        ("no_terminal", "Elizabeth Bennet said to Mr Darcy and Lizzy"),
+    ]
+    rows += [
+        (f"r{i}", _random_text(rng, gazetteer, rng.randint(1, 12)))
+        for i in range(n_docs)
+    ]
+    return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+def test_one_crossing_equals_composed_and_join_paths(spark):
+    """The documents+gazetteer input of cooccurrence_edges_grouped (rule
+    NER, graph-rules unification and co-occurrence in one crossing)
+    equals the composed operators, grouped and join path, over random
+    corpora, one per min_appearances. The unified mentions are
+    materialized once per corpus, and the (dist, unit) cases' edges
+    are unioned under a case tag so each path is one job."""
+    from functools import reduce
+
+    from renard_spark import pipeline
+    from renard_spark.operators import ner, tokenize, unify
+
+    gaz = pipeline.default_gazetteer()
+    cases = [(d, u) for d in (0, 1, 3) for u in ("sentences", "tokens")]
+
+    def union(dfs):
+        return reduce(lambda a, b: a.unionByName(b), (
+            df.withColumn("doc_id", F.concat(F.lit(f"{c}/"), "doc_id"))
+            for c, df in enumerate(dfs)
+        ))
+
+    n_edges = 0
+    for seed, min_app in ((1000, 0), (1001, 2)):
+        docs = _random_corpus(spark, random.Random(seed), gaz)
+        st = tokenize.sentence_tokens(docs)
+        toks = tokenize.tokens(docs)
+        unified = unify.graph_rules_unify(
+            ner.rule_ner_sentences(st, gaz), min_appearances=min_app
+        ).select("doc_id", "char_id", "start_idx", "end_idx").localCheckpoint()
+        fused = _edges_by_doc(union(
+            cooccur.cooccurrence_edges_grouped(
+                documents_df=docs, gazetteer=gaz, dist=dist, unit=unit,
+                min_appearances=min_app)
+            for dist, unit in cases))
+        grouped = _edges_by_doc(union(
+            cooccur.cooccurrence_edges_grouped(
+                unified, dist, unit, sent_info_df=st)
+            for dist, unit in cases))
+        joins = _edges_by_doc(union(
+            cooccur.cooccurrence_edges(unified, dist, unit, tokens_df=toks)
+            for dist, unit in cases))
+        assert fused == grouped == joins, min_app
+        for c, case in enumerate(cases):
+            for d in ("empty", "blank", "null", "no_mention"):
+                assert f"{c}/{d}" not in fused, case
+        n_edges += sum(len(e) for e in fused.values())
+    assert n_edges > 0

@@ -867,8 +867,8 @@ def test_prefix_jaccard_positional_filter_boundary(spark):
     import itertools
     import re as _re
 
-    # a/b: 10-token sets sharing? constructed so |A∩B|/|A∪B| lands
-    # exactly on t=0.5 (inter=6, union=12 over 9-token overlaps);
+    # a/b: 9-token sets sharing 6 tokens, so |A∩B|/|A∪B| lands
+    # exactly on t=0.5 (inter=6, union=12);
     # c shares only scattered singles with a (well under t);
     # d/e: disjoint tails, one shared rare token late in the prefix.
     docs_rows = [

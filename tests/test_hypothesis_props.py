@@ -94,3 +94,21 @@ def test_unify_partitions_names(names):
     # naive unifier: one char per distinct surface
     naive = unify_naive_doc(mentions)
     assert len(naive) == len(set(names))
+
+
+@given(st.lists(st.sampled_from(
+    ["Elizabeth", "Lizzy", "Eliza", "Jane Bennet", "Mr Bennet", "Mrs Bennet",
+     "Darcy", "Mr Darcy", "Fitzwilliam Darcy", "Charles", "Charlie",
+     "Charles Bingley", "Mr Bingley", "William", "Bill", "Will Collins",
+     "Mr", "Miss", "Dr Ted Gardiner", "Theodore Gardiner"]
+), min_size=1, max_size=10, unique=True), st.integers(0, 2))
+@settings(max_examples=150, deadline=None)
+def test_unify_precomputed_name_rules_equal_general_rules(names, min_app):
+    # the per-name feature path (no extra hypocorisms) must link exactly
+    # the pairs the general hypocorism_related path links; an extra
+    # table no name hits forces the general path
+    mentions = [(n, 5 * i, 5 * i + len(n.split())) for i, n in enumerate(names)]
+    mentions += mentions[: len(mentions) // 2]
+    assert unify_doc(mentions, min_appearances=min_app) == unify_doc(
+        mentions, min_appearances=min_app, extra_hypocorisms={"\0": {"\0"}}
+    )

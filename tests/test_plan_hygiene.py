@@ -29,6 +29,21 @@ def test_rule_ner_sentences_is_shuffle_free(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_default_pipeline_triples_is_one_crossing(spark):
+    """The default configuration reaches triples through ONE Python
+    map over one row per document, with no shuffle."""
+    docs = spark.createDataFrame(
+        corpus.generate_documents_pdf(5), corpus.DOCUMENTS_SCHEMA
+    )
+    plan = _plan(pipeline.character_graph_pipeline(docs)["triples"])
+    assert "Exchange" not in plan
+    python_nodes = [
+        line for line in plan.splitlines()
+        if re.search(r"MapIn(Arrow|Pandas)|InPandas|EvalPython", line)
+    ]
+    assert len(python_nodes) == 1 and "MapInArrow" in python_nodes[0], plan
+
+
 def test_column_pruning_reaches_scan(spark, tmp_path):
     # write a wide table, read two columns → ReadSchema must be pruned
     p = str(tmp_path / "wide")
