@@ -9,11 +9,12 @@
 
 - ``dictionary_ner``: single-token gazetteer tagger (broadcast join).
 
-- ``rule_ner``: capitalized-run detection (gaps-and-islands over the
-  token stream) + broadcast gazetteer join on the run's surface form.
-  The deterministic stand-in for the reference's transformer NER
-  (ner/ner.py:125-308); a model-backed tagger plugs in behind the same
-  output schema via ``model_ner`` (executor-local model singleton).
+- ``rule_ner_sentences``: capitalized-run detection per sentence +
+  gazetteer lookup of the run's surface form, over the compact
+  per-sentence token table. The deterministic stand-in for the
+  reference's transformer NER (ner/ner.py:125-308); a model-backed
+  tagger plugs in behind the same output schema via ``model_ner``
+  (executor-local model singleton).
 
 Output schema (the reference's NEREntity, ner/ner.py:32-49):
     entities(doc_id, start_idx, end_idx, mention_str, tag)
@@ -331,66 +332,20 @@ def gazetteer_runs(
     return out
 
 
-def rule_ner(
-    tokens_df: DataFrame,
-    surface_gazetteer: DataFrame | list[str],
-    tag: str = "PER",
-) -> DataFrame:
-    """Capitalized-run + gazetteer tagger.
-
-    Runs of consecutive capitalized tokens (gaps-and-islands on
-    tok_idx) whose joined surface form appears in the gazetteer become
-    entities. Deterministic replacement for the transformer NER in the
-    pipeline's test path.
-    """
-    spark = tokens_df.sparkSession
-    if isinstance(surface_gazetteer, list):
-        surface_gazetteer = spark.createDataFrame(
-            [(g,) for g in surface_gazetteer], ["surface"]
-        )
-    cap = tokens_df.filter(F.col("token").rlike(CAP_TOKEN_RE))
-    w = Window.partitionBy("doc_id").orderBy("tok_idx")
-    runs = cap.withColumn(
-        "_island", F.col("tok_idx") - F.row_number().over(w)
-    )
-    grouped = runs.groupBy("doc_id", "_island").agg(
-        F.min("tok_idx").alias("start_idx"),
-        (F.max("tok_idx") + 1).alias("end_idx"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("tok_idx", "token"))),
-                lambda s: s["token"],
-            ),
-            " ",
-        ).alias("mention_str"),
-    )
-    return (
-        grouped.join(
-            F.broadcast(surface_gazetteer),
-            grouped["mention_str"] == surface_gazetteer["surface"],
-        )
-        .select(
-            "doc_id",
-            "start_idx",
-            "end_idx",
-            "mention_str",
-            F.lit(tag).alias("tag"),
-        )
-    )
-
-
 def rule_ner_sentences(
     sent_tokens_df: DataFrame,
     surface_gazetteer: list[str] | set[str],
     tag: str = "PER",
 ) -> DataFrame:
-    """Zero-shuffle variant of ``rule_ner`` over the compact
-    per-sentence form (doc_id, sent_idx, sent_start, toks).
+    """Capitalized-run + gazetteer tagger over the compact per-sentence
+    form (doc_id, sent_idx, sent_start, toks), zero shuffles.
 
-    Capitalized runs never cross sentence boundaries (the terminal
-    punctuation token breaks them), so run detection is sentence-local:
-    one Arrow-batched mapInPandas, gazetteer broadcast in the closure.
-    Output identical to rule_ner (property-tested)."""
+    Maximal runs of capitalized tokens whose joined surface form is in
+    the gazetteer become entities. Runs never cross sentence boundaries
+    (the terminal punctuation token breaks them), so run detection is
+    sentence-local: one Arrow-batched mapInPandas, gazetteer broadcast
+    in the closure. Checked against a sequential whole-document oracle
+    (``tests/oracle.py:rule_ner_oracle``)."""
     import pandas as pd
 
     gaz = set(surface_gazetteer)

@@ -4,9 +4,11 @@ Replaces the reference's NLTKTokenizer (punkt + destructive word
 tokenizer, /root/reference/renard/pipeline/tokenization.py:35-85) with a
 deterministic regex tokenizer expressed entirely in built-in Spark SQL
 functions: ``split`` (sentence boundaries), ``regexp_extract_all``
-(tokens), ``posexplode`` + one per-doc window for global token indices.
-Whole-stage codegen end to end; the only shuffle is the per-doc window
-(hash-partition by doc_id), which every downstream stage reuses.
+(tokens), an ordered array fold for global token indices and
+``posexplode``. Whole-stage codegen end to end and zero shuffles: the
+compact per-sentence table (``sentence_tokens``) is the stored token
+stage, and the one-row-per-token table (``tokens_from_sentences``) is
+one posexplode of it.
 
 The char-offset variant (needed to convert char-addressed dynamic
 blocks into token space, ref utils.py:120-134 charbb2tokenbb) is a
@@ -79,46 +81,12 @@ def _sentence_offsets(sent_toks: Column) -> Column:
     )
 
 
-def tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Token table: (doc_id, sent_idx, tok_idx, tok_in_sent, token).
-
-    tok_idx is the document-global token index (the reference's flat
-    ``tokens`` list position, core.py:165-166). Computed entirely with
-    array higher-order functions — per-sentence offsets come from one
-    ordered fold over the sentence array, so the whole tokenizer is
-    NARROW (zero shuffles): at 10^12 docs the token table needs no
-    exchange at all until an operator actually groups it.
-    """
-    sent_toks = sentence_token_arrays(text_col)
-    offs = _sentence_offsets(sent_toks)
-    per_sent = df.select(
-        "doc_id",
-        F.posexplode(F.arrays_zip(sent_toks, offs)).alias("sent_idx", "_z"),
-    ).select(
-        "doc_id",
-        "sent_idx",
-        F.col("_z.0").alias("_toks"),
-        F.col("_z.1").alias("_off"),
-    )
-    return per_sent.select(
-        "doc_id",
-        "sent_idx",
-        "_off",
-        F.posexplode("_toks").alias("tok_in_sent", "token"),
-    ).select(
-        "doc_id",
-        "sent_idx",
-        (F.col("_off") + F.col("tok_in_sent")).cast("int").alias("tok_idx"),
-        "tok_in_sent",
-        "token",
-    )
-
-
 def sentence_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Compact per-sentence form: (doc_id, sent_idx, sent_start,
-    sent_end, toks array<string>) — fully narrow (zero shuffles), the
-    preferred upstream for sentence-scoped operators. sent_start/end
-    are global token indices (end exclusive)."""
+    sent_end, toks array<string>) — the stored token stage, fully
+    narrow (zero shuffles). sent_start/end are global token indices
+    (end exclusive); per-sentence offsets come from one ordered fold
+    over the sentence array."""
     sent_toks = sentence_token_arrays(text_col)
     offs = _sentence_offsets(sent_toks)
     return df.select(
@@ -131,6 +99,35 @@ def sentence_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
         (F.col("_z.1") + F.size("_z.0")).cast("int").alias("sent_end"),
         F.col("_z.0").alias("toks"),
     )
+
+
+def tokens_from_sentences(sent_tokens_df: DataFrame) -> DataFrame:
+    """Token table: (doc_id, sent_idx, tok_idx, tok_in_sent, token) —
+    one narrow posexplode of the compact per-sentence form, for the
+    operators that read one row per token.
+
+    tok_idx is the document-global token index (the reference's flat
+    ``tokens`` list position, core.py:165-166).
+    """
+    return sent_tokens_df.select(
+        "doc_id",
+        "sent_idx",
+        "sent_start",
+        F.posexplode("toks").alias("tok_in_sent", "token"),
+    ).select(
+        "doc_id",
+        "sent_idx",
+        (F.col("sent_start") + F.col("tok_in_sent")).cast("int").alias("tok_idx"),
+        "tok_in_sent",
+        "token",
+    )
+
+
+def tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Token table of a documents table: ``tokens_from_sentences`` over
+    ``sentence_tokens`` — zero shuffles, so at 10^12 docs the token
+    table needs no exchange until an operator actually groups it."""
+    return tokens_from_sentences(sentence_tokens(df, text_col))
 
 
 def doc_tokens(tokens_df: DataFrame) -> DataFrame:
@@ -237,16 +234,12 @@ def span_tokens(df: DataFrame) -> DataFrame:
             F.filter("spans", lambda s: s["kind"] == F.lit("text"))
         ).alias("span_ord", "_s"),
     ).select("doc_id", "span_ord", F.col("_s.text").alias("_t"))
-    pieces = F.filter(
-        F.split(F.col("_t"), SENT_SPLIT_RE), lambda s: F.trim(s) != ""
-    )
-    sent_toks = F.transform(
-        pieces, lambda s: F.regexp_extract_all(s, F.lit(TOKEN_RE), 0)
-    )
     # within-span sentence start offsets: the same ordered fold as
-    # tokens(), materialized into _fold once per span so it doesn't
-    # re-run per referencing expression
-    per_span = spans.withColumn("_st", sent_toks).withColumn("_fold", F.aggregate(
+    # sentence_tokens(), materialized into _fold once per span so it
+    # doesn't re-run per referencing expression
+    per_span = spans.withColumn(
+        "_st", sentence_token_arrays("_t")
+    ).withColumn("_fold", F.aggregate(
         F.col("_st"),
         F.struct(
             F.lit(0).alias("total"),
@@ -272,7 +265,7 @@ def span_tokens(df: DataFrame) -> DataFrame:
     per_span = per_span.withColumn(
         "_soff", F.coalesce(F.sum("_nsent").over(wp), F.lit(0))
     ).withColumn("_toff", F.coalesce(F.sum("_ntok").over(wp), F.lit(0)))
-    per_sent = per_span.select(
+    return tokens_from_sentences(per_span.select(
         "doc_id",
         "_toff",
         "_soff",
@@ -280,18 +273,6 @@ def span_tokens(df: DataFrame) -> DataFrame:
     ).select(
         "doc_id",
         (F.col("_soff") + F.col("_i")).cast("int").alias("sent_idx"),
-        (F.col("_toff") + F.col("_z._offs")).alias("_off"),
-        F.col("_z._st").alias("_toks"),
-    )
-    return per_sent.select(
-        "doc_id",
-        "sent_idx",
-        "_off",
-        F.posexplode("_toks").alias("tok_in_sent", "token"),
-    ).select(
-        "doc_id",
-        "sent_idx",
-        (F.col("_off") + F.col("tok_in_sent")).cast("int").alias("tok_idx"),
-        "tok_in_sent",
-        "token",
-    )
+        (F.col("_toff") + F.col("_z._offs")).alias("sent_start"),
+        F.col("_z._st").alias("toks"),
+    ))

@@ -1,13 +1,19 @@
-"""Stage registry: dataflow validation, checkpointed materialization,
-resume, per-partition metrics.
+"""Stage registry and the materializing executor: dataflow validation,
+checkpointed materialization, resume, per-partition metrics.
 
-The Spark analog of the reference's pipeline framework:
+A ``Stage`` is (name, needs, fn, config). The narrative DAG is one
+ordered list of them (``pipeline.narrative_stages``) with two
+executors: the lazy composer behind the pipeline facades
+(``pipeline.compose``) and ``StageRunner`` here, the analog of the
+reference's pipeline framework:
 - ``check_valid`` — needs/production dataflow check before running
   (reference core.py:643-693), here against the set of materialized /
   to-be-produced table names;
 - stage boundary = a persisted catalog table + a manifest entry with a
   config hash (reference ``rerun_from``, core.py:737-780: the engine
   resumes from the last stage whose manifest entry is still valid);
+  ``config`` holds every parameter the stage fn reads, so changing one
+  recomputes the stage and everything downstream;
 - per-partition metrics (north_rule): after each materialization, a
   metrics table rows (stage, partition_id, rows, docs, wall_ms) is
   appended, computed on the *written* table so it reflects the real
@@ -155,7 +161,6 @@ class StageRunner:
             invalidated = True
             deps = [out[n] if n in out else self._resolve(n) for n in st.needs]
             t0 = time.perf_counter()
-            # config is hash-only metadata; stage fns close over params
             df = st.fn(self.spark, *deps)
             # bucketed-by-doc layout (Iceberg bucket(doc_id) analog):
             # downstream per-doc stages co-locate on read
@@ -180,13 +185,3 @@ class StageRunner:
     def metrics(self) -> DataFrame:
         return self.catalog.read(self.METRICS_TABLE)
 
-
-def salted_repartition(df: DataFrame, key: str, num_partitions: int,
-                       salt_buckets: int = 8) -> DataFrame:
-    """Explicit skew taming (north_rule): spread hot keys over
-    ``salt_buckets`` partitions for map-side stages. Use before heavy
-    narrow transforms keyed by doc when a few giant documents dominate;
-    aggregations must re-shuffle on the bare key afterwards."""
-    return df.withColumn(
-        "_salt", (F.rand(seed=7) * salt_buckets).cast("int")
-    ).repartition(num_partitions, F.col(key), F.col("_salt")).drop("_salt")

@@ -1,5 +1,10 @@
-"""Production entrypoint: the full narrative-KG pipeline as
+"""Production entrypoint: the narrative DAG of ``pipeline`` run as
 checkpoint-resumable stages.
+
+``build_runner`` only chooses which stages of
+``pipeline.narrative_stages`` run and into which catalog; the stage
+list is the same one the lazy pipeline facades compose, and
+``plans.stage.StageRunner`` is its materializing executor.
 
 Deployment shape (north_rule): ``spark-submit --py-files renard_spark.zip
 -m renard_spark.run`` on a multi-executor cluster; in the sandbox it
@@ -19,24 +24,19 @@ from __future__ import annotations
 import argparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from renard_spark import corpus
+from renard_spark import corpus, pipeline
 from renard_spark.io.catalog import get_catalog
-from renard_spark.operators import (
-    conversation,
-    cooccur,
-    coref,
-    linking,
-    ner,
-    quotes,
-    sentiment,
-    tokenize,
-    triples,
-    unify,
-)
 from renard_spark.plans.stage import StageRunner
 from renard_spark.sources import ingest
+
+# the production stage set: rule coref chains, lexicon polarities on
+# the edges, conversation edges at sentence distance 1
+KG_STAGES = ("documents", "lineage", "sentence_tokens", "entities", "corefs",
+             "unified_mentions", "characters", "polarities", "edges",
+             "triples")
+MEDIA_STAGES = ("token_offsets", "media_links")
+SPEECH_STAGES = ("quotes", "speakers", "conversation_edges", "mention_edges")
 
 
 def build_runner(
@@ -52,94 +52,24 @@ def build_runner(
     link_prior_weight: float = 0.4,
     kb_version: str = "v0",
 ) -> StageRunner:
-    from renard_spark.pipeline import default_gazetteer
-
-    gaz = gazetteer or default_gazetteer()
-    catalog = get_catalog(spark, workdir)
-    r = StageRunner(spark, catalog, inputs={"documents_raw": documents_df})
-
-    r.add("documents", ["documents_raw"],
-          lambda s, d: ingest.normalize_documents(d))
-    r.add("lineage", ["documents"], lambda s, d: ingest.span_lineage(d))
-    r.add("tokens", ["documents"], lambda s, d: tokenize.tokens(d))
-    r.add("entities", ["tokens"], lambda s, t: ner.rule_ner(t, gaz))
-    r.add("corefs", ["tokens", "entities"],
-          lambda s, t, e: coref.rule_corefs(t, e))
-    r.add(
-        "unified_mentions", ["entities", "corefs"],
-        lambda s, e, c: unify.graph_rules_unify(
-            e, c, min_appearances=min_appearances
-        ),
-        config={"min_appearances": min_appearances},
-    )
-    r.add("characters", ["unified_mentions"],
-          lambda s, u: unify.characters_table(u))
-    r.add("polarities", ["tokens"],
-          lambda s, t: sentiment.sentence_polarities(t))
-    r.add(
-        "edges", ["unified_mentions", "tokens", "polarities"],
-        lambda s, u, t, p: cooccur.cooccurrence_edges(
-            u.select("doc_id", "char_id", "start_idx", "end_idx"),
-            dist=dist[0], unit=dist[1], tokens_df=t, polarities_df=p,
-        ),
-        config={"dist": list(dist)},
-    )
-    r.add("triples", ["edges"],
-          lambda s, e: triples.edges_to_triples(e))
+    inputs = {"documents_raw": documents_df}
+    names = list(KG_STAGES)
     if kb_df is not None:
-        # KB entity linking as a first-class stage: every alias-
-        # matching token links to its best KB entity (NIL on ties).
-        # The stage table is keyed by (prior_weight, kb_version) —
-        # bump kb_version when the KB contents change, or the
-        # checkpointed links are (correctly) reused.
-        r.inputs["kb"] = kb_df
-        r.add(
-            "entity_links", ["tokens", "kb"],
-            lambda s, t, kb: linking.link_entities(
-                t, kb, prior_weight=link_prior_weight
-            ),
-            config={
-                "prior_weight": link_prior_weight,
-                "kb_version": kb_version,
-            },
-        )
+        # KB entity linking: every alias-matching token links to its
+        # best KB entity (NIL on ties)
+        inputs["kb"] = kb_df
+        names.append("entity_links")
     if with_media:
-        # media grounding: interleaved media spans → nearest unified
-        # mention by char offset (KG edges character-[appears_near]->
-        # media_ref). Mention char positions come from the Arrow
-        # offset tokenizer joined back on the token index.
-        r.add("token_offsets", ["documents"],
-              lambda s, d: tokenize.tokens_with_offsets(d))
-        r.add(
-            "media_links", ["documents", "unified_mentions",
-                            "token_offsets"],
-            lambda s, d, u, to: linking.link_media_to_mentions(
-                ingest.media_spans(d),
-                u.join(
-                    to.select(
-                        "doc_id",
-                        F.col("tok_idx").alias("start_idx"),
-                        "char_start",
-                    ),
-                    ["doc_id", "start_idx"],
-                ).select(
-                    "doc_id", "char_start",
-                    F.col("char_id").alias("character"),
-                ),
-            ),
-        )
+        names += MEDIA_STAGES
     if with_speech:
-        r.add("quotes", ["tokens"], lambda s, t: quotes.detect_quotes(t))
-        r.add("speakers", ["quotes", "unified_mentions"],
-              lambda s, q, u: quotes.attribute_speakers(q, u))
-        r.add(
-            "conversation_edges", ["speakers", "tokens"],
-            lambda s, sp, t: conversation.conversation_edges(
-                sp, dist=1, unit="sentences", tokens_df=t
-            ),
-        )
-        r.add("mention_edges", ["speakers", "unified_mentions"],
-              lambda s, sp, u: conversation.mention_graph_edges(sp, u))
+        names += SPEECH_STAGES
+    stages = pipeline.narrative_stages(
+        gazetteer, dist, min_appearances=min_appearances, corefs="rules",
+        polarities="lexicon", conversation_dist=(1, "sentences"),
+        link_prior_weight=link_prior_weight, kb_version=kb_version,
+    )
+    r = StageRunner(spark, get_catalog(spark, workdir), inputs=inputs)
+    r.stages = pipeline.upstream(stages, names)
     return r
 
 

@@ -13,20 +13,39 @@ import os
 from pyspark.sql import SparkSession
 
 
+def machine_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """$RENARD_SPARK_DRIVER_MEM, else a quarter of physical memory: a
+    heap larger than the machine lets G1 grow it with garbage until the
+    kernel kills the JVM, one sized to it makes it collect instead."""
+    mem = os.environ.get("RENARD_SPARK_DRIVER_MEM")
+    if mem:
+        return mem
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return f"{kb // 4 // 1024}m"
+
+
 def get_spark(
     app_name: str = "renard_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession.
+    """Build (or reuse) a SparkSession sized to the machine
+    (``machine_cpus``, ``driver_memory``).
 
-    cpus defaults to $SPARK_GRAFT_CPUS or 32 (the sandbox); on a real
-    cluster the master/em resource configs come from spark-submit and the
-    ``local[n]`` master here is ignored.
+    On a real cluster the master/em resource configs come from
+    spark-submit and the ``local[n]`` master here is ignored.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = machine_cpus()
     if shuffle_partitions is None:
         # at least one shuffle partition per core; more would help skew
         # but local mode pays per-task overhead.
@@ -44,7 +63,7 @@ def get_spark(
         # for long documents; the UDFs micro-batch internally anyway.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("RENARD_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # let the planner pick shuffled-hash join when its size

@@ -47,8 +47,9 @@ def test_cc_random_graphs(spark):
 
 def test_scale_path_matches_parity_path(spark):
     docs = ingest.normalize_documents(corpus.generate_documents(spark, 30, seed=51))
-    toks = tokenize.tokens(docs)
-    ents = ner.rule_ner(toks, pipeline.default_gazetteer())
+    ents = ner.rule_ner_sentences(
+        tokenize.sentence_tokens(docs), pipeline.default_gazetteer()
+    )
 
     parity = unify.graph_rules_unify(ents)
     scale = unify_distributed(ents)

@@ -73,8 +73,9 @@ def test_global_scope_unification_matches_pooled_parity(spark):
     entity table; must equal the pure-python unify_doc run on the
     POOLED mention set (the shape per-doc execution cannot handle)."""
     docs = ingest.normalize_documents(corpus.generate_documents(spark, 25, seed=23))
-    toks = tokenize.tokens(docs)
-    ents = ner.rule_ner(toks, pipeline.default_gazetteer())
+    ents = ner.rule_ner_sentences(
+        tokenize.sentence_tokens(docs), pipeline.default_gazetteer()
+    )
 
     g = ents.withColumn("corpus", F.lit("all"))
     scale = unify_distributed(g, scope_col="corpus")

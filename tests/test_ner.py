@@ -1,5 +1,6 @@
 """NER stage tests: BIO decode (window formulation vs sequential
-oracle, incl. the reference's quirks) and rule NER parity."""
+oracle, incl. the reference's quirks) and rule NER vs its sequential
+oracle."""
 
 import random
 
@@ -61,36 +62,28 @@ def test_bio_decode_reference_quirks(spark):
 
 
 def test_rule_ner_matches_oracle(spark):
-    docs_pdf = corpus.generate_documents_pdf(10, seed=21)
-    docs = ingest.normalize_documents(
-        spark.createDataFrame(docs_pdf, schema=corpus.DOCUMENTS_SCHEMA)
-    )
-    toks = tokenize.tokens(docs)
     gaz = pipeline.default_gazetteer()
-    got = _decode_rows(ner.rule_ner(toks, gaz))
-
-    tok_rows = toks.orderBy("doc_id", "tok_idx").collect()
-    by_doc = {}
-    for r in tok_rows:
-        by_doc.setdefault(r.doc_id, []).append(r.token)
-    n_docs_with_entities = 0
-    for doc_id, tokens in by_doc.items():
-        want = sorted(
-            (s, e, "PER", surf)
-            for s, e, surf in rule_ner_oracle(tokens, set(gaz))
+    for n_docs, seed in ((10, 21), (15, 61)):
+        docs_pdf = corpus.generate_documents_pdf(n_docs, seed=seed)
+        docs = ingest.normalize_documents(
+            spark.createDataFrame(docs_pdf, schema=corpus.DOCUMENTS_SCHEMA)
         )
-        assert got.get(doc_id, []) == want, doc_id
-        if want:
-            n_docs_with_entities += 1
-    assert n_docs_with_entities >= 8  # corpus really exercises NER
+        got = _decode_rows(
+            ner.rule_ner_sentences(tokenize.sentence_tokens(docs), gaz)
+        )
 
-
-def test_rule_ner_sentences_equals_exploded(spark):
-    docs_pdf = corpus.generate_documents_pdf(15, seed=61)
-    docs = ingest.normalize_documents(
-        spark.createDataFrame(docs_pdf, schema=corpus.DOCUMENTS_SCHEMA)
-    )
-    gaz = pipeline.default_gazetteer()
-    a = _decode_rows(ner.rule_ner(tokenize.tokens(docs), gaz))
-    b = _decode_rows(ner.rule_ner_sentences(tokenize.sentence_tokens(docs), gaz))
-    assert a == b and len(a) > 0
+        tok_rows = tokenize.tokens(docs).orderBy("doc_id", "tok_idx").collect()
+        by_doc = {}
+        for r in tok_rows:
+            by_doc.setdefault(r.doc_id, []).append(r.token)
+        n_docs_with_entities = 0
+        for doc_id, tokens in by_doc.items():
+            want = sorted(
+                (s, e, "PER", surf)
+                for s, e, surf in rule_ner_oracle(tokens, set(gaz))
+            )
+            assert got.get(doc_id, []) == want, (seed, doc_id)
+            if want:
+                n_docs_with_entities += 1
+        # corpus really exercises NER
+        assert n_docs_with_entities >= 8, seed

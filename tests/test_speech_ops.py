@@ -27,6 +27,23 @@ def _tokens_from_words(spark, docs: dict[str, list[str]], sent_len=1000):
     )
 
 
+def _rule_ner_from_words(spark, docs: dict[str, list[str]], gazetteer,
+                         sent_len=1000):
+    """rule_ner_sentences over the compact per-sentence form of the
+    same sentences as _tokens_from_words(docs, sent_len)."""
+    rows = []
+    for doc_id, words in docs.items():
+        for k, s0 in enumerate(range(0, len(words), sent_len)):
+            sent = words[s0:s0 + sent_len]
+            rows.append((doc_id, k, s0, s0 + len(sent), sent))
+    st = spark.createDataFrame(
+        rows,
+        "doc_id string, sent_idx int, sent_start int, sent_end int,"
+        " toks array<string>",
+    )
+    return ner.rule_ner_sentences(st, gazetteer)
+
+
 def test_quote_detection_exact(spark):
     words = 'He said " You must come " and left .'.split()
     toks = _tokens_from_words(spark, {"d": words})
@@ -53,7 +70,7 @@ def test_speaker_attribution_said_pattern(spark):
     words = '" Pray tell " said Elizabeth . " Never " replied Darcy .'.split()
     toks = _tokens_from_words(spark, {"d": words})
     q = quotes.detect_quotes(toks)
-    ents = ner.rule_ner(toks, ["Elizabeth", "Darcy"])
+    ents = _rule_ner_from_words(spark, {"d": words}, ["Elizabeth", "Darcy"])
     unified = unify.naive_unify(ents)
     sp = quotes.attribute_speakers(q, unified).collect()
     by_q = {r.quote_id: r.speaker_char_id for r in sp}
@@ -120,7 +137,7 @@ def test_sentence_polarities_match_python(spark):
 def test_rule_corefs(spark):
     words = "Elizabeth was here . She smiled . Darcy saw her .".split()
     toks = _tokens_from_words(spark, {"d": words})
-    ents = ner.rule_ner(toks, ["Elizabeth", "Darcy"])
+    ents = _rule_ner_from_words(spark, {"d": words}, ["Elizabeth", "Darcy"])
     chains = coref.rule_corefs(toks, ents).collect()
     by_chain = {}
     for r in chains:
@@ -136,7 +153,9 @@ def test_rule_corefs(spark):
 def test_pattern_relations_and_resolution(spark):
     words = "Elizabeth wrote to Darcy . Lizzy danced with Darcy .".split()
     toks = _tokens_from_words(spark, {"d": words}, sent_len=5)
-    ents = ner.rule_ner(toks, ["Elizabeth", "Darcy", "Lizzy"])
+    ents = _rule_ner_from_words(
+        spark, {"d": words}, ["Elizabeth", "Darcy", "Lizzy"], sent_len=5
+    )
     unified = unify.graph_rules_unify(ents)
     raw = relations.pattern_relations(unified, toks)
     got_raw = {(r.raw_subj, r.rel, r.raw_obj) for r in raw.collect()}

@@ -34,7 +34,8 @@ def test_full_runner_and_resume(spark, tmp_path):
     runner3.run(rerun_from="unified_mentions")
     with open(os.path.join(wd, "_manifest.json")) as f:
         m3 = json.load(f)
-    assert m3["tokens"]["finished_at"] == m1["tokens"]["finished_at"]
+    assert (m3["sentence_tokens"]["finished_at"]
+            == m1["sentence_tokens"]["finished_at"])
     assert m3["unified_mentions"]["finished_at"] > m1["unified_mentions"]["finished_at"]
     assert m3["triples"]["finished_at"] > m1["triples"]["finished_at"]
 
@@ -48,7 +49,92 @@ def test_full_runner_and_resume(spark, tmp_path):
 
     # metrics table: one row-set per stage materialization
     stages = {r.stage for r in runner.metrics().collect()}
-    assert {"tokens", "entities", "unified_mentions", "edges", "triples"} <= stages
+    assert {"sentence_tokens", "entities", "unified_mentions", "edges",
+            "triples"} <= stages
+
+
+def _rows(df) -> list[str]:
+    """Order-insensitive, exact comparison form of a table."""
+    return sorted(
+        repr(sorted(r.asDict(recursive=True).items())) for r in df.collect()
+    )
+
+
+@pytest.fixture(scope="module")
+def full_run(spark, tmp_path_factory):
+    """Every production stage over a small corpus, materialized once."""
+    docs = corpus.generate_documents(spark, 12, seed=4)
+    runner = build_runner(
+        spark, docs, str(tmp_path_factory.mktemp("full_kg") / "kg")
+    )
+    return docs, runner, runner.run()
+
+
+def test_runner_edges_equal_join_path_wiring(spark, full_run):
+    """The production edges (grouped co-occurrence over the sentence
+    tokens, narrow polarities) and triples equal the join-path wiring
+    over the runner's own unified mentions: ``cooccurrence_edges`` with
+    the exploded tokens and the join-based sentence polarities."""
+    from renard_spark.operators import cooccur, sentiment, tokenize, triples
+    from renard_spark.sources import ingest
+
+    docs, _, out = full_run
+    toks = tokenize.tokens(ingest.normalize_documents(docs))
+    edges = cooccur.cooccurrence_edges(
+        out["unified_mentions"].select(
+            "doc_id", "char_id", "start_idx", "end_idx"
+        ),
+        dist=1, unit="sentences", tokens_df=toks,
+        polarities_df=sentiment.sentence_polarities(toks),
+    )
+
+    def assert_same(got, want, key):
+        got, want = (
+            {tuple(r[c] for c in key): r for r in df.collect()}
+            for df in (got, want)
+        )
+        assert got.keys() == want.keys() and len(got) > 0
+        for k, r in got.items():
+            assert r.weight == want[k].weight, k
+            # polarity sums add in a different order on the two paths
+            assert abs(r.polarity - want[k].polarity) < 1e-9, k
+
+    assert_same(out["edges"], edges, ("doc_id", "src", "dst"))
+    assert_same(out["triples"], triples.edges_to_triples(edges),
+                ("doc_id", "subj", "pred", "obj"))
+
+
+def test_materialized_stages_equal_lazy_composer(spark, full_run):
+    """Every stage table the runner materializes equals the lazy
+    composer's table of the same stage list."""
+    from renard_spark import pipeline
+
+    _, runner, out = full_run
+    lazy = pipeline.compose(runner.stages, runner.inputs, persist=False)
+    names = [st.name for st in runner.stages]
+    assert {"sentence_tokens", "polarities", "edges", "media_links",
+            "conversation_edges"} <= set(names)
+    for name in names:
+        assert _rows(out[name]) == _rows(lazy[name]), name
+
+
+def test_gazetteer_change_recomputes_stages(spark, tmp_path):
+    """A rerun on the same workdir with another gazetteer returns what
+    a fresh workdir returns, not the checkpointed tables."""
+    from renard_spark import pipeline
+
+    docs = corpus.generate_documents(spark, 20, seed=4)
+    gaz = pipeline.default_gazetteer()
+    quarter = gaz[: len(gaz) // 4]
+    kw = dict(with_speech=False, with_media=False)
+    wd = str(tmp_path / "kg")
+    build_runner(spark, docs, wd, gazetteer=gaz, **kw).run()
+    rerun = build_runner(spark, docs, wd, gazetteer=quarter, **kw).run()
+    fresh = build_runner(
+        spark, docs, str(tmp_path / "fresh"), gazetteer=quarter, **kw
+    ).run()
+    for name in ("entities", "unified_mentions", "edges", "triples"):
+        assert _rows(rerun[name]) == _rows(fresh[name]), name
 
 
 def test_media_links_stage_matches_bruteforce(spark, tmp_path):
@@ -126,7 +212,8 @@ def test_kb_linking_stage_matches_inline(spark, tmp_path):
     runner2.run()
     m2 = json.load(open(os.path.join(wd, "_manifest.json")))
     assert m2["entity_links"]["config_hash"] != m1["entity_links"]["config_hash"]
-    assert m2["tokens"]["finished_at"] == m1["tokens"]["finished_at"]
+    assert (m2["sentence_tokens"]["finished_at"]
+            == m1["sentence_tokens"]["finished_at"])
 
 
 def test_check_valid_rejects_missing_dep(spark, tmp_path):
