@@ -412,10 +412,14 @@ def cooccurrence_edges_grouped(
       ``mapInPandas`` call per Arrow batch (trailing doc carried across
       batch boundaries) — per-document Python-call overhead, the scale
       killer of a per-group cogroup at 10^12 docs, never happens;
-    * ``documents_df`` (doc_id, text) with a ``gazetteer``: the
-      one-crossing path. Each document's sentence tokens are computed
-      JVM-side by the tokenizer expression and cross into Python ONCE,
-      one row per document, through ``mapInArrow``; there rule NER
+    * ``documents_df`` (doc_id, spans) — the ``documents`` stage — or a
+      flat (doc_id, text) table, which goes through the single text
+      span ``ingest.normalize_documents`` builds, with a ``gazetteer``:
+      the one-crossing path. The JVM only reads the stored spans; they
+      cross into Python ONCE, one row per document, through
+      ``mapInArrow``. There each document's text spans are joined
+      (``ingest.join_text_spans``) and tokenized
+      (``tokenize.sentence_tokens_py``), then rule NER
       (``ner.gazetteer_runs``), graph-rules unification
       (``unify_core.unify_doc`` with ``min_appearances``) and
       ``doc_edges`` run back to back. No shuffle: a document is one
@@ -532,39 +536,35 @@ def _one_crossing_edges(
 ) -> DataFrame:
     """documents → edges in one ``mapInArrow`` over one row per
     document (see ``cooccurrence_edges_grouped``)."""
-    from renard_spark.operators.tokenize import sentence_token_arrays
+    from renard_spark.sources import ingest
 
     if unit not in ("tokens", "sentences"):
         raise ValueError(f"unknown unit: {unit}")
+    if "spans" not in documents_df.columns:
+        documents_df = ingest.normalize_documents(documents_df)
 
     def run(batches):
         import pyarrow as pa
 
         from renard_spark.operators.ner import gazetteer_runs
+        from renard_spark.operators.tokenize import sentence_tokens_py
         from renard_spark.operators.unify_core import unify_doc
+        from renard_spark.sources.ingest import join_text_spans
 
         for batch in batches:
             doc_ids = batch.column(0).to_pylist()
-            sents = batch.column(1)
-            valid = sents.is_valid().to_pylist() if sents.null_count else None
-            # offsets index the child arrays: sentences of document d are
-            # [doc_off[d], doc_off[d+1]), tokens of sentence k are
-            # toks[tok_off[k]:tok_off[k+1]]. Token positions stay
-            # batch-global: edges depend only on positions relative to
-            # the document's own mentions and sentences.
-            doc_off = sents.offsets.to_pylist()
-            tok_off = sents.values.offsets.to_pylist()
-            toks = sents.values.values.to_pylist()
+            texts = join_text_spans(batch.column(1)).to_pylist()
             out_doc, out_src, out_dst, out_w = [], [], [], []
-            for d, doc_id in enumerate(doc_ids):
-                if valid is not None and not valid[d]:
+            for doc_id, text in zip(doc_ids, texts):
+                if not text:
                     continue
-                first, stop = doc_off[d], doc_off[d + 1]
-                mentions = []
-                for k in range(first, stop):
-                    mentions += gazetteer_runs(
-                        toks[tok_off[k]:tok_off[k + 1]], gazetteer, tok_off[k]
-                    )
+                mentions, sent_start, sent_end = [], [], []
+                n = 0
+                for toks in sentence_tokens_py(text):
+                    mentions += gazetteer_runs(toks, gazetteer, n)
+                    sent_start.append(n)
+                    n += len(toks)
+                    sent_end.append(n)
                 if not mentions:
                     continue
                 ms = sorted(
@@ -574,10 +574,8 @@ def _one_crossing_edges(
                      for _, s, e in c["mentions"]),
                     key=lambda m: (m[1], m[2], m[0]),
                 )
-                edges = doc_edges(
-                    ms, dist, unit, tok_off[first:stop], tok_off[first + 1:stop + 1]
-                )
-                for src, dst, w in edges:
+                for src, dst, w in doc_edges(ms, dist, unit, sent_start,
+                                             sent_end):
                     out_doc.append(doc_id)
                     out_src.append(src)
                     out_dst.append(dst)
@@ -591,9 +589,9 @@ def _one_crossing_edges(
                     names=["doc_id", "src", "dst", "weight"],
                 )
 
-    return documents_df.select(
-        "doc_id", sentence_token_arrays().alias("sents")
-    ).mapInArrow(run, schema=EDGES_SCHEMA)
+    return documents_df.select("doc_id", "spans").mapInArrow(
+        run, schema=EDGES_SCHEMA
+    )
 
 
 def add_window_ids(

@@ -1,18 +1,27 @@
-"""Tokenization stage — sentence split + word tokenize, JVM-side.
+r"""Tokenization stage — sentence split + word tokenize.
 
 Replaces the reference's NLTKTokenizer (punkt + destructive word
 tokenizer, /root/reference/renard/pipeline/tokenization.py:35-85) with a
-deterministic regex tokenizer expressed entirely in built-in Spark SQL
-functions: ``split`` (sentence boundaries), ``regexp_extract_all``
-(tokens), an ordered array fold for global token indices and
-``posexplode``. Whole-stage codegen end to end and zero shuffles: the
-compact per-sentence table (``sentence_tokens``) is the stored token
-stage, and the one-row-per-token table (``tokens_from_sentences``) is
-one posexplode of it.
+deterministic regex tokenizer, written in two dialects that give the
+same sentences and tokens on every text:
 
-The char-offset variant (needed to convert char-addressed dynamic
-blocks into token space, ref utils.py:120-134 charbb2tokenbb) is a
-separate Arrow-batched UDF used only when blocks are given in chars.
+* JVM (``sentence_token_arrays``): built-in Spark SQL functions only —
+  ``split`` (sentence boundaries), ``regexp_extract_all`` (tokens), an
+  ordered array fold for global token indices and ``posexplode``. Zero
+  shuffles: the compact per-sentence table (``sentence_tokens``) is the
+  stored token stage, and the one-row-per-token table
+  (``tokens_from_sentences``) is one posexplode of it.
+* Python (``sentence_tokens_py``, ``tokenize_text_py``): the same
+  patterns in Python's ``re`` with Java's semantics spelled out. Java's
+  ``\s`` is the six ASCII whitespace characters ``[ \t\n\x0b\f\r]``
+  (Python's is Unicode-wide), and Spark's ``trim`` strips spaces only.
+  It serves the one-crossing co-occurrence path
+  (``cooccur.cooccurrence_edges_grouped``) and the char-offset
+  tokenizer (``tokens_with_offsets``, needed to convert char-addressed
+  blocks into token space, ref utils.py:120-134 charbb2tokenbb).
+
+``tests/test_tokenize.py::test_python_tokenizer_equals_jvm`` pins the
+two dialects equal over seeded adversarial texts.
 
 Invariant mirrored from the reference tests
 (tests/test_tokenization.py:20-26): tokens == flatten(sentences).
@@ -32,31 +41,23 @@ from pyspark.sql import functions as F
 # "Jos"+"é") — required for the reference's lang="fra" support.
 # RE2-compatible (no lookaround) so the DuckDB oracle can run the same
 # pattern via regexp_extract_all; Python's `re` lacks \p{} classes, so
-# the driver-side twin uses TOKEN_RE_PY (\w is unicode in Python) —
-# tri-engine equality is pinned by test_token_re_dialects_agree.
+# the Python twin uses TOKEN_RE_PY (Python's \w is exactly
+# [\p{L}\p{N}_]) — tri-engine equality is pinned by
+# test_token_re_dialects_agree.
 TOKEN_RE = r"[\p{L}\p{N}_']+|[^\p{L}\p{N}_'\s]"
-TOKEN_RE_PY = r"[\w']+|[^\w'\s]"
 # sentence boundary: after terminal punctuation, before whitespace.
-# Java-regex lookbehind (Spark side); test-oracle replicates in pandas.
+# Java-regex lookbehind (Spark side).
 SENT_SPLIT_RE = r"(?<=[.!?])\s+"
-
-
-def sentences(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, sent_idx, sentence) — empty pieces dropped, sentences
-    numbered densely (matches tokenize_text_py)."""
-    pieces = F.filter(
-        F.split(F.col(text_col), SENT_SPLIT_RE), lambda s: F.trim(s) != ""
-    )
-    return df.select(
-        "doc_id", F.posexplode(pieces).alias("sent_idx", "sentence")
-    )
+# the Python dialect: Java's \s, spelled out
+_JAVA_SPACE = r" \t\n\x0b\f\r"
+TOKEN_RE_PY = rf"[\w']+|[^\w'{_JAVA_SPACE}]"
+SENT_SPLIT_RE_PY = rf"(?<=[.!?])[{_JAVA_SPACE}]+"
 
 
 def sentence_token_arrays(text_col: str = "text") -> Column:
     """Per-document array<array<string>>: the tokens of each non-blank
-    sentence, in order — the one tokenizer expression every tokenized
-    form (``tokens``, ``sentence_tokens``, the one-crossing
-    co-occurrence path) derives from."""
+    sentence, in order — the JVM dialect, which the stored token stage
+    (``sentence_tokens``) and ``span_tokens`` derive from."""
     pieces = F.filter(
         F.split(F.col(text_col), SENT_SPLIT_RE), lambda s: F.trim(s) != ""
     )
@@ -154,28 +155,41 @@ def doc_tokens(tokens_df: DataFrame) -> DataFrame:
 
 
 _TOKEN_PAT = re.compile(TOKEN_RE_PY)
-_SENT_PAT = re.compile(SENT_SPLIT_RE)
+_SENT_PAT = re.compile(SENT_SPLIT_RE_PY)
+_NON_SPACE = re.compile("[^ ]")
+
+
+def _sentence_bounds(text: str) -> list[tuple[int, int]]:
+    """(char_start, char_end) of each sentence of ``text``: the pieces
+    between sentence breaks that hold a non-space character (Spark's
+    ``trim`` strips spaces only, so a tab-only piece is a sentence with
+    no tokens)."""
+    bounds, pos = [], 0
+    for m in _SENT_PAT.finditer(text):
+        bounds.append((pos, m.start()))
+        pos = m.end()
+    bounds.append((pos, len(text)))
+    return [(a, b) for a, b in bounds if _NON_SPACE.search(text, a, b)]
+
+
+def sentence_tokens_py(text: str) -> list[list[str]]:
+    """The tokens of each sentence of ``text``, in order — the Python
+    dialect of ``sentence_token_arrays``."""
+    findall = _TOKEN_PAT.findall
+    return [findall(text, a, b) for a, b in _sentence_bounds(text)]
 
 
 def tokenize_text_py(text: str) -> tuple[list[str], list[int], list[tuple[int, int]]]:
-    """Pure-Python twin of the Spark tokenizer (used by UDF stages and
-    as the independent test oracle): returns (tokens, sent_idx per
-    token, (char_start, char_end) per token)."""
+    """Python-dialect tokenizer with char offsets: returns (tokens,
+    sent_idx per token, (char_start, char_end) per token)."""
     toks: list[str] = []
     sent_of: list[int] = []
     offsets: list[tuple[int, int]] = []
-    pos = 0
-    sent_i = 0
-    pieces = _SENT_PAT.split(text)
-    for piece in pieces:
-        start = text.index(piece, pos) if piece else pos
-        if piece.strip():
-            for m in _TOKEN_PAT.finditer(piece):
-                toks.append(m.group(0))
-                sent_of.append(sent_i)
-                offsets.append((start + m.start(), start + m.end()))
-            sent_i += 1
-        pos = start + len(piece)
+    for sent_i, (a, b) in enumerate(_sentence_bounds(text)):
+        for m in _TOKEN_PAT.finditer(text, a, b):
+            toks.append(m.group(0))
+            sent_of.append(sent_i)
+            offsets.append(m.span())
     return toks, sent_of, offsets
 
 

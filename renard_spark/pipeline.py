@@ -91,7 +91,9 @@ def narrative_stages(
     NER classes, no polarities, no dynamic window and the 'grouped'
     path, ``edges`` comes from the documents in ONE Python crossing per
     document with no shuffle (``cooccurrence_edges_grouped(
-    documents_df=, gazetteer=)``).
+    documents_df=, gazetteer=)``): it reads the ``documents`` stage's
+    spans and joins and tokenizes them in Python, off the stored
+    ``sentence_tokens`` stage.
     """
     gaz = gazetteer or default_gazetteer()
     if unifier not in ("graph_rules", "naive"):

@@ -7,8 +7,9 @@ Interleaved ``kind='text'`` spans carry the narrative; media spans
 the per-row invariant is span-sequence equality on
 (kind, text, media_ref, order).
 
-Everything here is built-in-function only (JVM-side, codegen'd):
-no Python UDFs touch the hot ingest path.
+The DataFrame functions here are built-in-function only (JVM-side):
+no Python UDFs touch the ingest path. ``join_text_spans`` is the span
+join's Arrow twin, for code that already runs on an Arrow batch.
 """
 
 from __future__ import annotations
@@ -42,6 +43,32 @@ def normalize_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("doc_id", F.col("doc_id").cast("string")).withColumn(
         "spans", spans
     )
+
+
+def join_text_spans(spans):
+    """Arrow twin of ``normalize_documents``' span join, for one batch:
+    a ``list<struct<kind, text, ...>>`` array → the string array of each
+    document's text. Same semantics as the JVM expression: spans whose
+    ``kind`` is not 'text' (NULL included) and NULL texts are dropped
+    (``array_join`` skips NULL elements), no text span gives '', and a
+    NULL ``spans`` gives NULL."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    values = spans.values
+    text = pc.struct_field(values, "text")
+    keep = pc.fill_null(pc.and_(
+        pc.equal(pc.struct_field(values, "kind"), "text"), pc.is_valid(text)
+    ), False)
+    # kept-span count before each original offset = the joined lists'
+    # offsets (``spans.offsets`` already accounts for a sliced batch)
+    kept = np.concatenate(([0], np.cumsum(keep.to_numpy(zero_copy_only=False))))
+    offsets = pa.array(kept[spans.offsets.to_numpy()], pa.int32())
+    lists = pa.ListArray.from_arrays(
+        offsets, pc.filter(text, keep), mask=spans.is_null()
+    )
+    return pc.binary_join(lists, "")
 
 
 def span_lineage(df: DataFrame, stage: str = "ingest") -> DataFrame:

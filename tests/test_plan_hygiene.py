@@ -31,7 +31,9 @@ def test_rule_ner_sentences_is_shuffle_free(spark):
 
 def test_default_pipeline_triples_is_one_crossing(spark):
     """The default configuration reaches triples through ONE Python
-    map over one row per document, with no shuffle."""
+    map over one row per document, with no shuffle; the map reads the
+    stored spans, so below it the JVM only scans (no lambda function,
+    i.e. no span join or tokenizer, is evaluated there)."""
     docs = spark.createDataFrame(
         corpus.generate_documents_pdf(5), corpus.DOCUMENTS_SCHEMA
     )
@@ -42,6 +44,9 @@ def test_default_pipeline_triples_is_one_crossing(spark):
         if re.search(r"MapIn(Arrow|Pandas)|InPandas|EvalPython", line)
     ]
     assert len(python_nodes) == 1 and "MapInArrow" in python_nodes[0], plan
+    assert re.search(r"\(doc_id#\d+, spans#\d+\)", python_nodes[0]), plan
+    below = plan[plan.index(python_nodes[0]):]
+    assert "lambdafunction" not in below, plan
 
 
 def test_column_pruning_reaches_scan(spark, tmp_path):

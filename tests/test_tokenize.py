@@ -2,6 +2,9 @@
 independent Python-regex implementation, and tokens == flatten(sentences)
 (mirrors reference tests/test_tokenization.py:20-26)."""
 
+import random
+import string
+
 from renard_spark import corpus
 from renard_spark.operators import tokenize
 from renard_spark.sources import ingest
@@ -151,3 +154,119 @@ def test_span_tokens_random_sentence_boundary_splits(spark):
         tuple(r) for r in tokenize.span_tokens(df).select(*cols).collect()
     )
     assert a == b and len(a) > 0
+
+
+# Java's \s is these six; the rest of the alphabet's whitespace is
+# Unicode-only, so the JVM tokenizer keeps it inside sentences as tokens
+_JAVA_SPACE = " \t\n\x0b\f\r"
+_ADVERSARIAL = (
+    string.ascii_letters + string.digits + "_'.!?" + _JAVA_SPACE
+    + "\xa0\u0085\u2028\u3000" + "éÀßøÑþ\u0301中文字²½"
+)
+
+
+def test_python_tokenizer_equals_jvm(spark):
+    """The Python dialect (``sentence_tokens_py``, ``tokenize_text_py``)
+    equals the JVM one (``sentence_token_arrays``, behind the stored
+    ``sentence_tokens`` stage) on seeded texts over an adversarial
+    alphabet: ASCII word characters and terminals, every Java
+    whitespace character, Unicode-only whitespace (NBSP, NEL, U+2028,
+    U+3000), Latin-1 letters, a combining mark, CJK, ``²`` and ``½``.
+
+    Caveat: JDK 17's regex classes follow Unicode 13 and Python 3.11's
+    ``re`` Unicode 14, so a code point added in Unicode 14 may be a
+    letter to one and not the other; the alphabet holds none."""
+    rng = random.Random(41)
+    texts = ["", " ", "\t", "\xa0", ". \t. x", "Hi.\x0bBob. \u3000 Ann!"] + [
+        "".join(rng.choice(_ADVERSARIAL) for _ in range(rng.randint(0, 80)))
+        for _ in range(600)
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    jvm = {
+        r.i: [list(s) for s in r.s]
+        for r in df.select(
+            "i", tokenize.sentence_token_arrays("t").alias("s")
+        ).collect()
+    }
+    n_sents = 0
+    for i, text in enumerate(texts):
+        sents = tokenize.sentence_tokens_py(text)
+        assert sents == jvm[i], repr(text)
+        toks, sent_of, offsets = tokenize.tokenize_text_py(text)
+        assert toks == [t for s in sents for t in s], repr(text)
+        assert sent_of == [k for k, s in enumerate(sents) for _ in s]
+        assert [text[a:b] for a, b in offsets] == toks
+        n_sents += len(sents)
+    assert n_sents > len(texts)
+
+
+def test_tokens_with_offsets_equals_tokens_on_unicode_space(spark):
+    """The char-offset tokenizer gives the stored token stage's
+    sentences and token indices on texts whose whitespace Java's ``\\s``
+    does not match (it stays a token), so media links address the
+    right characters."""
+    texts = [
+        "Hi.\xa0Bob met Ann. Then they left.",
+        "Hi.\u2028Bob met Ann. Then they left.",
+        "Hi.\u3000Bob met Ann.\u3000Then they left.",
+        "Jo\xa0Ann smiled.",
+        "Hi.\x0bBob left. \t. Ann stayed",
+    ]
+    docs = spark.createDataFrame(
+        [(f"d{i}", t) for i, t in enumerate(texts)], "doc_id string, text string"
+    )
+    cols = ["doc_id", "sent_idx", "tok_idx", "token"]
+    want = sorted(tuple(r) for r in tokenize.tokens(docs).select(*cols).collect())
+    offsets = tokenize.tokens_with_offsets(docs).collect()
+    assert sorted(tuple(r[c] for c in cols) for r in offsets) == want
+    for r in offsets:
+        assert texts[int(r.doc_id[1:])][r.char_start:r.char_end] == r.token
+
+
+def test_join_text_spans_equals_normalize_documents(spark):
+    """``ingest.join_text_spans``, the Arrow span join of the one-crossing
+    co-occurrence path, gives ``normalize_documents``' text on every
+    span shape, with the documents spread over several Arrow batches."""
+    import pyarrow as pa
+
+    span = corpus.SPAN_TYPE.simpleString().replace("not null", "")
+    rows = [
+        ("null_spans", None),
+        ("empty", []),
+        ("media_only", [("image", None, "img/1", 0), ("audio", None, "a/1", 0)]),
+        ("null_kind", [(None, "lost ", None, 0), ("text", "kept", None, 5)]),
+        ("null_text", [("text", "a ", None, 0), ("text", None, None, 2),
+                       ("text", "b", None, 2)]),
+        ("around_media", [("text", "Before. ", None, 0),
+                          ("image", None, "img/2", 8),
+                          ("text", "After.", None, 8)]),
+        ("null_span", [None, ("text", "x", None, 0)]),
+    ]
+    pdf = corpus.generate_documents_pdf(20, seed=5, media_rate=0.5)
+    rows += list(zip(pdf["doc_id"], pdf["spans"]))
+    df = spark.createDataFrame(
+        rows, f"doc_id string, spans array<{span}>"
+    ).coalesce(1)
+
+    def run(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), ingest.join_text_spans(b.column(1)),
+                 pa.array([b.num_rows] * b.num_rows, pa.int32())],
+                names=["doc_id", "text", "batch_rows"],
+            )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = df.mapInArrow(
+            run, "doc_id string, text string, batch_rows int"
+        ).collect()
+    finally:
+        spark.conf.set(key, saved)
+    want = {r.doc_id: r.text for r in
+            ingest.normalize_documents(df).select("doc_id", "text").collect()}
+    assert {r.doc_id: r.text for r in got} == want
+    assert len(got) == len(rows) and max(r.batch_rows for r in got) <= 3
+    assert want["null_spans"] is None and want["media_only"] == ""
