@@ -590,32 +590,6 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a small-file scan across the default parallelism before
-    per-row-heavy work (shingling, 64-bit-vote hashing): the test
-    corpora are single parquet files, so without this the heaviest map
-    stage runs as ONE task. Gated on the actual split count: at
-    production scale the scan already has >= parallelism splits and the
-    repartition — which WOULD be a full shuffle of the corpus text —
-    is skipped entirely. Driver-query-local; the pipeline facades never
-    call this.
-
-    HASH-partitioned by doc_id (not round-robin): every downstream
-    stage of these queries keys on doc_id first (per-doc windows,
-    block dedup, containment/self joins, per-doc aggregations), and a
-    hash(doc_id) partitioning SATISFIES any clustering requirement
-    whose keys start with doc_id — so the whole per-document pipeline
-    reuses this one exchange instead of re-shuffling at every step
-    (guide §2.4: establish the partitioning once). Round-robin gave
-    none of that and additionally paid the sort-before-repartition
-    pass. doc_id is unique per row, so the spread is as even as
-    round-robin at any scale."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    return df.repartition(par, F.col("doc_id"))
-
-
 # Split-size target for the INPUT-DERIVED spread below: one task per
 # ~128 KB of compressed parquet. Parquet text compresses ~4-6x, and the
 # post-spread work (regex tokenize + shingle/NLP chains) expands and
@@ -731,8 +705,8 @@ def _await_stream(q, timeout_sec: int) -> None:
 
 
 def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting (text-analysis op) — JVM regexp; _spread only
-    because the test corpus is one parquet split (see _spread)."""
+    """Token counting (text-analysis op) — JVM regexp; spread only
+    because the test corpus is one parquet split (see _docs_spread)."""
     return _docs_spread(spark, sf_dir).select(
         "doc_id",
         F.size(F.regexp_extract_all("text", F.lit(TOKEN_RE), 0))

@@ -26,6 +26,7 @@ def map_in_pandas_by_key(
     schema: str,
     key: str = "doc_id",
     sort_cols: tuple[str, ...] = (),
+    partitions: int | None = None,
 ) -> DataFrame:
     """Per-key imperative logic WITHOUT per-key Python calls: the
     per-group applyInPandas/cogroup APIs invoke Python once per GROUP —
@@ -34,7 +35,9 @@ def map_in_pandas_by_key(
     ONE ``mapInPandas`` call per Arrow batch; ``process(pdf)`` receives
     a frame of complete key-groups (group rows are contiguous; the
     trailing group of each batch is carried into the next batch of the
-    same partition, which the iterator delivers in order)."""
+    same partition, which the iterator delivers in order).
+    ``partitions``: the repartition's count; None lets AQE coalesce it,
+    which runs a mention-sized table as one or two tasks."""
     import pandas as pd
 
     def run(batches):
@@ -54,7 +57,8 @@ def map_in_pandas_by_key(
         if pending is not None and not pending.empty:
             yield process(pending)
 
-    part = df.repartition(key).sortWithinPartitions(key, *sort_cols)
+    part = (df.repartition(partitions, key) if partitions
+            else df.repartition(key)).sortWithinPartitions(key, *sort_cols)
     return part.mapInPandas(run, schema=schema)
 
 

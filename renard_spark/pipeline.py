@@ -63,7 +63,6 @@ def narrative_stages(
     min_appearances: int = 0,
     corefs: str | None = None,
     polarities: str | None = None,
-    cooccur_path: str = "grouped",
     dynamic_window: int | None = None,
     dynamic_overlap: int = 0,
     additional_ner_classes: list[str] | None = None,
@@ -88,12 +87,13 @@ def narrative_stages(
     needs a ``kb`` input.
 
     With rule NER, the 'graph_rules' unifier, no corefs, no additional
-    NER classes, no polarities, no dynamic window and the 'grouped'
-    path, ``edges`` comes from the documents in ONE Python crossing per
-    document with no shuffle (``cooccurrence_edges_grouped(
-    documents_df=, gazetteer=)``): it reads the ``documents`` stage's
-    spans and joins and tokenizes them in Python, off the stored
-    ``sentence_tokens`` stage.
+    NER classes, no polarities and no dynamic window, ``edges`` comes
+    from the documents in ONE Python crossing per document with no
+    shuffle (``cooccurrence_edges_grouped``): it reads the
+    ``documents`` stage's spans and joins and tokenizes them in Python,
+    off the stored ``sentence_tokens`` stage. Every other configuration
+    runs ``cooccurrence_edges`` over the unified mentions and the
+    ``sentence_tokens`` table.
     """
     gaz = gazetteer or default_gazetteer()
     if unifier not in ("graph_rules", "naive"):
@@ -144,8 +144,7 @@ def narrative_stages(
 
     if (ner_model_factory is None and unifier == "graph_rules"
             and corefs is None and not additional_ner_classes
-            and polarities is None and dynamic_window is None
-            and cooccur_path == "grouped"):
+            and polarities is None and dynamic_window is None):
         edges = _stage(
             "edges", ["documents"],
             lambda d: cooccur.cooccurrence_edges_grouped(
@@ -161,7 +160,6 @@ def narrative_stages(
 
         def cooccurrences(*tables):
             t = dict(zip(needs, tables))
-            st, pol = t["sentence_tokens"], t.get("polarities")
             mentions = t["unified_mentions"].select(
                 "doc_id", "char_id", "start_idx", "end_idx")
             if additional_ner_classes:
@@ -177,17 +175,14 @@ def narrative_stages(
                 mentions = cooccur.add_window_ids(
                     mentions, dynamic_window, dynamic_overlap)
                 group_col = "window_id"
-            elif cooccur_path == "grouped":
-                return cooccur.cooccurrence_edges_grouped(
-                    mentions, dist=dist[0], unit=dist[1], sent_info_df=st,
-                    polarities_df=pol)
             return cooccur.cooccurrence_edges(
-                mentions, dist=dist[0], unit=dist[1], tokens_df=toks(st),
-                polarities_df=pol, group_col=group_col)
+                mentions, dist=dist[0], unit=dist[1],
+                tokens_df=t["sentence_tokens"],
+                polarities_df=t.get("polarities"), group_col=group_col)
 
         edges = _stage(
             "edges", needs, cooccurrences, dist=list(dist),
-            cooccur_path=cooccur_path, dynamic_window=dynamic_window,
+            dynamic_window=dynamic_window,
             dynamic_overlap=dynamic_overlap,
             additional_ner_classes=additional_ner_classes)
 
@@ -302,7 +297,6 @@ def character_graph_pipeline(
     dynamic_overlap: int = 0,
     corefs_df: DataFrame | None = None,
     polarities_df: DataFrame | None = None,
-    cooccur_path: str = "grouped",
     persist: bool = True,
     additional_ner_classes: list[str] | None = None,
     extra_entities_df: DataFrame | None = None,
@@ -315,13 +309,10 @@ def character_graph_pipeline(
     Mirrors the reference's preconfigured ``co_occurrence_pipeline``
     (preconfigured.py:36-37; default dist (1,'sentences')).
 
-    cooccur_path: 'grouped' (per-doc exact path, default) or 'joins'
-    (distributed containment joins — the scale path for huge single
-    documents, whose per-doc scan cannot spread over tasks, and for
-    dynamic windows). persist=True caches the stage tables every
-    downstream branch re-reads (``PERSISTED``). The default
-    configuration computes ``edges`` in one Python crossing per
-    document with no shuffle (see ``narrative_stages``).
+    persist=True caches the stage tables every downstream branch
+    re-reads (``PERSISTED``). The default configuration computes
+    ``edges`` in one Python crossing per document with no shuffle (see
+    ``narrative_stages``).
 
     Model-backed stages swap in behind the same schemas (the
     reference's pluggable-step semantics): ``ner_model_factory``
@@ -337,7 +328,7 @@ def character_graph_pipeline(
         corefs="input" if corefs_df is not None
         else "model" if coref_scorer_factory is not None else None,
         polarities="input" if polarities_df is not None else None,
-        cooccur_path=cooccur_path, dynamic_window=dynamic_window,
+        dynamic_window=dynamic_window,
         dynamic_overlap=dynamic_overlap,
         additional_ner_classes=additional_ner_classes,
         extra_entities=extra_entities_df is not None,

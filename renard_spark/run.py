@@ -83,7 +83,6 @@ def main() -> None:
     ap.add_argument("--input", default=None,
                     help="parquet path of a documents table (else synthetic)")
     ap.add_argument("--rerun-from", default=None)
-    ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--mode", choices=["kg", "curate"], default="kg",
                     help="kg: narrative-KG stages; curate: the "
                          "dedup+quality+decontamination decision table")
@@ -113,7 +112,7 @@ def main() -> None:
                          "parquet + kg.nt + graph.gexf)")
     args = ap.parse_args()
 
-    spark = get_spark("renard_spark_run", cpus=args.cpus)
+    spark = get_spark("renard_spark_run")
     if args.input:
         docs = spark.read.parquet(args.input)
     else:

@@ -1,6 +1,7 @@
-"""Co-occurrence extraction parity: the distributed join formulation
-must reproduce the reference-style sequential per-doc oracle exactly —
-token & sentence units, polarity, dynamic windows."""
+"""Co-occurrence extraction parity: both adapters of the per-document
+block scan (``doc_edges``) must reproduce the reference-style
+sequential per-doc oracle exactly — token & sentence units, polarity,
+dynamic windows, and the one-crossing documents input."""
 
 import random
 
@@ -131,29 +132,37 @@ def test_polarity_matches_oracle(spark):
 
 
 def test_dynamic_windows_match_oracle(spark):
+    """Token unit, and the sentence unit over every window's document
+    sentences (the tutorial's dynamic_window with (20, 'sentences'))."""
     rng = random.Random(41)
-    docs = {f"d{i}": _random_doc(rng, n_mentions=23) for i in range(5)}
-    window, overlap, dist = 7, 2, 3
+    docs, sents, bnds = {}, {}, {}
+    for i in range(5):
+        ms, sent_of, bounds = _sentence_fixture(rng, n_mentions=23)
+        docs[f"d{i}"], sents[f"d{i}"], bnds[f"d{i}"] = ms, sent_of, bounds
+    toks = _tokens_df(spark, sents)
+    window, overlap = 7, 2
     mdf = cooccur.add_window_ids(_mentions_df(spark, docs), window, overlap)
-    edges = cooccur.cooccurrence_edges(
-        mdf, dist, "tokens", group_col="window_id"
-    )
-    got = {}
-    for r in edges.collect():
-        got.setdefault((r.doc_id, r.window_id), {})[(r.src, r.dst)] = r.weight
-
     step = window - overlap
-    for doc_id, ms in docs.items():
-        srt = sorted(ms, key=lambda m: (m[1], m[2], m[0]))
-        n = len(srt)
-        n_win = max((n - window + step - 1) // step + 1, 1)
-        for w in range(n_win):
-            sub = srt[w * step : w * step + window]
-            want = {
-                k: cnt
-                for k, (cnt, _) in cooccur_edges_oracle(sub, dist, "tokens").items()
-            }
-            assert got.get((doc_id, w), {}) == want, (doc_id, w)
+    for dist, unit in ((3, "tokens"), (1, "sentences")):
+        edges = cooccur.cooccurrence_edges(
+            mdf, dist, unit, tokens_df=toks, group_col="window_id"
+        )
+        got = {}
+        for r in edges.collect():
+            got.setdefault((r.doc_id, r.window_id), {})[(r.src, r.dst)] = r.weight
+        for doc_id, ms in docs.items():
+            srt = sorted(ms, key=lambda m: (m[1], m[2], m[0]))
+            n = len(srt)
+            n_win = max((n - window + step - 1) // step + 1, 1)
+            for w in range(n_win):
+                sub = srt[w * step : w * step + window]
+                want = {
+                    k: cnt
+                    for k, (cnt, _) in cooccur_edges_oracle(
+                        sub, dist, unit, sents[doc_id], bnds[doc_id]
+                    ).items()
+                }
+                assert got.get((doc_id, w), {}) == want, (doc_id, w, unit)
 
 
 def test_dynamic_blocks_first_match(spark):
@@ -168,42 +177,6 @@ def test_dynamic_blocks_first_match(spark):
     rows = {(r.char_id, r.start_idx): r.block_id for r in assigned.collect()}
     # first containing block wins; end strict
     assert rows == {("a", 1): 0, ("b", 3): 0, ("a", 11): 1, ("c", 13): 1, ("b", 25): 2}
-
-
-def test_grouped_path_equals_join_path(spark):
-    rng = random.Random(71)
-    docs = {f"d{i}": _random_doc(rng, n_mentions=25) for i in range(8)}
-    mdf = _mentions_df(spark, docs)
-    # token unit
-    for dist in (0, 3):
-        a = _edges_by_doc(cooccur.cooccurrence_edges(mdf, dist, "tokens"))
-        b = _edges_by_doc(cooccur.cooccurrence_edges_grouped(mdf, dist, "tokens"))
-        assert a == b, dist
-    # sentence unit + polarity
-    docs2, sents, bnds, pols = {}, {}, {}, {}
-    for i in range(5):
-        ms, sent_of, bounds = _sentence_fixture(rng)
-        d = f"s{i}"
-        docs2[d], sents[d], bnds[d] = ms, sent_of, bounds
-        pols[d] = [round(rng.uniform(-1, 1), 3) for _ in bounds]
-    toks = _tokens_df(spark, sents)
-    pol_df = spark.createDataFrame(
-        [(d, i, p) for d, ps in pols.items() for i, p in enumerate(ps)],
-        "doc_id string, sent_idx int, polarity double",
-    )
-    a = _edges_by_doc(
-        cooccur.cooccurrence_edges(
-            _mentions_df(spark, docs2), 1, "sentences",
-            tokens_df=toks, polarities_df=pol_df),
-        pol=True,
-    )
-    b = _edges_by_doc(
-        cooccur.cooccurrence_edges_grouped(
-            _mentions_df(spark, docs2), 1, "sentences",
-            tokens_df=toks, polarities_df=pol_df),
-        pol=True,
-    )
-    assert a == b
 
 
 _FILLER = ["the", "walked", "with", "and", "said", "to", "a", "letter", ","]
@@ -250,16 +223,39 @@ def _random_corpus(spark, rng, gazetteer, n_docs=24):
     return spark.createDataFrame(rows, "doc_id string, text string")
 
 
+def _oracle_edges(cases, unified, st):
+    """cooccur_edges_oracle of every (dist, unit) case over the
+    collected unified mentions and sentence bounds, keyed like
+    ``_edges_by_doc`` of the case-tagged union."""
+    ms, bounds = {}, {}
+    for r in unified.collect():
+        ms.setdefault(r.doc_id, []).append((r.char_id, r.start_idx, r.end_idx))
+    for r in st.collect():
+        bounds.setdefault(r.doc_id, []).append(
+            (r.sent_idx, r.sent_start, r.sent_end))
+    want = {}
+    for doc_id, doc_ms in ms.items():
+        bnds = [(s, e) for _, s, e in sorted(bounds[doc_id])]
+        sent_of = [i for i, (s, e) in enumerate(bnds) for _ in range(s, e)]
+        for c, (dist, unit) in enumerate(cases):
+            edges = cooccur_edges_oracle(doc_ms, dist, unit, sent_of, bnds)
+            if edges:
+                want[f"{c}/{doc_id}"] = {
+                    k: (w, None) for k, (w, _) in edges.items()}
+    return want
+
+
 def test_one_crossing_equals_composed_and_join_paths(spark):
     """The documents+gazetteer input of cooccurrence_edges_grouped (span
     join, tokenization, rule NER, graph-rules unification and
     co-occurrence in one crossing) equals the composed operators over
-    the JVM-tokenized ``sentence_tokens``, grouped and join path, on
-    flat (doc_id, text) random corpora, one per min_appearances, and
-    on a normalized interleaved corpus (doc_id, spans, text). The
-    unified mentions are materialized once per corpus, and the
-    (dist, unit) cases' edges are unioned under a case tag so each path
-    is one job."""
+    the JVM-tokenized ``sentence_tokens`` (``cooccurrence_edges`` over
+    the unified mentions) and the reference-style oracle over the same
+    mentions, on flat (doc_id, text) random corpora, one per
+    min_appearances, and on a normalized interleaved corpus (doc_id,
+    spans, text). The unified mentions are materialized once per
+    corpus, and the (dist, unit) cases' edges are unioned under a case
+    tag so each path is one job."""
     from functools import reduce
 
     from renard_spark import corpus, pipeline
@@ -278,14 +274,12 @@ def test_one_crossing_equals_composed_and_join_paths(spark):
     interleaved = ingest.normalize_documents(spark.createDataFrame(
         corpus.generate_documents_pdf(30, seed=1002, media_rate=0.5),
         corpus.DOCUMENTS_SCHEMA))
-    n_edges = 0
     for docs, min_app in (
         (_random_corpus(spark, random.Random(1000), gaz), 0),
         (_random_corpus(spark, random.Random(1001), gaz), 2),
         (interleaved, 1),
     ):
-        st = tokenize.sentence_tokens(docs)
-        toks = tokenize.tokens(docs)
+        st = tokenize.sentence_tokens(docs).localCheckpoint()
         unified = unify.graph_rules_unify(
             ner.rule_ner_sentences(st, gaz), min_appearances=min_app
         ).select("doc_id", "char_id", "start_idx", "end_idx").localCheckpoint()
@@ -294,14 +288,10 @@ def test_one_crossing_equals_composed_and_join_paths(spark):
                 documents_df=docs, gazetteer=gaz, dist=dist, unit=unit,
                 min_appearances=min_app)
             for dist, unit in cases))
-        grouped = _edges_by_doc(union(
-            cooccur.cooccurrence_edges_grouped(
-                unified, dist, unit, sent_info_df=st)
+        composed = _edges_by_doc(union(
+            cooccur.cooccurrence_edges(unified, dist, unit, tokens_df=st)
             for dist, unit in cases))
-        joins = _edges_by_doc(union(
-            cooccur.cooccurrence_edges(unified, dist, unit, tokens_df=toks)
-            for dist, unit in cases))
-        assert fused == grouped == joins, min_app
+        assert fused == composed == _oracle_edges(cases, unified, st), min_app
         assert fused
         for c, case in enumerate(cases):
             for d in ("empty", "blank", "null", "no_mention"):

@@ -211,7 +211,7 @@ def test_lsh_candidates_bucket_cap(spark):
 # ----------------------------------------- deterministic block ids
 
 
-def test_cooccur_join_path_input_order_invariant(spark):
+def test_cooccur_input_order_invariant(spark):
     rng = random.Random(17)
     rows = []
     for d in range(6):
@@ -359,9 +359,10 @@ def test_most_frequent_name_tie_breaks_smallest(spark):
 
 def test_giant_doc_join_path_bounded(spark):
     """Pathological single document (8k mentions, heavy positional
-    overlap): the bucketed containment join path must complete and
-    match the per-doc grouped path — the huge-doc scale shape the
-    grouped path can't parallelize within."""
+    overlap): the per-document scan handles it in one call and matches
+    the reference-style oracle."""
+    from .oracle import cooccur_edges_oracle
+
     rng = random.Random(29)
     rows = [
         ("big", f"c{rng.randint(0, 50)}", s, s + 1)
@@ -370,12 +371,16 @@ def test_giant_doc_join_path_bounded(spark):
     m = spark.createDataFrame(
         rows, "doc_id string, char_id string, start_idx int, end_idx int"
     )
-    join_path = cooccur.cooccurrence_edges(m, dist=5, unit="tokens")
-    grouped = cooccur.cooccurrence_edges_grouped(m, dist=5, unit="tokens")
-    key = lambda r: (r.doc_id, r.src, r.dst, r.weight)
-    a = sorted(map(key, join_path.collect()))
-    b = sorted(map(key, grouped.collect()))
-    assert a == b and len(a) > 0
+    got = sorted(
+        (r.doc_id, r.src, r.dst, r.weight)
+        for r in cooccur.cooccurrence_edges(m, dist=5, unit="tokens").collect()
+    )
+    want = sorted(
+        ("big", src, dst, w)
+        for (src, dst), (w, _) in cooccur_edges_oracle(
+            [r[1:] for r in rows], 5, "tokens").items()
+    )
+    assert got == want and len(got) > 0
 
 
 def test_language_id_multi(spark):

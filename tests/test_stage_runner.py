@@ -70,9 +70,9 @@ def full_run(spark, tmp_path_factory):
     return docs, runner, runner.run()
 
 
-def test_runner_edges_equal_join_path_wiring(spark, full_run):
-    """The production edges (grouped co-occurrence over the sentence
-    tokens, narrow polarities) and triples equal the join-path wiring
+def test_runner_edges_equal_token_table_wiring(spark, full_run):
+    """The production edges (co-occurrence over the sentence_tokens
+    bounds, narrow polarities) and triples equal the token-table wiring
     over the runner's own unified mentions: ``cooccurrence_edges`` with
     the exploded tokens and the join-based sentence polarities."""
     from renard_spark.operators import cooccur, sentiment, tokenize, triples
@@ -96,7 +96,7 @@ def test_runner_edges_equal_join_path_wiring(spark, full_run):
         assert got.keys() == want.keys() and len(got) > 0
         for k, r in got.items():
             assert r.weight == want[k].weight, k
-            # polarity sums add in a different order on the two paths
+            # the two sentence-polarity operators sum in different orders
             assert abs(r.polarity - want[k].polarity) < 1e-9, k
 
     assert_same(out["edges"], edges, ("doc_id", "src", "dst"))
