@@ -763,13 +763,11 @@ def q_graph_characters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_scale_characters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed SCALE path (pair-rule join + iterative connected
-    components + per-component contradiction refinement) on the driver
-    corpus — same singleton-component argument as q_graph_characters,
-    so the naive grouping is the oracle."""
-    from renard_spark.operators.unify_scale import unify_distributed
-
-    unified = unify_distributed(_mentions(spark, sf_dir))
+    """Per-document graph-rules unification (``graph_rules_unify``),
+    mention counts per character, on the driver corpus — same
+    singleton-component argument as q_graph_characters, so the naive
+    grouping is the oracle."""
+    unified = unify.graph_rules_unify(_mentions(spark, sf_dir))
     counted = unified.groupBy("doc_id", "char_id").agg(
         F.count(F.lit(1)).cast("long").alias("mention_count")
     )
@@ -2243,7 +2241,7 @@ def q_global_characters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shared-last pairs are contradiction-cut; property test
     test_linked_oracle_semantics proves components == group-by-first
     for the all-lowercase corpus). Output keeps per-document provenance
-    (doc_id rides through the scale path as a passthrough column)."""
+    (doc_id rides through unify_distributed as a passthrough column)."""
     from pyspark.sql import Window
 
     from renard_spark.operators.unify_scale import unify_distributed
@@ -2256,7 +2254,6 @@ def q_global_characters(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.withColumn("nxt", nxt)
         .filter(F.col("token").isin(LINK_FIRSTS) & F.col("nxt").isin(LINK_LASTS))
         .select(
-            F.lit("corpus").alias("corpus"),
             "doc_id",
             F.col("tok_idx").cast("int").alias("start_idx"),
             (F.col("tok_idx") + 2).cast("int").alias("end_idx"),
@@ -2264,13 +2261,8 @@ def q_global_characters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("PER").alias("tag"),
         )
     )
-    # token/family blocking, not the per-scope self-join: at corpus
-    # scope ONE scope holds every distinct surface in the table, so the
-    # full self-join is quadratic in global name count — blocking is
-    # recall-lossless for the rule set (property-tested equal)
-    unified = unify_distributed(
-        ments, scope_col="corpus", pair_blocking="token"
-    )
+    # the whole mention table is one scope; doc_id passes through
+    unified = unify_distributed(ments)
     out = unified.groupBy("doc_id", "char_id").agg(
         F.size(F.first("names")).cast("long").alias("n_names"),
         F.count(F.lit(1)).cast("long").alias("mention_count"),
@@ -2328,14 +2320,12 @@ def q_kb_characters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_linked_scale_characters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The distributed scale path (pair-rule join + iterative CC +
-    per-component contradiction refinement) on the same multi-name
-    corpus as q_linked_characters — the hardest operator hash-gated on
-    a non-degenerate input."""
-    from renard_spark.operators.unify_scale import unify_distributed
-
+    """Per-document graph-rules unification (``graph_rules_unify``) on
+    the same multi-name corpus as q_linked_characters, reporting each
+    character's name count and mention count — the alias rules and the
+    contradiction pass hash-gated on a non-degenerate input."""
     ments = _linked_mentions(spark, sf_dir)
-    unified = unify_distributed(ments)
+    unified = unify.graph_rules_unify(ments)
     counted = unified.groupBy("doc_id", "char_id").agg(
         F.size(F.first("names")).cast("long").alias("n_names"),
         F.count(F.lit(1)).cast("long").alias("mention_count"),

@@ -258,7 +258,7 @@ def dedup_clusters(
     Near-dup chains (A~B~C~…, boilerplate-heavy corpora) can exceed the
     hash-to-min iteration budget; on ConvergenceError the O(log n)
     large-star/small-star algorithm takes over, mirroring
-    ``unify_scale``'s fallback.
+    ``unify_scale.unify_distributed``'s fallback.
     """
     from pyspark.sql import types as T
 

@@ -55,7 +55,7 @@ def connected_components(
     # undirected symmetric closure + self loops — checkpointed ONCE:
     # e is re-joined every round, and without the checkpoint each round
     # would recompute the caller's whole upstream plan (e.g. the
-    # pair-rule Arrow UDF in unify_scale)
+    # alias-rule Arrow UDF of unify_scale.unify_distributed)
     e = (
         edges_df.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges_df.select(F.col(dst).alias("a"), F.col(src).alias("b")))

@@ -17,6 +17,9 @@ BEFORE the start; ties and absences → NULL. Pure DataFrame joins.
 
 from __future__ import annotations
 
+from itertools import groupby
+from operator import itemgetter
+
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -32,7 +35,7 @@ def detect_quotes(
 
     Quote-mark rows (a tiny filtered fraction of tokens) are
     repartitioned+sorted by doc and scanned in ONE mapInPandas call per
-    Arrow batch (docs grouped inside pandas, trailing doc carried) —
+    Arrow batch (one pass over plain lists, trailing doc carried) —
     not one Python call per document."""
     pairs = quote_pairs or DEFAULT_QUOTE_PAIRS
     opens = {p[0] for p in pairs}
@@ -42,24 +45,23 @@ def detect_quotes(
         "doc_id", "tok_idx", "token"
     )
 
-    def scan_doc(doc_id, g: pd.DataFrame, rows: list) -> None:
-        open_start = None
-        qid = 0
-        for tok_idx, token in zip(g["tok_idx"], g["token"]):
-            if open_start is None:
-                if token in opens:
-                    open_start = int(tok_idx)
-            else:
-                rows.append((doc_id, qid, open_start, int(tok_idx) + 1))
-                qid += 1
-                open_start = None
-
     from renard_spark.operators.utils import map_in_pandas_by_key
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows: list = []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            scan_doc(doc_id, g, rows)
+        # plain lists, one pass: the alternating open/close scan
+        rows = []
+        recs = zip(*(pdf[c].tolist() for c in ("doc_id", "tok_idx", "token")))
+        for doc_id, doc in groupby(recs, key=itemgetter(0)):
+            open_start = None
+            qid = 0
+            for _, tok_idx, token in doc:
+                if open_start is None:
+                    if token in opens:
+                        open_start = int(tok_idx)
+                else:
+                    rows.append((doc_id, qid, open_start, int(tok_idx) + 1))
+                    qid += 1
+                    open_start = None
         return pd.DataFrame(rows, columns=["doc_id", "quote_id", "start", "end"])
 
     return map_in_pandas_by_key(

@@ -10,8 +10,8 @@
   graph is tiny — distinct PER names of one document — while docs
   distribute across executors) via the per-Arrow-batch execution in
   ``operators.utils.map_in_pandas_by_key`` — one Python call per batch,
-  never per document. A fully distributed CC path for cross-document
-  entity tables lives in ``operators.cc``/``operators.unify_scale``.
+  never per document. The cross-document entity table (one alias graph
+  over a whole corpus) is ``operators.unify_scale.unify_distributed``.
 
 Unified-mention schema (stage table):
     unified_mentions(doc_id, char_id, names:array<string>, gender,
@@ -20,6 +20,9 @@ characters = groupBy of that table.
 """
 
 from __future__ import annotations
+
+from itertools import groupby, repeat
+from operator import itemgetter
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -114,10 +117,8 @@ def graph_rules_unify(
     entities_df: (doc_id, start_idx, end_idx, mention_str, tag)
     corefs_df:   (doc_id, chain_id, start_idx, end_idx, mention_str)
     """
-    per = entities_df.filter(F.col("tag") == character_tag).select(
-        "doc_id", "start_idx", "end_idx", "mention_str"
-    )
-    has_corefs = corefs_df is not None
+    from renard_spark.operators.utils import map_in_pandas_by_key
+
     kwargs = dict(
         lang=lang,
         min_appearances=min_appearances,
@@ -125,112 +126,50 @@ def graph_rules_unify(
         ignore_lone_titles=ignore_lone_titles,
         ignore_leading_determiner=ignore_leading_determiner,
     )
-
-    def run_doc(mentions_pdf: pd.DataFrame, chains_pdf: pd.DataFrame | None):
-        if mentions_pdf.empty:
-            doc_id = chains_pdf["doc_id"].iloc[0] if chains_pdf is not None else None
-            mentions = []
-            if doc_id is None:
-                return pd.DataFrame(
-                    columns=[
-                        "doc_id", "char_id", "names", "gender",
-                        "mention_str", "start_idx", "end_idx",
-                    ]
-                )
-        else:
-            doc_id = mentions_pdf["doc_id"].iloc[0]
-            mentions = list(
-                zip(
-                    mentions_pdf["mention_str"],
-                    mentions_pdf["start_idx"].astype(int),
-                    mentions_pdf["end_idx"].astype(int),
-                )
-            )
-        chains = None
-        if has_corefs:
-            chains = []
-            if chains_pdf is not None and not chains_pdf.empty:
-                for _, g in chains_pdf.sort_values(
-                    ["chain_id", "start_idx"]
-                ).groupby("chain_id", sort=True):
-                    chains.append(
-                        list(
-                            zip(
-                                g["mention_str"],
-                                g["start_idx"].astype(int),
-                                g["end_idx"].astype(int),
-                            )
-                        )
-                    )
-        rows = []
-        for c in unify_doc(mentions, chains, **kwargs):
-            for surface, s, e in c["mentions"]:
-                rows.append(
-                    (doc_id, c["char_id"], c["names"], c["gender"], surface, s, e)
-                )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "char_id", "names", "gender",
-                "mention_str", "start_idx", "end_idx",
-            ],
-        )
-
-    # Per-group applyInPandas/cogroup would pay one Python call PER
-    # DOCUMENT (~10× the algorithm cost at 5k docs — the scale killer
-    # at 10^12 docs); both paths use the shared per-Arrow-batch
-    # execution, with chains riding along as kind-tagged rows.
-    from renard_spark.operators.utils import map_in_pandas_by_key
-
-    if has_corefs:
-        tagged = per.select(
-            "doc_id", F.lit(1).alias("_kind"),
-            F.lit(None).cast("int").alias("chain_id"),
-            "start_idx", "end_idx", "mention_str",
-        ).unionByName(
-            corefs_df.select(
-                "doc_id", F.lit(0).alias("_kind"),
-                "chain_id", "start_idx", "end_idx", "mention_str",
-            )
-        )
-
-        def process_with_chains(pdf: pd.DataFrame) -> pd.DataFrame:
-            frames = []
-            for _, g in pdf.groupby("doc_id", sort=False):
-                frames.append(run_doc(g[g["_kind"] == 1], g[g["_kind"] == 0]))
-            if not frames:
-                return run_doc(pd.DataFrame(columns=pdf.columns), None)
-            return pd.concat(frames, ignore_index=True)
-
-        return map_in_pandas_by_key(
-            tagged, process_with_chains, schema=UNIFIED_SCHEMA
-        )
+    with_chains = corefs_df is not None
+    cols = ["doc_id", "char_id", "names", "gender",
+            "mention_str", "start_idx", "end_idx"]
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame:
+        # plain lists, one pass: per-document pandas indexing costs
+        # several times the unification itself
         rows = []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            mentions = list(
-                zip(
-                    g["mention_str"],
-                    g["start_idx"].astype(int),
-                    g["end_idx"].astype(int),
-                )
-            )
-            for c in unify_doc(mentions, None, **kwargs):
+        tags = ((pdf["_kind"].tolist(), pdf["chain_id"].tolist())
+                if with_chains else (repeat(1), repeat(None)))
+        recs = zip(*(pdf[c].tolist() for c in (
+            "doc_id", "mention_str", "start_idx", "end_idx")), *tags)
+        for doc_id, doc in groupby(recs, key=itemgetter(0)):
+            mentions, chains = [], {}
+            for _, surface, s, e, kind, chain in doc:
+                if kind == 1:
+                    mentions.append((surface, int(s), int(e)))
+                else:
+                    chains.setdefault(chain, []).append(
+                        (surface, int(s), int(e)))
+            # chain and mention order within a document do not change
+            # unify_doc's result
+            chain_list = list(chains.values()) if with_chains else None
+            for c in unify_doc(mentions, chain_list, **kwargs):
                 for surface, s, e in c["mentions"]:
-                    rows.append(
-                        (doc_id, c["char_id"], c["names"], c["gender"],
-                         surface, s, e)
-                    )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "char_id", "names", "gender",
-                "mention_str", "start_idx", "end_idx",
-            ],
-        )
+                    rows.append((doc_id, c["char_id"], c["names"],
+                                 c["gender"], surface, s, e))
+        return pd.DataFrame(rows, columns=cols)
 
-    return map_in_pandas_by_key(per, process, schema=UNIFIED_SCHEMA)
+    tagged = entities_df.filter(F.col("tag") == character_tag).select(
+        "doc_id", "start_idx", "end_idx", "mention_str"
+    )
+    if with_chains:
+        # chains ride along with the mentions as kind-tagged rows, so
+        # each Arrow batch is one Python call over complete documents;
+        # without chains no tag columns cross the shuffle
+        tagged = tagged.withColumn("_kind", F.lit(1)).unionByName(
+            corefs_df.select(
+                "doc_id", "start_idx", "end_idx", "mention_str",
+                F.lit(0).alias("_kind"), "chain_id",
+            ),
+            allowMissingColumns=True,
+        )
+    return map_in_pandas_by_key(tagged, process, schema=UNIFIED_SCHEMA)
 
 
 def characters_table(unified_mentions: DataFrame) -> DataFrame:

@@ -15,10 +15,13 @@ SURVEY.md §5 determinism caveat):
   * all ties (gender vote, chain argmax) break toward the
     first item in sorted order.
 
-This module has no Spark imports: it is unit-testable standalone and is
-invoked inside Arrow-batched ``applyInPandas`` per document (many docs
-per executor task — distributed across docs, sequential only within one
-tiny per-doc graph, exactly like the reference's per-doc semantics).
+This module has no Spark imports: it is unit-testable standalone. It
+runs once per document, many documents per Python call: in the batch
+``mapInPandas`` body of ``unify.graph_rules_unify`` and in the one
+``mapInArrow`` crossing of ``cooccur.cooccurrence_edges_grouped``. The
+cross-document ``unify_scale.unify_distributed`` evaluates the same
+alias rule (``_NameFeatures.related``) on its candidate pairs and runs
+``alias_components`` once per initial component.
 """
 
 from __future__ import annotations
@@ -171,6 +174,46 @@ def _remove_shortest_path_first_edges(adj: dict[str, set[str]], a: str, b: str):
         adj[n].discard(a)
 
 
+def alias_components(
+    names: list[str],
+    adj: dict[str, set[str]],
+    parsed: dict,
+    genders: dict[str, str],
+) -> list[list[str]]:
+    """Contradiction pass over the alias graph ``adj`` (cut in place),
+    then its connected components: each sorted, in order of their
+    first name.
+
+    ``names`` is sorted, and its pairs are visited in that order. A
+    pair with the same last and different first name (case-sensitive),
+    else with conflicting known genders, cuts its alias path
+    (character_unification.py:293-327). ``parsed`` maps each name to
+    its ``parse_name`` result.
+    """
+    for n1, n2 in combinations(names, 2):
+        p1, p2 = parsed[n1], parsed[n2]
+        if (
+            p1.last != "" and p2.last != ""
+            and p1.first != "" and p2.first != ""
+            and p1.last == p2.last
+            and p1.first != p2.first
+        ):
+            _remove_shortest_path_first_edges(adj, n1, n2)
+            continue
+        g1, g2 = genders[n1], genders[n2]
+        if g1 != g2 and g1 != UNKNOWN and g2 != UNKNOWN:
+            _remove_shortest_path_first_edges(adj, n1, n2)
+
+    components: list[list[str]] = []
+    seen: set[str] = set()
+    for start in names:
+        if start not in seen:
+            comp = sorted(_bfs_dist(adj, start))
+            seen.update(comp)
+            components.append(comp)
+    return components
+
+
 def unify_doc(
     mentions: list[Mention],
     chains: Optional[list[Chain]] = None,
@@ -221,30 +264,8 @@ def unify_doc(
 
     genders = {n: infer_gender(n, chains, lang) for n in names}
 
-    # contradiction pass: same last + different first (case-sensitive),
-    # else conflicting inferred genders → cut the alias path.
-    for n1, n2 in combinations(names, 2):
-        p1, p2 = parsed[n1], parsed[n2]
-        if (
-            p1.last != "" and p2.last != ""
-            and p1.first != "" and p2.first != ""
-            and p1.last == p2.last
-            and p1.first != p2.first
-        ):
-            _remove_shortest_path_first_edges(adj, n1, n2)
-            continue
-        g1, g2 = genders[n1], genders[n2]
-        if g1 != g2 and g1 != UNKNOWN and g2 != UNKNOWN:
-            _remove_shortest_path_first_edges(adj, n1, n2)
-
-    # connected components, canonical order
     characters: list[dict] = []
-    seen: set[str] = set()
-    for start in names:
-        if start in seen:
-            continue
-        comp = sorted(_bfs_dist(adj, start).keys())
-        seen.update(comp)
+    for comp in alias_components(names, adj, parsed, genders):
         comp_set = set(comp)
         glist = [genders[n] for n in comp]
         counter = Counter(glist)

@@ -1,29 +1,29 @@
-"""Scale-path character unification: distributed pair rules + CC.
+"""Cross-document character unification: one alias graph over a table.
 
-The parity path (unify.graph_rules_unify) runs the whole alias graph
-per document inside applyInPandas — exact reference semantics, perfect
-for 10^12 modest documents. This module is the *scale path* for the two
-shapes that break per-doc execution:
-  * pathological documents with huge distinct-name sets;
-  * a global (cross-document) entity table.
+The per-document unifier (``unify.graph_rules_unify``) runs the whole
+alias graph of each document in one Python call. This module unifies a
+whole table as ONE scope — a cross-document entity table, where the
+same surface in different documents resolves to one global entity.
 
-Pipeline: distinct names → per-scope name-pair self-join (names are
-few per scope; AQE skew-join guards hot scopes) → vectorized rule
-evaluation in an Arrow pandas UDF → distributed connected components
-over the UNCUT alias graph (operators.cc) → **exact contradiction pass
-per initial component** (cogrouped applyInPandas): cuts never merge
-components and cross-component contradiction pairs are no-ops, so the
-reference's sequential whole-graph pass (character_unification.py:
-293-327) decomposes exactly into independent per-component passes in
-canonical order. Property-tested EQUAL to the per-doc parity path.
-Gender is inferred per name (title gazetteer; pronoun votes need
-chains, joinable upstream).
+Pipeline: distinct names → candidate pairs by token/hypocorism-family
+blocking keys (a full self-join would be quadratic in the table's
+distinct names) → the core's alias rule (``unify_core._NameFeatures
+.related``) in an Arrow UDF → distributed connected components over the
+UNCUT alias graph (operators.cc) → **exact contradiction pass per
+initial component** (``unify_core.alias_components`` in a cogrouped
+applyInPandas): cuts never merge components and cross-component
+contradiction pairs are no-ops, so the reference's sequential
+whole-graph pass (character_unification.py:293-327) decomposes exactly
+into independent per-component passes in canonical order.
+Property-tested EQUAL to ``unify_core.unify_doc`` over the pooled
+mentions. Gender is inferred per name (title gazetteer; pronoun votes
+from ``corefs_df`` chains).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -33,51 +33,21 @@ from renard_spark.operators.cc import (
     connected_components,
     connected_components_star,
 )
-from renard_spark.operators.unify_core import infer_gender
-from renard_spark.resources.gazetteers import hypocorism_related
+from renard_spark.operators.unify_core import (
+    _name_features,
+    alias_components,
+    infer_gender,
+)
 
 
 @F.pandas_udf(T.BooleanType())
 def _alias_rule_udf(n1: pd.Series, n2: pd.Series) -> pd.Series:
-    """Vectorized alias rules (a)-(d): hypocorism/equal, related after
-    title removal, same last name, same first name."""
-    out = []
-    for a, b in zip(n1, n2):
-        p1, p2 = parse_name(a), parse_name(b)
-        ok = (
-            hypocorism_related(a, b)
-            or (
-                p1.without_title != ""
-                and p2.without_title != ""
-                and (
-                    p1.without_title.lower() == p2.without_title.lower()
-                    or hypocorism_related(p1.without_title, p2.without_title)
-                )
-            )
-            or (p1.last != "" and p1.last.lower() == p2.last.lower())
-            or (p1.first != "" and p1.first.lower() == p2.first.lower())
-        )
-        out.append(ok)
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.BooleanType())
-def _contradiction_udf(n1: pd.Series, n2: pd.Series,
-                       g1: pd.Series, g2: pd.Series) -> pd.Series:
-    out = []
-    for a, b, ga, gb in zip(n1, n2, g1, g2):
-        p1, p2 = parse_name(a), parse_name(b)
-        name_conflict = (
-            p1.last != "" and p2.last != ""
-            and p1.first != "" and p2.first != ""
-            and p1.last == p2.last
-            and p1.first != p2.first
-        )
-        gender_conflict = (
-            ga != gb and ga != "UNKNOWN" and gb != "UNKNOWN"
-        )
-        out.append(bool(name_conflict or gender_conflict))
-    return pd.Series(out)
+    """The core's alias rules (hypocorism/equal, related after title
+    removal, same last name, same first name) over name pairs."""
+    return pd.Series([
+        _name_features(a, "eng").related(_name_features(b, "eng"))
+        for a, b in zip(n1, n2)
+    ])
 
 
 @F.pandas_udf(T.StringType())
@@ -85,15 +55,14 @@ def _gender_udf(names: pd.Series) -> pd.Series:
     return pd.Series([infer_gender(n, None, "eng") for n in names])
 
 
-def _chain_gender_votes(
-    names: DataFrame, corefs_df: DataFrame, scope_col: str
-) -> DataFrame:
+def _chain_gender_votes(names: DataFrame, corefs_df: DataFrame) -> DataFrame:
     """Fold coref-chain pronoun votes into per-name gender — the exact
     ``infer_gender`` semantics (unify_core.py:75-96) as DataFrame ops:
     title gender (already in ``names.gender``) wins when known; else,
     over chains CONTAINING the name, count each chain's distinct male/
     female pronoun SURFACES (set semantics: 'He' and 'he' are two
     surfaces, a repeated 'he' is one) and majority-vote, ties UNKNOWN.
+    A chain is one (doc_id, chain_id).
     """
     from renard_spark.resources.gazetteers import (
         FEMALE_PRONOUNS,
@@ -102,8 +71,9 @@ def _chain_gender_votes(
 
     male = sorted(MALE_PRONOUNS["eng"])
     female = sorted(FEMALE_PRONOUNS["eng"])
-    surf = corefs_df.select(scope_col, "chain_id", "mention_str").distinct()
-    counts = surf.groupBy(scope_col, "chain_id").agg(
+    chain = ["doc_id", "chain_id"]
+    surf = corefs_df.select(*chain, "mention_str").distinct()
+    counts = surf.groupBy(*chain).agg(
         F.sum(
             F.when(F.lower("mention_str").isin(male), 1).otherwise(0)
         ).alias("_mc"),
@@ -112,11 +82,10 @@ def _chain_gender_votes(
         ).alias("_fc"),
     )
     votes = (
-        surf.join(counts, [scope_col, "chain_id"])
-        .groupBy(scope_col, "mention_str")
+        surf.join(counts, chain)
+        .groupBy("mention_str")
         .agg(F.sum("_mc").alias("_m"), F.sum("_fc").alias("_f"))
         .select(
-            scope_col,
             "mention_str",
             F.when(F.col("_m") > F.col("_f"), F.lit("MALE"))
             .when(F.col("_f") > F.col("_m"), F.lit("FEMALE"))
@@ -124,8 +93,7 @@ def _chain_gender_votes(
             .alias("_vote"),
         )
     )
-    return names.join(votes, [scope_col, "mention_str"], "left").select(
-        scope_col,
+    return names.join(votes, "mention_str", "left").select(
         "mention_str",
         F.when(F.col("gender") != "UNKNOWN", F.col("gender"))
         .otherwise(F.coalesce("_vote", F.lit("UNKNOWN")))
@@ -157,28 +125,19 @@ def _block_keys_udf(names: pd.Series) -> pd.Series:
 def unify_distributed(
     entities_df: DataFrame,
     character_tag: str = "PER",
-    scope_col: str = "doc_id",
     min_appearances: int = 0,
     corefs_df: DataFrame | None = None,
-    pair_blocking: str = "scope",
 ) -> DataFrame:
-    """→ unified mentions (scope, char_id, names, gender, mention_str,
-    start_idx, end_idx), same shape as unify.graph_rules_unify.
+    """→ unified mentions (char_id, names, gender, mention_str,
+    start_idx, end_idx) over the whole table as one scope; every other
+    entity column (e.g. doc_id) passes through, keeping per-document
+    provenance.
 
-    ``corefs_df`` (scope, chain_id, mention_str, ...) joins chain
-    pronoun votes into the gender inference, closing the one semantic
-    gap vs the parity path's ``infer_gender(chains=...)``; the informed
-    gender then feeds the contradiction refinement exactly as there.
-    (Chain-mention assignment and the link_corefs_mentions rule remain
-    parity-path features.)
-
-    ``pair_blocking``: 'scope' (default) self-joins all names within a
-    scope — exact and cheap when scopes are documents (names are few
-    per doc). 'token' generates candidates via token/hypocorism-family
-    blocking keys instead — the CORPUS-scope path, where one scope
-    holds every distinct surface in the table and a full self-join
-    would be quadratic; provably recall-lossless for the rule set
-    (see ``_block_keys_udf``) and property-tested equal to 'scope'."""
+    ``corefs_df`` (doc_id, chain_id, mention_str, ...) joins chain
+    pronoun votes into the gender inference, as ``infer_gender(chains=
+    ...)`` does; the informed gender then feeds the contradiction
+    refinement. (Chain-mention assignment and the link_corefs_mentions
+    rule are per-document features of ``unify.graph_rules_unify``.)"""
     # the mention table feeds TWO consumers (the distinct-surface names
     # build and the final labeling join) — without a checkpoint the
     # upstream lineage (tokenize + NER over the whole corpus) executes
@@ -192,223 +151,134 @@ def unify_distributed(
     # node/edge sides, labeling) and carry Arrow-UDF stages —
     # checkpoint once instead of recomputing the UDFs per consumer
     names = (
-        per.select(scope_col, "mention_str")
+        per.select("mention_str")
         .distinct()
         .withColumn("gender", _gender_udf("mention_str"))
     )
     if corefs_df is not None:
-        names = _chain_gender_votes(names, corefs_df, scope_col)
+        names = _chain_gender_votes(names, corefs_df)
     names = names.localCheckpoint(eager=True)
 
-    a = names.select(
-        F.col(scope_col).alias("_s"),
-        F.col("mention_str").alias("n1"),
-        F.col("gender").alias("g1"),
+    keyed = names.select(
+        F.col("mention_str").alias("_kn"),
+        F.explode(_block_keys_udf("mention_str")).alias("_key"),
     )
-    b = names.select(
-        F.col(scope_col).alias("_s2"),
-        F.col("mention_str").alias("n2"),
-        F.col("gender").alias("g2"),
+    pairs = (
+        keyed.alias("x")
+        .join(
+            keyed.alias("y"),
+            (F.col("x._key") == F.col("y._key"))
+            & (F.col("x._kn") < F.col("y._kn")),
+        )
+        .select(F.col("x._kn").alias("n1"), F.col("y._kn").alias("n2"))
+        .distinct()
     )
-    if pair_blocking == "token":
-        keyed = names.select(
-            F.col(scope_col).alias("_ks"),
-            F.col("mention_str").alias("_kn"),
-            F.explode(_block_keys_udf("mention_str")).alias("_key"),
-        )
-        cand = (
-            keyed.alias("x")
-            .join(
-                keyed.alias("y"),
-                (F.col("x._ks") == F.col("y._ks"))
-                & (F.col("x._key") == F.col("y._key"))
-                & (F.col("x._kn") < F.col("y._kn")),
-            )
-            .select(
-                F.col("x._ks").alias("_cs"),
-                F.col("x._kn").alias("_c1"),
-                F.col("y._kn").alias("_c2"),
-            )
-            .distinct()
-        )
-        pairs = (
-            cand.join(
-                a, (F.col("_cs") == F.col("_s")) & (F.col("_c1") == F.col("n1"))
-            )
-            .join(
-                b,
-                (F.col("_cs") == F.col("_s2")) & (F.col("_c2") == F.col("n2")),
-            )
-            .select("_s", "n1", "g1", "n2", "g2")
-        )
-    else:
-        pairs = a.join(
-            b, (a["_s"] == b["_s2"]) & (a["n1"] < b["n2"])
-        ).drop("_s2")
-    linked = (
-        pairs.withColumn("linked", _alias_rule_udf("n1", "n2"))
-        .filter("linked")
-        .localCheckpoint(eager=True)
+    linked = pairs.filter(_alias_rule_udf("n1", "n2")).localCheckpoint(
+        eager=True
     )
 
     # Stage 1 — distributed CC over the UNCUT alias graph. Cuts never
     # merge components, and cross-component contradiction pairs are
     # no-ops, so the sequential contradiction pass decomposes exactly
     # per initial component.
-    SEP = "\x00"
-    edges = linked.select(
-        F.concat_ws(SEP, "_s", "n1").alias("src"),
-        F.concat_ws(SEP, "_s", "n2").alias("dst"),
-    )
     singles = names.select(
-        F.concat_ws(SEP, scope_col, "mention_str").alias("src")
-    ).withColumn("dst", F.col("src"))
-    all_edges = edges.unionByName(singles)
+        F.col("mention_str").alias("src"), F.col("mention_str").alias("dst")
+    )
+    all_edges = linked.select(
+        F.col("n1").alias("src"), F.col("n2").alias("dst")
+    ).unionByName(singles)
     try:
         # alias graphs are star-ish (tiny diameter) — hash-to-min wins
         comp0 = connected_components(all_edges)
     except ConvergenceError:
         # pathological long-chain alias graph: O(log n)-round variant
         comp0 = connected_components_star(all_edges)
-
     membership0 = comp0.select(
-        F.split_part("vertex", F.lit(SEP), F.lit(1)).alias(scope_col),
-        F.split_part("vertex", F.lit(SEP), F.lit(2)).alias("mention_str"),
-        F.col("component").alias("comp0"),
+        F.col("vertex").alias("mention_str"), F.col("component").alias("comp0")
     )
 
     # Stage 2 — exact contradiction pass per initial component
     # (canonical sorted-pair order; component graphs are tiny), inside
-    # one cogrouped applyInPandas keyed by (scope, comp0).
+    # one cogrouped applyInPandas keyed by comp0.
     #
     # Singleton components (the vast majority: any name with no alias
     # link) CANNOT contradict — they bypass the cogroup entirely
     # (char_id = the name itself), so the Python-per-group cost is paid
     # only for true multi-name components.
-    sizes = membership0.groupBy(scope_col, "comp0").agg(
-        F.count(F.lit(1)).alias("_n")
+    multi_keys = (
+        membership0.groupBy("comp0").agg(F.count(F.lit(1)).alias("_n"))
+        .filter("_n > 1").select("comp0")
     )
-    multi_keys = sizes.filter("_n > 1").select(scope_col, "comp0")
     single_membership = membership0.join(
-        multi_keys, [scope_col, "comp0"], "left_anti"
-    ).select(
-        scope_col, "mention_str", F.col("mention_str").alias("char_id")
+        multi_keys, "comp0", "left_anti"
+    ).select("mention_str", F.col("mention_str").alias("char_id"))
+    node_side = (
+        membership0.join(multi_keys, "comp0", "left_semi")
+        .join(names, "mention_str")
+        .select("comp0", "mention_str", "gender")
     )
-    membership0 = membership0.join(multi_keys, [scope_col, "comp0"], "left_semi")
-    node_side = membership0.join(names, [scope_col, "mention_str"]).select(
-        scope_col, "comp0", "mention_str", "gender"
-    )
-    m0 = comp0.select(
-        F.split_part("vertex", F.lit(SEP), F.lit(1)).alias("_es"),
-        F.split_part("vertex", F.lit(SEP), F.lit(2)).alias("_n1"),
-        F.col("component").alias("_c0"),
-    )
-    edge_side = (
-        linked.join(
-            m0, (F.col("_s") == F.col("_es")) & (F.col("n1") == F.col("_n1"))
-        )
-        .select(
-            F.col("_s").alias(scope_col),
-            F.col("_c0").alias("comp0"),
-            "n1",
-            "n2",
-        )
-    )
-
-    import pandas as pd
-
-    from renard_spark.operators.unify_core import (
-        _bfs_dist,
-        _remove_shortest_path_first_edges,
-    )
-    from renard_spark.functions.names import parse_name as _parse
+    # a fresh projection of comp0: reusing membership0 on both cogroup
+    # sides makes comp0 an ambiguous self-join column
+    edge_side = linked.join(
+        comp0.select(
+            F.col("vertex").alias("n1"), F.col("component").alias("comp0")
+        ),
+        "n1",
+    ).select("comp0", "n1", "n2")
 
     def refine(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
-        if nodes_pdf.empty:
-            return pd.DataFrame(columns=[scope_col, "mention_str", "char_id"])
-        scope = nodes_pdf[scope_col].iloc[0]
         node_names = sorted(nodes_pdf["mention_str"])
         genders = dict(zip(nodes_pdf["mention_str"], nodes_pdf["gender"]))
         adj = {n: set() for n in node_names}
-        if edges_pdf is not None and not edges_pdf.empty:
-            for a, b in zip(edges_pdf["n1"], edges_pdf["n2"]):
-                adj[a].add(b)
-                adj[b].add(a)
-        parsed = {n: _parse(n) for n in node_names}
-        from itertools import combinations
-
-        for n1, n2 in combinations(node_names, 2):
-            p1, p2 = parsed[n1], parsed[n2]
-            if (
-                p1.last != "" and p2.last != ""
-                and p1.first != "" and p2.first != ""
-                and p1.last == p2.last
-                and p1.first != p2.first
-            ):
-                _remove_shortest_path_first_edges(adj, n1, n2)
-                continue
-            g1, g2 = genders[n1], genders[n2]
-            if g1 != g2 and g1 != "UNKNOWN" and g2 != "UNKNOWN":
-                _remove_shortest_path_first_edges(adj, n1, n2)
-        rows = []
-        seen: set[str] = set()
-        for start in node_names:
-            if start in seen:
-                continue
-            comp = sorted(_bfs_dist(adj, start).keys())
-            seen.update(comp)
-            for n in comp:
-                rows.append((scope, n, comp[0]))
-        return pd.DataFrame(rows, columns=[scope_col, "mention_str", "char_id"])
+        for a, b in zip(edges_pdf["n1"], edges_pdf["n2"]):
+            adj[a].add(b)
+            adj[b].add(a)
+        parsed = {n: parse_name(n) for n in node_names}
+        rows = [
+            (n, comp[0])
+            for comp in alias_components(node_names, adj, parsed, genders)
+            for n in comp
+        ]
+        return pd.DataFrame(rows, columns=["mention_str", "char_id"])
 
     membership = (
-        node_side.groupBy(scope_col, "comp0")
-        .cogroup(edge_side.groupBy(scope_col, "comp0"))
-        .applyInPandas(
-            refine,
-            schema=f"{scope_col} string, mention_str string, char_id string",
-        )
+        node_side.groupBy("comp0")
+        .cogroup(edge_side.groupBy("comp0"))
+        .applyInPandas(refine, schema="mention_str string, char_id string")
         .unionByName(single_membership)
     )
-    labeled = membership.join(names, [scope_col, "mention_str"])
-    chars = labeled.groupBy(scope_col, "char_id").agg(
+    labeled = membership.join(names, "mention_str")
+    chars = labeled.groupBy("char_id").agg(
         F.array_sort(F.collect_set("mention_str")).alias("names")
     )
     # majority gender vote; ties break toward the gender of the FIRST
-    # name in sorted-component order — same canonical rule as the
-    # parity path (unify_core.unify_doc), so both paths stay
-    # property-equal even on 1-1 MALE/FEMALE components.
-    from pyspark.sql import Window
-
-    votes = labeled.groupBy(scope_col, "char_id", "gender").agg(
+    # name in sorted-component order — same canonical rule as
+    # unify_core.unify_doc, so both stay property-equal even on 1-1
+    # MALE/FEMALE components.
+    votes = labeled.groupBy("char_id", "gender").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("mention_str").alias("_first_name"),
     )
-    wv = Window.partitionBy(scope_col, "char_id").orderBy(
+    wv = Window.partitionBy("char_id").orderBy(
         F.col("n").desc(), F.col("_first_name").asc()
     )
     gvote = (
         votes.withColumn("_r", F.row_number().over(wv))
         .filter("_r = 1")
-        .select(scope_col, "char_id", "gender")
+        .select("char_id", "gender")
     )
-    chars = chars.join(gvote, [scope_col, "char_id"])
+    chars = chars.join(gvote, "char_id")
 
-    # passthrough: any extra entity columns survive (e.g. doc_id when
-    # unifying at corpus scope — cross-document canonicalization keeps
-    # per-document provenance)
-    core = [scope_col, "char_id", "names", "gender",
-            "mention_str", "start_idx", "end_idx"]
+    core = ["char_id", "names", "gender", "mention_str", "start_idx",
+            "end_idx"]
     extra = [c for c in per.columns if c not in core and c != "tag"]
     unified = (
-        per.join(membership, [scope_col, "mention_str"])
-        .join(chars, [scope_col, "char_id"])
-        .select(*core, *extra)
+        per.join(membership, "mention_str")
+        .join(chars, "char_id")
+        .select(*extra, *core)
     )
     if min_appearances > 0:
-        from pyspark.sql import Window
-
-        cnt = Window.partitionBy(scope_col, "char_id")
+        cnt = Window.partitionBy("char_id")
         unified = (
             unified.withColumn("_n", F.count(F.lit(1)).over(cnt))
             .filter(F.col("_n") >= min_appearances)

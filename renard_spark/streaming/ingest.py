@@ -8,9 +8,9 @@ recomputing the corpus. Because every KG stage is doc-local (tokens,
 entities, unification, edges, triples are all keyed by doc_id), a
 ``foreachBatch`` append of each micro-batch's stage outputs is exactly
 equivalent to a batch run over the union — no watermark or cross-batch
-state is needed. Cross-document stages (global entity tables via
-operators.unify_scale) are periodic batch jobs over the accumulated
-stage tables, not stream operators.
+state is needed. Cross-document stages (the global entity table of
+operators.unify_scale.unify_distributed) are periodic batch jobs over
+the accumulated stage tables, not stream operators.
 """
 
 from __future__ import annotations

@@ -37,7 +37,7 @@ def norm(df):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("correctness_check", cpus=16, shuffle_partitions=16)
+    spark = get_spark("correctness_check")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

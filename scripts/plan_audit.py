@@ -55,7 +55,7 @@ NLJ_ALLOWED = {
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("plan_audit", cpus=8, shuffle_partitions=8)
+    spark = get_spark("plan_audit")
     rows = []
     for name, fn in entrymod.queries().items():
         df = fn(spark, sf_dir)

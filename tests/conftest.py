@@ -10,5 +10,5 @@ from renard_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("renard_spark_tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("renard_spark_tests")
     yield s

@@ -63,9 +63,9 @@ def test_global_cross_document_unification(spark):
     docs = ingest.normalize_documents(corpus.generate_documents(spark, 20, seed=31))
     ents = ner.rule_ner_sentences(
         tokenize.sentence_tokens(docs), pipeline.default_gazetteer()
-    ).withColumn("corpus", F.lit("all"))
-    unified = unify_distributed(ents, scope_col="corpus")
-    chars = unified.select("corpus", "char_id", "names").distinct().collect()
+    )
+    unified = unify_distributed(ents)
+    chars = unified.select("char_id", "names").distinct().collect()
     # the cast is global: nicknames/titles unify ACROSS documents
     by_char = {tuple(r.names) for r in chars}
     assert any(

@@ -5,6 +5,7 @@ import random
 from renard_spark import corpus, pipeline
 from renard_spark.operators import ner, tokenize, unify
 from renard_spark.operators.cc import connected_components
+from renard_spark.operators.unify_core import unify_doc
 from renard_spark.operators.unify_scale import unify_distributed
 from renard_spark.sources import ingest
 
@@ -46,38 +47,47 @@ def test_cc_random_graphs(spark):
 
 
 def test_scale_path_matches_parity_path(spark):
+    """Per-document graph_rules_unify equals unify_doc per document, and
+    corpus-scope unify_distributed equals unify_doc over the pooled
+    mentions: same characters, genders and mention rows."""
     docs = ingest.normalize_documents(corpus.generate_documents(spark, 30, seed=51))
     ents = ner.rule_ner_sentences(
         tokenize.sentence_tokens(docs), pipeline.default_gazetteer()
     )
+    ent_rows = [r for r in ents.collect() if r.tag == "PER"]
 
-    parity = unify.graph_rules_unify(ents)
+    def rows(chars, doc_id=None):
+        return [
+            (doc_id, c["char_id"], tuple(c["names"]), c["gender"], m, s, e)
+            for c in chars
+            for m, s, e in c["mentions"]
+        ]
+
+    by_doc = {}
+    for r in ent_rows:
+        by_doc.setdefault(r.doc_id, []).append(
+            (r.mention_str, r.start_idx, r.end_idx))
+    want_doc = sorted(
+        row for d, ms in by_doc.items() for row in rows(unify_doc(ms), d))
+    got_doc = sorted(
+        (r.doc_id, r.char_id, tuple(r.names), r.gender, r.mention_str,
+         r.start_idx, r.end_idx)
+        for r in unify.graph_rules_unify(ents).collect()
+    )
+    assert got_doc == want_doc
+    # multi-name components exist, so the alias rules were exercised
+    assert any(len(names) > 1 for _, _, names, *_ in want_doc)
+
+    pooled = [(r.mention_str, r.start_idx, r.end_idx) for r in ent_rows]
+    want_all = sorted(rows(unify_doc(pooled)))
     scale = unify_distributed(ents)
-
-    def comp_sets(df):
-        out = {}
-        for r in df.select("doc_id", "char_id", "names").distinct().collect():
-            out.setdefault(r.doc_id, set()).add(tuple(r.names))
-        return out
-
-    p, s = comp_sets(parity), comp_sets(scale)
-    assert set(p) == set(s)
-    agree = sum(1 for d in p if p[d] == s[d])
-    # the per-component contradiction refinement makes the scale path
-    # EXACT w.r.t. the per-doc parity path
-    assert agree == len(p), {
-        d: (p[d], s[d]) for d in p if p[d] != s[d]
-    }
-
-    # mention rows: same (doc, char, mention) triples for agreeing docs
-    pm = {
-        (r.doc_id, r.char_id, r.mention_str, r.start_idx)
-        for r in parity.collect()
-        if p[r.doc_id] == s[r.doc_id]
-    }
-    sm = {
-        (r.doc_id, r.char_id, r.mention_str, r.start_idx)
+    got_all = sorted(
+        (None, r.char_id, tuple(r.names), r.gender, r.mention_str,
+         r.start_idx, r.end_idx)
         for r in scale.collect()
-        if p[r.doc_id] == s[r.doc_id]
-    }
-    assert pm == sm
+    )
+    assert got_all == want_all
+    # doc_id passes through: every mention keeps its document
+    assert sorted((r.doc_id, r.mention_str, r.start_idx)
+                  for r in scale.collect()) == sorted(
+        (r.doc_id, r.mention_str, r.start_idx) for r in ent_rows)

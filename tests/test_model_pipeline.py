@@ -1,13 +1,11 @@
 """Model-backed stages swapped into the preconfigured pipelines: a
 fake transformer NER that reproduces the rule tagger's decisions must
-yield identical triples end-to-end, and the distributed unification
-scale path must also work under a GLOBAL (cross-document) scope."""
+yield identical triples end-to-end, and the cross-document
+unify_distributed must equal unify_doc over the pooled mentions."""
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import functions as F
 
 from renard_spark import corpus, pipeline
 from renard_spark.operators import ner, tokenize, unify
@@ -69,16 +67,15 @@ def test_model_ner_pipeline_matches_rule_pipeline(spark):
 
 
 def test_global_scope_unification_matches_pooled_parity(spark):
-    """unify_distributed with a constant scope = one cross-document
-    entity table; must equal the pure-python unify_doc run on the
-    POOLED mention set (the shape per-doc execution cannot handle)."""
+    """unify_distributed = one cross-document entity table; must equal
+    the pure-python unify_doc run on the POOLED mention set (the shape
+    per-doc execution cannot handle)."""
     docs = ingest.normalize_documents(corpus.generate_documents(spark, 25, seed=23))
     ents = ner.rule_ner_sentences(
         tokenize.sentence_tokens(docs), pipeline.default_gazetteer()
     )
 
-    g = ents.withColumn("corpus", F.lit("all"))
-    scale = unify_distributed(g, scope_col="corpus")
+    scale = unify_distributed(ents)
     got = {
         tuple(r.names)
         for r in scale.select("char_id", "names").distinct().collect()

@@ -344,6 +344,87 @@ def test_graph_rules_unify_coref_path_matches_core(spark):
     assert got == want
 
 
+def test_graph_rules_unify_batch_boundary_equals_core(spark):
+    """7-row Arrow batches split every document across batches: the
+    single batch body must still see each document whole, with its
+    chains (a document with and without chains, and one whose chains
+    arrive with no PER mention), and equal unify_doc per document."""
+    from renard_spark.operators.unify_core import unify_doc
+
+    ents_rows = [
+        ("d1", "Elizabeth Bennet", 0, 2, "PER"),
+        ("d1", "Elizabeth", 5, 6, "PER"),
+        ("d1", "Lizzy", 9, 10, "PER"),
+        ("d1", "Mr Darcy", 12, 14, "PER"),
+        ("d1", "Darcy", 20, 21, "PER"),
+        ("d1", "Elizabeth", 25, 26, "PER"),
+        ("d1", "Lizzy", 30, 31, "PER"),
+        ("d1", "Darcy", 33, 34, "PER"),
+        ("d1", "Elizabeth", 40, 41, "PER"),
+        ("d2", "Bingley", 50, 51, "PER"),
+        ("d2", "Jane Bennet", 60, 62, "PER"),
+        ("d2", "Bingley", 70, 71, "PER"),
+    ] + [("d2", "Jane", 3 * i, 3 * i + 1, "PER") for i in range(9)]
+    chain_rows = [
+        ("d1", 0, 5, 6, "Elizabeth"), ("d1", 0, 7, 8, "she"),
+        ("d1", 0, 11, 12, "her"),
+        ("d1", 1, 12, 14, "Mr Darcy"), ("d1", 1, 15, 16, "he"),
+        ("d1", 1, 22, 23, "his"),
+        ("d1", 2, 43, 44, "they"), ("d1", 2, 47, 48, "them"),
+        ("d3", 0, 0, 1, "he"), ("d3", 0, 4, 5, "him"),
+        ("d3", 1, 8, 9, "she"),
+    ]
+    ents = spark.createDataFrame(
+        ents_rows,
+        "doc_id string, mention_str string, start_idx int, end_idx int,"
+        " tag string",
+    )
+    chains = spark.createDataFrame(
+        chain_rows,
+        "doc_id string, chain_id int, start_idx int, end_idx int,"
+        " mention_str string",
+    )
+
+    def want(min_appearances):
+        out = []
+        for doc in ("d1", "d2", "d3"):
+            ms = [(m, s, e) for d, m, s, e, _ in ents_rows if d == doc]
+            ch: dict[int, list] = {}
+            for d, cid, s, e, m in chain_rows:
+                if d == doc:
+                    ch.setdefault(cid, []).append((m, s, e))
+            out += [
+                (doc, c["char_id"], tuple(c["names"]), c["gender"], m, s, e)
+                for c in unify_doc(ms, list(ch.values()),
+                                   min_appearances=min_appearances)
+                for m, s, e in c["mentions"]
+            ]
+        return sorted(out)
+
+    def got(min_appearances):
+        return sorted(
+            (r.doc_id, r.char_id, tuple(r.names), r.gender, r.mention_str,
+             r.start_idx, r.end_idx)
+            for r in unify.graph_rules_unify(
+                ents, chains, min_appearances=min_appearances).collect()
+        )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        for k in (0, 3):
+            assert got(k) == want(k), k
+    finally:
+        spark.conf.set(key, old)
+    # the chains count: pronouns joined their characters, and the
+    # threshold dropped Bingley
+    rows = want(3)
+    assert ("d1", "Elizabeth", ("Elizabeth", "Elizabeth Bennet", "Lizzy"),
+            "UNKNOWN", "she", 7, 8) in rows
+    assert not any(r[0] == "d3" or r[1] == "Bingley" for r in rows)
+
+
 def test_most_frequent_name_tie_breaks_smallest(spark):
     unified = spark.createDataFrame(
         [

@@ -360,7 +360,7 @@ def test_unify_distributed_preserves_passthrough_columns(spark):
         "corpus string, doc_id string, mention_str string,"
         " start_idx int, end_idx int, tag string",
     )
-    out = unify_distributed(ents, scope_col="corpus")
+    out = unify_distributed(ents)
     assert "doc_id" in out.columns
     rows = {(r["doc_id"], r["mention_str"], r["char_id"])
             for r in out.collect()}
@@ -481,12 +481,15 @@ def test_gendered_presence_patterns_match_unify_doc():
 
 
 def test_token_blocking_equals_full_self_join(spark):
-    """pair_blocking='token' (the corpus-scope path: candidates via
-    token/hypocorism-family keys instead of a quadratic per-scope self
-    join) must produce EXACTLY the components of the full self-join on
-    a mixed corpus exercising every rule family."""
+    """Token/hypocorism-family blocking (unify_distributed's one pair
+    generator, in place of a quadratic self join over every name) must
+    produce EXACTLY the components of unify_doc's full pairwise pass
+    over the pooled mentions, on a mixed corpus exercising every rule
+    family; per document, graph_rules_unify equals unify_doc."""
     import random
 
+    from renard_spark.operators import unify
+    from renard_spark.operators.unify_core import unify_doc
     from renard_spark.operators.unify_scale import unify_distributed
 
     rng = random.Random(3)
@@ -500,28 +503,33 @@ def test_token_blocking_equals_full_self_join(spark):
     for d in range(12):
         names = rng.sample(pool, rng.randint(2, 8))
         for i, n in enumerate(names):
-            rows.append(("corpus", f"d{d}", n, i * 3, i * 3 + len(n.split()), "PER"))
+            rows.append((f"d{d}", n, i * 3, i * 3 + len(n.split()), "PER"))
     ents = spark.createDataFrame(
         rows,
-        "corpus string, doc_id string, mention_str string,"
-        " start_idx int, end_idx int, tag string",
+        "doc_id string, mention_str string, start_idx int, end_idx int,"
+        " tag string",
     )
 
     def labels(df):
         return {(r["doc_id"], r["mention_str"], r["char_id"])
                 for r in df.collect()}
 
-    full = labels(unify_distributed(ents, scope_col="corpus"))
-    blocked = labels(
-        unify_distributed(ents, scope_col="corpus", pair_blocking="token")
-    )
-    assert full == blocked
-    # and per-doc scope too
-    full_d = labels(unify_distributed(ents.drop("corpus")))
-    blocked_d = labels(
-        unify_distributed(ents.drop("corpus"), pair_blocking="token")
-    )
-    assert full_d == blocked_d
+    def core_labels(docs):
+        out = set()
+        for doc_rows in docs:
+            chars = unify_doc([(m, s, e) for _, m, s, e, _ in doc_rows])
+            char_of = {n: c["char_id"] for c in chars for n in c["names"]}
+            out |= {(d, m, char_of[m]) for d, m, *_ in doc_rows}
+        return out
+
+    pooled = core_labels([rows])
+    assert labels(unify_distributed(ents)) == pooled
+    # blocking had alias pairs to find: some global character is
+    # multi-name
+    assert len({c for *_, c in pooled}) < len({m for _, m, _ in pooled})
+    per_doc = core_labels(
+        [[r for r in rows if r[0] == f"d{d}"] for d in range(12)])
+    assert labels(unify.graph_rules_unify(ents)) == per_doc
 
 
 def test_interleaved_corpus_reassembles_exactly(spark):
