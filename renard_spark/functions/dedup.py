@@ -256,17 +256,12 @@ def dedup_clusters(
     survivor = lexicographically smallest id).
 
     Near-dup chains (A~B~C~…, boilerplate-heavy corpora) can exceed the
-    hash-to-min iteration budget; on ConvergenceError the O(log n)
-    large-star/small-star algorithm takes over, mirroring
-    ``unify_scale.unify_distributed``'s fallback.
+    hash-to-min round budget; ``connected_components`` then finishes
+    them with its O(log n) large-star/small-star rounds.
     """
     from pyspark.sql import types as T
 
-    from renard_spark.operators.cc import (
-        ConvergenceError,
-        connected_components,
-        connected_components_star,
-    )
+    from renard_spark.operators.cc import connected_components
 
     numeric = isinstance(
         docs.schema[id_col].dataType,
@@ -281,10 +276,7 @@ def dedup_clusters(
         "dst", F.col("src")
     )
     all_edges = edges.unionByName(singles)
-    try:
-        comp = connected_components(all_edges)
-    except ConvergenceError:
-        comp = connected_components_star(all_edges)
+    comp = connected_components(all_edges)
     if numeric or isinstance(docs.schema[id_col].dataType, T.StringType):
         # the internal key is invertible (zero-padding for numerics,
         # identity for strings): cast back directly instead of joining

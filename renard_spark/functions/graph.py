@@ -15,13 +15,24 @@ relational operators here:
   exactly like the connected-components loop (operators/cc.py). At
   cluster scale each round is a single shuffle keyed by node id;
   skewed hub nodes are AQE's skew-join case, not a driver loop's.
+- shortest distances: ``bfs_distances``, ``weighted_distances``,
+  ``bfs_paths`` and the multi-source ``harmonic_centrality`` /
+  ``eccentricity`` are thin callers of ONE keep-or-relax kernel
+  (``_relax``) over the checkpointed symmetric edge list
+  (``_symmetric``); they differ only in the carried key columns and
+  the relaxation step.
+- reachability: ``transitive_closure`` is ``grouped_transitive_closure``
+  with no group key — one doubling loop.
+- connected components (``spanning_forest``'s collapse step) come from
+  ``operators.cc.connected_components``, which owns the hash-to-min /
+  large-star-small-star decision.
 
 Everything is built-in-function only (JVM-side); no Python UDFs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -499,77 +510,104 @@ def k_core(
         )
 
 
+def _symmetric(
+    edges: DataFrame, src: str, dst: str, cost: str | None = None,
+) -> DataFrame:
+    """Checkpointed symmetric simple edge list (u, v[, c]) of the
+    undirected graph: self-loops dropped, parallel edges collapsed
+    (keeping the cheapest ``cost`` when one is given)."""
+    a, b = F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
+    if cost is None:
+        e = edges.select(a, b).filter(F.col("a") < F.col("b")).distinct()
+        c = []
+    else:
+        e = (
+            edges.select(a, b, F.col(cost).cast("double").alias("c"))
+            .filter(F.col("a") < F.col("b"))
+            .groupBy("a", "b")
+            .agg(F.min("c").alias("c"))
+        )
+        c = [F.col("c")]
+    both = F.array(
+        F.struct(F.col("a").alias("u"), F.col("b").alias("v"), *c),
+        F.struct(F.col("b").alias("u"), F.col("a").alias("v"), *c),
+    )
+    return (
+        e.select(F.explode(both).alias("p"))
+        .select("p.*")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _relax(
+    sym: DataFrame, state: DataFrame, step: Column,
+    keys: tuple[str, ...] = (),
+    iters: int | None = None, max_rounds: int = 64,
+) -> DataFrame:
+    """Keep-or-relax fixpoint shared by every shortest-distance
+    operator: ``state`` (*keys, node, d) → the per-(keys, node) minimum
+    ``d`` over all walks from the seeds. ``keys`` are carried through
+    untouched (none, or the BFS ``source``); ``step`` is the column
+    expression a message across edge (v → u) carries, over the state's
+    ``d`` and the ``sym`` row (``d + 1``, ``d + c``, or a (distance,
+    path) struct — min-of-struct is lexicographic).
+
+    Per round ONE left equi-join of the state onto ``sym`` and ONE
+    min-aggregation: each state row emits itself plus one message per
+    incident edge (the per-edge self-copies collapse in the min, which
+    ignores multiplicity). The state is referenced once per round, so a
+    fixed ``iters`` unroll is a linear chain that runs no job per round
+    — one execution, whose repeated sym-side exchanges AQE reuses.
+    ``iters=None`` runs to the fixpoint: the round truncates lazily and
+    ONE (row count, Σ d) probe materializes it — exact, since ``d``
+    only ever decreases (needs a numeric ``d``).
+    """
+    prev = None
+    for _ in range(iters if iters is not None else max_rounds):
+        emitted = F.array(
+            F.struct(F.col("node"), F.col("d")),
+            F.struct(F.col("u").alias("node"), step.alias("d")),
+        )
+        state = (
+            state.join(sym, sym["v"] == state["node"], "left")
+            .select(*keys, F.explode(emitted).alias("e"))
+            .select(*keys, "e.node", "e.d")
+            .filter(F.col("node").isNotNull())
+            .groupBy(*keys, "node")
+            .agg(F.min("d").alias("d"))
+        )
+        if iters is None:
+            state = state.localCheckpoint(eager=False)
+            sig = tuple(state.agg(F.count(F.lit(1)), F.sum("d")).first())
+            if sig == prev:
+                break
+            prev = sig
+    return state
+
+
 def bfs_distances(
     edges: DataFrame, source: str, src: str = "src", dst: str = "dst",
     iters: int | None = None, max_rounds: int = 64,
 ) -> DataFrame:
     """Unweighted hop distance from ``source`` to every reachable node
-    → (node, distance). Bulk-synchronous BFS: per round ONE equi-join
-    of the current distance vector onto the symmetric edge list + ONE
-    min-aggregation — each round is a single shuffle keyed by node id,
-    the shape that scales linearly in |E| per round on a cluster.
+    → (node, distance). Bulk-synchronous BFS (``_relax`` with step
+    +1): per round ONE equi-join of the current distance vector onto
+    the symmetric edge list + ONE min-aggregation — each round is a
+    single shuffle keyed by node id, the shape that scales linearly in
+    |E| per round on a cluster.
 
     Distances are monotone non-increasing once a node is reached and
     rounds past convergence are no-ops, so ``iters`` gives the fixed
     unroll an SQL oracle can mirror exactly (must exceed the graph's
     diameter — pytest-asserted vs networkx); ``iters=None`` runs to
-    the fixpoint (row count + sum stable)."""
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
+    the fixpoint."""
+    sym = _symmetric(edges, src, dst)
+    seed = edges.sparkSession.createDataFrame(
+        [(source, 0)], "node string, d int"
     )
-    both = F.array(
-        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-        F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-    )
-    sym = (
-        e.select(F.explode(both).alias("p"))
-        .select("p.u", "p.v")
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(source, 0)], "node string, distance int")
-    prev = None
-    rounds = iters if iters is not None else max_rounds
-    for i in range(rounds):
-        # keep-or-relax in ONE pass referencing dist ONCE: each
-        # distance row left-joins its incident edges and emits itself
-        # plus one (neighbor, d+1) message per edge. The self-copy is
-        # duplicated per edge, which the min-aggregation collapses, so
-        # the result is exactly the old union-then-min (min over a
-        # multiset ignores multiplicity). Single reference ⇒ the loop
-        # is a linear chain: in fixed-``iters`` mode no per-round
-        # truncation jobs at all — the whole unroll is ONE execution
-        # whose repeated sym-side exchanges AQE computes once (the old
-        # dist-union shape referenced dist twice, forcing an eager
-        # checkpoint job every round).
-        emitted = F.array(
-            F.struct(F.col("node"), F.col("distance")),
-            F.struct(
-                F.col("u").alias("node"),
-                (F.col("distance") + 1).alias("distance"),
-            ),
-        )
-        dist = (
-            dist.join(sym, sym["v"] == dist["node"], "left")
-            .select(F.explode(emitted).alias("e"))
-            .select("e.node", "e.distance")
-            .filter(F.col("node").isNotNull())
-            .groupBy("node")
-            .agg(F.min("distance").alias("distance"))
-        )
-        if iters is None:
-            # fixpoint mode: the probe materializes each round — keep
-            # per-round truncation so probes read blocks, not lineage
-            dist = dist.localCheckpoint(eager=True)
-            sig = (dist.count(), dist.agg(F.sum("distance")).first()[0])
-            if sig == prev:
-                break
-            prev = sig
-    return dist.select("node", F.col("distance").cast("long").alias("distance"))
+    dist = _relax(sym, seed, F.col("d") + 1, iters=iters,
+                  max_rounds=max_rounds)
+    return dist.select("node", F.col("d").cast("long").alias("distance"))
 
 
 def pmi_edges(
@@ -634,59 +672,17 @@ def weighted_distances(
 ) -> DataFrame:
     """Cheapest-path cost from ``source`` over a non-negative ``cost``
     column → (node, distance) — the weighted twin of ``bfs_distances``
-    (bulk-synchronous Bellman–Ford / min-plus): per round one equi-join
-    of the distance vector onto the symmetric edge list, add the edge
-    cost, take the per-node min. Monotone non-increasing ⇒ fixed
-    ``iters`` rounds (≥ the hop diameter) are oracle-unrollable;
-    ``iters=None`` runs to the fixpoint."""
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"),
-            F.col(cost).cast("double").alias("c"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.min("c").alias("c"))
+    (bulk-synchronous Bellman–Ford / min-plus: ``_relax`` with step
+    +cost). Monotone non-increasing ⇒ fixed ``iters`` rounds (≥ the hop
+    diameter) are oracle-unrollable; ``iters=None`` runs to the
+    fixpoint."""
+    sym = _symmetric(edges, src, dst, cost)
+    seed = edges.sparkSession.createDataFrame(
+        [(source, 0.0)], "node string, d double"
     )
-    both = F.array(
-        F.struct(F.col("a").alias("u"), F.col("b").alias("v"), F.col("c")),
-        F.struct(F.col("b").alias("u"), F.col("a").alias("v"), F.col("c")),
-    )
-    sym = (
-        e.select(F.explode(both).alias("p"))
-        .select("p.u", "p.v", "p.c")
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(source, 0.0)], "node string, distance double"
-    )
-    prev = None
-    rounds = iters if iters is not None else max_rounds
-    for i in range(rounds):
-        # single-reference keep-or-relax pass — see bfs_distances
-        emitted = F.array(
-            F.struct(F.col("node"), F.col("distance")),
-            F.struct(
-                F.col("u").alias("node"),
-                (F.col("distance") + F.col("c")).alias("distance"),
-            ),
-        )
-        dist = (
-            dist.join(sym, sym["v"] == dist["node"], "left")
-            .select(F.explode(emitted).alias("e"))
-            .select("e.node", "e.distance")
-            .filter(F.col("node").isNotNull())
-            .groupBy("node")
-            .agg(F.min("distance").alias("distance"))
-        )
-        if iters is None:
-            dist = dist.localCheckpoint(eager=True)
-            sig = (dist.count(), dist.agg(F.sum("distance")).first()[0])
-            if sig == prev:
-                break
-            prev = sig
-    return dist
+    dist = _relax(sym, seed, F.col("d") + F.col("c"), iters=iters,
+                  max_rounds=max_rounds)
+    return dist.select("node", F.col("d").alias("distance"))
 
 
 def harmonic_centrality(
@@ -726,65 +722,21 @@ def _multi_source_distances(
     edges: DataFrame, src: str, dst: str, sources: list | None,
     iters: int | None, max_rounds: int,
 ) -> DataFrame:
-    """Shared BSP multi-source BFS state → (source, node, distance);
-    see ``harmonic_centrality`` for the plan-shape discussion."""
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    both = F.array(
-        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-        F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-    )
-    sym = (
-        e.select(F.explode(both).alias("p"))
-        .select("p.u", "p.v")
-        .localCheckpoint(eager=True)
-    )
-    nodes = sym.select(F.col("u").alias("node")).distinct()
+    """Multi-source BFS state → (source, node, distance): ``_relax``
+    with the source carried as a key; see ``harmonic_centrality``."""
+    sym = _symmetric(edges, src, dst)
+    seeds = sym.select(F.col("u").alias("node")).distinct()
     if sources is not None:
-        spark = edges.sparkSession
-        want = spark.createDataFrame(
+        want = edges.sparkSession.createDataFrame(
             [(s,) for s in sources], ["node"]
         ).distinct()
-        seeds = nodes.join(want, "node")
-    else:
-        seeds = nodes
-    dist = seeds.select(
-        F.col("node").alias("source"), "node", F.lit(0).alias("distance")
+        seeds = seeds.join(want, "node")
+    state = seeds.select(
+        F.col("node").alias("source"), "node", F.lit(0).alias("d")
     )
-    prev = None
-    rounds = iters if iters is not None else max_rounds
-    for _ in range(rounds):
-        # single-reference keep-or-relax pass — see bfs_distances
-        emitted = F.array(
-            F.struct(F.col("node"), F.col("distance")),
-            F.struct(
-                F.col("u").alias("node"),
-                (F.col("distance") + 1).alias("distance"),
-            ),
-        )
-        dist = (
-            dist.join(sym, sym["v"] == dist["node"], "left")
-            .select(F.col("source"), F.explode(emitted).alias("e"))
-            .select("source", "e.node", "e.distance")
-            .filter(F.col("node").isNotNull())
-            .groupBy("source", "node")
-            .agg(F.min("distance").alias("distance"))
-        )
-        if iters is None:
-            dist = dist.localCheckpoint(eager=True)
-            cur = dist.agg(
-                F.count(F.lit(1)), F.sum("distance")
-            ).first()
-            state = (int(cur[0]), int(cur[1] or 0))
-            if state == prev:
-                break
-            prev = state
-    return dist
+    dist = _relax(sym, state, F.col("d") + 1, keys=("source",),
+                  iters=iters, max_rounds=max_rounds)
+    return dist.select("source", "node", F.col("d").alias("distance"))
 
 
 def eccentricity(
@@ -1572,47 +1524,18 @@ def transitive_closure(
     edges: DataFrame, src: str = "src", dst: str = "dst",
     max_rounds: int = 16,
 ) -> DataFrame:
-    """Reachability closure of a DIRECTED graph by iterative doubling
-    → (src, dst) for every src ->* dst path of length >= 1.
+    """Reachability closure of a DIRECTED graph → (src, dst) for every
+    src ->* dst path of length >= 1: ``grouped_transitive_closure``
+    with no group key.
 
     The ontology-reasoning primitive (rdfs:subClassOf*, partOf*,
-    SPARQL property paths) and the substrate for SCC detection. Each
-    round joins the current path set with itself (paths of length
-    <= 2^r after round r), so a diameter-D graph closes in ceil(log2
-    D) rounds — the right fixpoint shape for Spark, vs the
-    one-edge-per-round semi-naive loop's D rounds. Per round: ONE
-    self-equi-join on the midpoint + distinct, lineage truncated by
-    localCheckpoint; terminates EARLY when a round adds no rows (one
-    driver-side count per round, O(log D) of them).
-
-    The closure of a dense graph is O(V^2) rows — this operator is for
+    SPARQL property paths) and the substrate for SCC detection. The
+    closure of a dense graph is O(V^2) rows — this operator is for
     BOUNDED relation/ontology subgraphs (type hierarchies, typed-edge
     slices of the KG), not the raw co-occurrence network; callers
     slice first.
     """
-    # per round the path set feeds a self-join (three references), so
-    # it truncates — LAZILY, with the convergence count as the job
-    # that materializes the round (the cc.py probe-folding pattern;
-    # the old eager=True paid a dedicated RDD job per round on top of
-    # the count)
-    paths = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).distinct().localCheckpoint(eager=False)
-    n = paths.count()
-    for _ in range(max_rounds):
-        hop = paths.select(F.col("a").alias("m"), F.col("b"))
-        ext = (
-            paths.select("a", F.col("b").alias("m"))
-            .join(hop, "m")
-            .select("a", "b")
-        )
-        nxt = paths.unionByName(ext).distinct().localCheckpoint(eager=False)
-        n2 = nxt.count()
-        paths = nxt
-        if n2 == n:
-            break
-        n = n2
-    return paths.select(F.col("a").alias(src), F.col("b").alias(dst))
+    return grouped_transitive_closure(edges, None, src, dst, max_rounds)
 
 
 def strongly_connected(
@@ -1672,11 +1595,13 @@ def spanning_forest(
     (heaviest) outgoing edge — ONE join of the component labels onto
     the checkpointed edge list + ONE min-of-struct aggregation per
     endpoint side — then the picked edges' component-graph collapses
-    via the existing ``connected_components`` hash-to-min loop (a
-    COMPONENT-count-sized graph, halved every round, tiny next to the
-    edge list). Ties break deterministically by (weight, src, dst),
-    so the picked forest is unique and engine-reproducible even when
-    weights repeat (any MST's total weight is unique regardless).
+    via ``connected_components`` (hash-to-min, finished by
+    large-star/small-star rounds when a round's picks chain further
+    than its budget; a COMPONENT-count-sized graph, halved every
+    round, tiny next to the edge list). Ties break deterministically
+    by (weight, src, dst), so the picked forest is unique and
+    engine-reproducible even when weights repeat (any MST's total
+    weight is unique regardless).
 
     The early-exit test is one isEmpty on the cross-component edge
     slice; components halve per round, so max_rounds=16 covers 65k+
@@ -2109,46 +2034,19 @@ def bfs_paths(
     graphs this engine materializes, not for reconstructing 10^6-hop
     chains (use bfs_distances + on-demand backtracking there).
     """
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
+    sym = _symmetric(edges, src, dst)
+    seed = edges.sparkSession.createDataFrame(
+        [(source, (0, [source]))],
+        "node string, d struct<distance: int, path: array<string>>",
     )
-    both = F.array(
-        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-        F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
+    step = F.struct(
+        (F.col("d.distance") + 1).alias("distance"),
+        F.concat(F.col("d.path"), F.array(F.col("u"))).alias("path"),
     )
-    sym = (
-        e.select(F.explode(both).alias("p"))
-        .select("p.u", "p.v")
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    state = spark.createDataFrame(
-        [(source, 0, [source])],
-        "node string, distance int, path array<string>",
-    )
-    for _ in range(iters):
-        ext = sym.join(state, sym["v"] == state["node"]).select(
-            sym["u"].alias("node"),
-            (F.col("distance") + 1).alias("distance"),
-            F.concat(F.col("path"), F.array(sym["u"])).alias("path"),
-        )
-        state = (
-            state.unionByName(ext)
-            .groupBy("node")
-            .agg(F.min(F.struct("distance", "path")).alias("_s"))
-            .select(
-                "node",
-                F.col("_s.distance").alias("distance"),
-                F.col("_s.path").alias("path"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    state = _relax(sym, seed, step, iters=iters)
     return state.select(
-        "node", F.col("distance").cast("long").alias("distance"), "path"
+        "node", F.col("d.distance").cast("long").alias("distance"),
+        F.col("d.path").alias("path"),
     )
 
 
@@ -2519,45 +2417,47 @@ def temporal_reachability(
 
 def grouped_transitive_closure(
     edges: DataFrame,
-    group: str = "g",
+    group: str | None = "g",
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 16,
 ) -> DataFrame:
-    """Reachability closure of MANY directed graphs at once → (group,
-    src, dst) for every within-group src ->* dst path of length >= 1.
+    """Reachability closure of MANY directed graphs at once by
+    iterative doubling → (group, src, dst) for every within-group
+    src ->* dst path of length >= 1; ``group=None`` closes one graph
+    → (src, dst).
 
-    The per-named-graph companion of ``transitive_closure``: the group
-    id (a document, a named graph, a tenant) rides every join key, so
-    one iterative-doubling fixpoint closes 10^9 small graphs
-    simultaneously — round r covers paths of length <= 2^r in EVERY
-    group, and the early-stop count is global (one driver count per
-    round for all groups together, not per group). Per round: ONE
-    self-equi-join on (group, midpoint) + distinct, lineage truncated
-    by localCheckpoint.
+    The group id (a document, a named graph, a tenant, a transitive
+    predicate) rides every join key, so one fixpoint closes 10^9 small
+    graphs simultaneously. Each round joins the current path set with
+    itself on (group, midpoint), so round r covers paths of length
+    <= 2^r in EVERY group and a diameter-D graph closes in ceil(log2 D)
+    rounds — vs the one-edge-per-round semi-naive loop's D rounds. Per
+    round: ONE self-equi-join + distinct, lineage truncated by
+    localCheckpoint; terminates EARLY when a round adds no rows (one
+    global driver-side count per round, not per group).
 
-    Same caveat as the ungrouped closure, per group: a dense group's
-    closure is O(V_g^2) rows. The intended inputs are the bounded
-    per-document relation/co-occurrence graphs, where V_g is small
-    even when the number of groups is astronomical."""
-    # lazy per-round truncation; the global convergence count is the
-    # materializing job — see transitive_closure
+    A dense group's closure is O(V_g^2) rows. The intended inputs are
+    bounded relation/ontology subgraphs and the per-document relation
+    graphs, where V_g is small even when the number of groups is
+    astronomical."""
+    k = [] if group is None else ["g"]
+    g = [] if group is None else [F.col(group).alias("g")]
+    # per round the path set feeds a self-join (three references), so
+    # it truncates — LAZILY, with the convergence count as the job
+    # that materializes the round (the cc.py probe-folding pattern)
     paths = (
-        edges.select(
-            F.col(group).alias("g"),
-            F.col(src).alias("a"),
-            F.col(dst).alias("b"),
-        )
+        edges.select(*g, F.col(src).alias("a"), F.col(dst).alias("b"))
         .distinct()
         .localCheckpoint(eager=False)
     )
     n = paths.count()
     for _ in range(max_rounds):
-        hop = paths.select("g", F.col("a").alias("m"), "b")
+        hop = paths.select(*k, F.col("a").alias("m"), "b")
         ext = (
-            paths.select("g", "a", F.col("b").alias("m"))
-            .join(hop, ["g", "m"])
-            .select("g", "a", "b")
+            paths.select(*k, "a", F.col("b").alias("m"))
+            .join(hop, [*k, "m"])
+            .select(*k, "a", "b")
         )
         nxt = paths.unionByName(ext).distinct().localCheckpoint(eager=False)
         n2 = nxt.count()
@@ -2565,11 +2465,10 @@ def grouped_transitive_closure(
         if n2 == n:
             break
         n = n2
-    return paths.select(
-        F.col("g").alias(group),
-        F.col("a").alias(src),
-        F.col("b").alias(dst),
-    )
+    out = [F.col("a").alias(src), F.col("b").alias(dst)]
+    if group is not None:
+        out.insert(0, F.col("g").alias(group))
+    return paths.select(*out)
 
 
 def louvain_moves(

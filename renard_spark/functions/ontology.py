@@ -41,15 +41,6 @@ RANGE = "range"
 TYPE = "type"
 
 
-def _closure(edges: DataFrame, max_rounds: int) -> DataFrame:
-    """Reflexive-free transitive closure (a, b) of a schema-sized edge
-    table by iterative doubling; delegated to graph.transitive_closure
-    so ontology and property-path closures share one implementation."""
-    from renard_spark.functions.graph import transitive_closure
-
-    return transitive_closure(edges, src="a", dst="b", max_rounds=max_rounds)
-
-
 def rdfs_closure(
     facts: DataFrame,
     schema: DataFrame,
@@ -72,6 +63,8 @@ def rdfs_closure(
     like derived ones. ``max_rounds`` bounds the doubling closure of
     each hierarchy (covers depth 2**max_rounds).
     """
+    from renard_spark.functions.graph import transitive_closure
+
     s, p, o = subj, pred, obj
     sch = schema.select(
         F.col(s).alias("_s"), F.col(p).alias("_p"), F.col(o).alias("_o")
@@ -81,7 +74,7 @@ def rdfs_closure(
         e = sch.filter(F.col("_p") == kind).select(
             F.col("_s").alias("a"), F.col("_o").alias("b")
         )
-        return _closure(e, max_rounds)
+        return transitive_closure(e, "a", "b", max_rounds)
 
     sp_plus = hier(SUB_PROPERTY_OF)
     sc_plus = hier(SUB_CLASS_OF)
@@ -164,16 +157,18 @@ def owl_closure(
     derives new sameAs or schema triples from instance data):
 
       0. sameAs canonicalization FIRST: connected components over the
-         sameAs slice (hash-to-min CC — sameAs's own symmetry and
-         transitivity are inherent to components), then both fact
-         endpoints rewrite through the (corpus-scale, therefore
-         EQUI-joined, never broadcast) canonical map. Rewriting before
-         closure is what lets p(a,b), p(b',c), sameAs(b,b') chain.
+         sameAs slice (``connected_components``: hash-to-min, with
+         large-star/small-star rounds finishing sameAs chains too long
+         for it — sameAs's own symmetry and transitivity are inherent
+         to components), then both fact endpoints rewrite through
+         the (corpus-scale, therefore EQUI-joined, never broadcast)
+         canonical map. Rewriting before closure is what lets p(a,b),
+         p(b',c), sameAs(b,b') chain.
       1. one flip pass: inverseOf (both directions) + symmetric.
       2. per-transitive-predicate doubling closure with the PREDICATE
-         carried in the join key — one bulk job closes every
-         transitive property simultaneously; non-transitive facts
-         never enter the loop.
+         as the group key of ``grouped_transitive_closure`` — one bulk
+         job closes every transitive property simultaneously;
+         non-transitive facts never enter the loop.
       3. one more flip pass over the closed facts. This is a fixpoint:
          flip(closure(p-slice)) == closure(flip(p-slice)) == the
          q-closure stratum 2 already computed, so no new fact can
@@ -184,9 +179,10 @@ def owl_closure(
     once; iteration (CC rounds, doubling rounds) only ever touches the
     sameAs slice / the transitive-predicate slice, both lineage-
     truncated per round. ``max_rounds`` bounds the doubling (covers
-    path length 2**max_rounds) and the CC loop inherits
-    connected_components' fail-loud max_iter.
+    path length 2**max_rounds); the CC raises ConvergenceError only
+    when both of its round budgets run out.
     """
+    from renard_spark.functions.graph import grouped_transitive_closure
     from renard_spark.operators.cc import connected_components
 
     s, p, o = subj, pred, obj
@@ -242,22 +238,10 @@ def owl_closure(
     flipped = flip(base).localCheckpoint(eager=False)
 
     # stratum 2: pred-keyed doubling closure of the transitive slice
-    t = flipped.join(
-        F.broadcast(trp), flipped[p] == trp["_tp"]
-    ).select(s, p, o).distinct().localCheckpoint(eager=True)
-    n = t.count()
-    for _ in range(max_rounds):
-        hop = t.select(F.col(p).alias("_hp"), F.col(s).alias("_m"),
-                       F.col(o).alias("_ho"))
-        ext = t.join(
-            hop, (t[p] == hop["_hp"]) & (t[o] == hop["_m"])
-        ).select(F.col(s), F.col(p), F.col("_ho").alias(o))
-        nxt = t.unionByName(ext).distinct().localCheckpoint(eager=True)
-        n2 = nxt.count()
-        t = nxt
-        if n2 == n:
-            break
-        n = n2
+    t = grouped_transitive_closure(
+        flipped.join(F.broadcast(trp), flipped[p] == trp["_tp"]),
+        group=p, src=s, dst=o, max_rounds=max_rounds,
+    )
 
     non_trans = flipped.join(
         F.broadcast(trp), flipped[p] == trp["_tp"], "left_anti"

@@ -103,10 +103,7 @@ def cosine_topk_blocked(
     Like ``cosine_topk`` this is the per-bucket re-rank primitive at
     corpus scale (see module docstring); the block-pair cross join is
     n_blocks² rows of block structs, never row-level. Driver-side
-    scalar: one count (n). Sibling ``cosine_topk_arrow`` trades the
-    bit-exactness and the no-driver-collect property for a simpler
-    broadcast-matrix design (≤1e-9 value drift) — this one can sit
-    behind the value-hash gate."""
+    scalar: one count (n)."""
     import math
 
     import numpy as np
@@ -552,86 +549,6 @@ def srp_lsh_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def cosine_topk_arrow(
-    emb: DataFrame, k: int = 5, vec_col: str = "embedding",
-    id_col: str = "vec_id", max_candidates: int = 1_000_000,
-) -> DataFrame:
-    """BLAS path for the exact brute-force baseline — same contract as
-    ``cosine_topk`` (vec_id, neighbor_id, cosine, rank), built for the
-    places the baseline is declared legitimate: bucket/cell-scale
-    re-ranking where the candidate set is BOUNDED (n·d doubles must fit
-    one executor; corpus-scale exact search stays with the LSH/IVF
-    paths). The candidate matrix broadcasts once; every Arrow batch of
-    queries computes one Q@Mᵀ matmul and a per-row argpartition top-k —
-    vectorized numpy instead of n² scalar JVM folds, typically 10-100×
-    for dense dims. Ties break (cosine desc, neighbor_id asc) like the
-    JVM twin; numpy's SIMD summation can differ from the sequential
-    fold in final ulps, so equality with the twin is up to ~1e-9 (the
-    pytest tolerance), not bit-exact.
-
-    The bounded-candidate contract is ENFORCED: the collect below is
-    capped at ``max_candidates`` rows (default 1M ≈ a few GB of dense
-    doubles at d≤512) and raises rather than silently pulling a
-    corpus-scale table to the driver — corpus scope belongs to
-    ``cosine_topk`` / the LSH/IVF paths."""
-    import numpy as np
-    import pandas as pd
-
-    n = emb.limit(max_candidates + 1).count()
-    if n > max_candidates:
-        raise ValueError(
-            "cosine_topk_arrow is a bounded-candidate re-ranker: input "
-            "has > %d rows; use cosine_topk (blocked GEMM) or the "
-            "SRP/IVF ANN paths for corpus-scale search, or raise "
-            "max_candidates explicitly" % max_candidates
-        )
-    rows = emb.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows])
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    M = np.asarray([rows[i][1] for i in order], dtype=np.float64)
-    norms = np.linalg.norm(M, axis=1)
-    norms[norms == 0.0] = 1.0
-    b = emb.sparkSession.sparkContext.broadcast((ids, M, norms))
-
-    def run(batches):
-        ids_b, M_b, n_b = b.value
-        for pdf in batches:
-            out = []
-            Q = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            if len(Q) == 0:
-                continue
-            qn = np.linalg.norm(Q, axis=1)
-            qn[qn == 0.0] = 1.0
-            S = (Q @ M_b.T) / (qn[:, None] * n_b[None, :])
-            for qi, qid in enumerate(pdf[id_col]):
-                s = S[qi].copy()
-                s[ids_b == qid] = -np.inf  # exclude self
-                kk = min(k, (s > -np.inf).sum())
-                if kk == 0:
-                    continue
-                # top-k by (cosine desc, neighbor_id asc): full lexsort
-                # — exact under ties (an argpartition prefilter can
-                # drop the tie that id-order should have picked), and
-                # O(n log n) per row is nothing at the bounded sizes
-                # this path is for
-                cand = np.lexsort((ids_b, -s))[:kk]
-                for rank, ci in enumerate(cand, start=1):
-                    out.append((qid, ids_b[ci], float(S[qi, ci]), rank))
-            yield pd.DataFrame(
-                out, columns=["vec_id", "neighbor_id", "cosine", "rank"]
-            )
-
-    id_type = emb.schema[id_col].dataType.simpleString()
-    return emb.select(
-        F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col)
-    ).mapInPandas(
-        run,
-        schema=f"vec_id {id_type}, neighbor_id {id_type},"
-        " cosine double, rank int",
     )
 
 

@@ -7,55 +7,57 @@ unification), the per-doc UDF no longer applies and components must be
 computed as an iterative DataFrame algorithm (no graphframes in the
 environment).
 
-Two algorithms behind the same contract (edges → (vertex, component),
-component = lexicographically smallest vertex id in the component):
+One entry point, ``connected_components`` (edges → (vertex,
+component), component = lexicographically smallest vertex id in the
+component), runs two algorithms over one checkpointed symmetric edge
+list:
 
-- ``connected_components`` — min-label propagation (hash-to-min).
-  Rounds ≈ graph diameter; the right default for alias graphs, which
-  are star-ish (tiny diameter). Convergence is probed with ONE cheap
-  aggregate per round over the already-checkpointed frame (no extra
-  old-vs-new join), and non-convergence at ``max_iter`` raises instead
-  of silently returning partial labels.
-- ``connected_components_star`` — alternating large-star / small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14). O(log n) rounds regardless of diameter — the 100 TB path
-  for long-chain graphs.
+- min-label propagation (hash-to-min) first. Rounds ≈ graph diameter;
+  the right default for alias graphs, which are star-ish (tiny
+  diameter). Convergence is probed with ONE cheap aggregate per round
+  over the already-checkpointed frame (no extra old-vs-new join).
+- if that does not converge within ``HASH_TO_MIN_ROUNDS``, alternating
+  large-star / small-star rounds (Kiveris et al., "Connected
+  Components in MapReduce and Beyond", SoCC'14): O(log n) rounds
+  regardless of diameter — the path for long-chain graphs (near-dup
+  chains, long sameAs chains).
 
-Lineage is cut with ``localCheckpoint`` each round so plans stay flat.
+``ConvergenceError`` is raised only when both budgets run out: partial
+labels would silently split characters downstream. Lineage is cut
+with ``localCheckpoint`` each round so plans stay flat.
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# round budgets: hash-to-min needs about diameter + 1 rounds, star
+# O(log n) in the component size
+HASH_TO_MIN_ROUNDS = 50
+STAR_ROUNDS = 40
+
 
 class ConvergenceError(RuntimeError):
-    """Raised when an iterative algorithm hits max_iter before fixpoint."""
+    """Raised when an iterative algorithm exhausts its round budget."""
 
 
 def connected_components(
-    edges_df: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
+    edges_df: DataFrame, src: str = "src", dst: str = "dst",
 ) -> DataFrame:
     """edges (src,dst strings) → (vertex, component) where component is
     the lexicographically smallest vertex id in the component.
     Isolated vertices of interest should be passed as self-loops.
 
-    Raises ConvergenceError if max_iter rounds don't reach fixpoint
-    (diameter > max_iter): partial labels would silently split
-    characters downstream, so failing loudly is the only safe option —
-    callers with long-chain graphs should use
-    ``connected_components_star`` instead.
+    Hash-to-min first; a graph whose diameter exceeds its round budget
+    falls through to the large-star/small-star rounds. Raises
+    ConvergenceError only if those do not reach a fixpoint either.
     """
     # undirected symmetric closure + self loops — checkpointed ONCE:
-    # e is re-joined every round, and without the checkpoint each round
-    # would recompute the caller's whole upstream plan (e.g. the
-    # alias-rule Arrow UDF of unify_scale.unify_distributed)
+    # e is re-joined every round (and by the star fallback), and
+    # without the checkpoint each round would recompute the caller's
+    # whole upstream plan (e.g. the alias-rule Arrow UDF of
+    # unify_scale.unify_distributed)
     e = (
         edges_df.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges_df.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -68,8 +70,7 @@ def connected_components(
         .withColumn("component", F.col("vertex"))
         .localCheckpoint()
     )
-    converged = False
-    for _ in range(max_iter):
+    for _ in range(HASH_TO_MIN_ROUNDS):
         # candidate labels: own label + neighbors' labels
         nbr = (
             e.join(comp.withColumnRenamed("vertex", "b").withColumnRenamed(
@@ -96,14 +97,9 @@ def connected_components(
         changed = upd.filter(F.col("component") != F.col("_old")).count()
         comp = upd.select("vertex", "component")
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise ConvergenceError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter too large) — use connected_components_star"
-        )
-    return comp
+            return comp
+    # long-chain graph (diameter ≥ the budget): O(log n)-round variant
+    return _star_components(e)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -141,26 +137,22 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    edges_df: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 40,
-) -> DataFrame:
-    """Large-star/small-star connected components — O(log n) rounds,
-    independent of graph diameter (Kiveris et al., SoCC'14). Same
-    contract as ``connected_components``. Convergence = the directed
-    low-edge set is a fixpoint of a full round, probed by (count,
-    hash-sum) equality over checkpointed frames.
+def _star_components(edges: DataFrame) -> DataFrame:
+    """Large-star/small-star rounds over an (a, b) edge list → (vertex,
+    component) under the ``connected_components`` contract — O(log n)
+    rounds, independent of graph diameter (Kiveris et al., SoCC'14).
+    Convergence = the directed low-edge set is a fixpoint of a full
+    round, probed by (count, hash-sum) equality over checkpointed
+    frames; raises ConvergenceError after ``STAR_ROUNDS`` rounds.
     """
     verts = (
-        edges_df.select(F.col(src).alias("vertex"))
-        .union(edges_df.select(F.col(dst).alias("vertex")))
+        edges.select(F.col("a").alias("vertex"))
+        .union(edges.select(F.col("b").alias("vertex")))
         .distinct()
         .localCheckpoint()
     )
     e = (
-        edges_df.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+        edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
         .filter(F.col("x") != F.col("y"))
         .distinct()
         .localCheckpoint()
@@ -176,8 +168,7 @@ def connected_components_star(
 
     prev_sig: tuple[int, int] | None = None
     prev_e: DataFrame | None = None
-    converged = False
-    for _ in range(max_iter):
+    for _ in range(STAR_ROUNDS):
         sym = e.union(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
         sym = sym.select(F.col("x").alias("a"), F.col("y").alias("b"))
         e = _large_star(sym)
@@ -185,29 +176,30 @@ def connected_components_star(
         sym2 = sym2.select(F.col("x").alias("a"), F.col("y").alias("b"))
         e = _small_star(sym2).localCheckpoint()
         sig = _sig(e)
-        if sig == prev_sig and prev_e is not None:
-            # The (count, bit_xor(xxhash64)) signature can never report
-            # a false "changed" on equal sets, but it CAN report a
-            # false fixpoint on a hash collision between unequal sets —
-            # which would silently return partial labels. Confirm with
-            # ONE exact anti-join (counts already match and both frames
-            # are distinct, so one direction suffices) before trusting.
-            if e.join(prev_e, ["x", "y"], "left_anti").limit(1).count() == 0:
-                converged = True
-                break
+        # The (count, bit_xor(xxhash64)) signature can never report a
+        # false "changed" on equal sets, but it CAN report a false
+        # fixpoint on a hash collision between unequal sets — which
+        # would silently return partial labels. Confirm with ONE exact
+        # anti-join (counts already match and both frames are
+        # distinct, so one direction suffices) before trusting.
+        if sig == prev_sig and (
+            e.join(prev_e, ["x", "y"], "left_anti").limit(1).count() == 0
+        ):
+            # At fixpoint the edge set is a star forest: (member, center).
+            labels = e.select(
+                F.col("x").alias("vertex"), F.col("y").alias("component")
+            )
+            centers = verts.join(
+                labels.select("vertex"), "vertex", "left_anti"
+            ).withColumn("component", F.col("vertex"))
+            return labels.unionByName(centers)
         prev_sig = sig
         prev_e = e
-    if not converged:
-        warnings.warn(
-            f"connected_components_star: no fixpoint after {max_iter} "
-            "rounds — labels may be partial"
-        )
-    # At fixpoint the edge set is a star forest: (member, center).
-    labels = e.select(F.col("x").alias("vertex"), F.col("y").alias("component"))
-    centers = verts.join(
-        labels.select("vertex"), "vertex", "left_anti"
-    ).withColumn("component", F.col("vertex"))
-    return labels.unionByName(centers)
+    raise ConvergenceError(
+        f"connected_components did not converge: {HASH_TO_MIN_ROUNDS} "
+        f"hash-to-min rounds, then {STAR_ROUNDS} large-star/small-star "
+        "rounds"
+    )
 
 
 def incremental_components(
@@ -215,7 +207,6 @@ def incremental_components(
     new_edges_df: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Maintain a components assignment as new edges arrive — the
     continuously-built KG's alias table should NOT recompute CC over
@@ -239,6 +230,4 @@ def incremental_components(
         F.col("vertex").alias(src), F.col("component").alias(dst)
     )
     batch = new_edges_df.select(src, dst)
-    return connected_components(
-        star.unionByName(batch), src=src, dst=dst, max_iter=max_iter
-    )
+    return connected_components(star.unionByName(batch), src=src, dst=dst)

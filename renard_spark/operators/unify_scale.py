@@ -28,11 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from renard_spark.functions.names import parse_name
-from renard_spark.operators.cc import (
-    ConvergenceError,
-    connected_components,
-    connected_components_star,
-)
+from renard_spark.operators.cc import connected_components
 from renard_spark.operators.unify_core import (
     _name_features,
     alias_components,
@@ -187,12 +183,7 @@ def unify_distributed(
     all_edges = linked.select(
         F.col("n1").alias("src"), F.col("n2").alias("dst")
     ).unionByName(singles)
-    try:
-        # alias graphs are star-ish (tiny diameter) — hash-to-min wins
-        comp0 = connected_components(all_edges)
-    except ConvergenceError:
-        # pathological long-chain alias graph: O(log n)-round variant
-        comp0 = connected_components_star(all_edges)
+    comp0 = connected_components(all_edges)
     membership0 = comp0.select(
         F.col("vertex").alias("mention_str"), F.col("component").alias("comp0")
     )

@@ -183,30 +183,6 @@ def test_event_windows_and_sessions(spark):
     assert sess == {(1, 0): 2, (1, 1): 1, (2, 0): 1}
 
 
-def test_cosine_topk_arrow_matches_jvm_twin(spark):
-    import random
-
-    from renard_spark.functions.similarity import cosine_topk, cosine_topk_arrow
-
-    rng = random.Random(7)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(60)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    jvm = {
-        (r.vec_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in cosine_topk(emb, k=4).collect()
-    }
-    arrow = {
-        (r.vec_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in cosine_topk_arrow(emb, k=4).collect()
-    }
-    assert set(jvm) == set(arrow)
-    for key, (nid, cos) in jvm.items():
-        aid, acos = arrow[key]
-        assert aid == nid and abs(acos - cos) < 1e-9, key
-
-
 def _semdedup_oracle(vecs, n_centroids, threshold):
     """Brute-force SemDeDup: md5-sampled codebook, nearest-cell
     assignment, within-cell pairwise cosine, keep-smallest-id."""
@@ -702,8 +678,7 @@ def test_normalize_text_rules(spark):
 
 def test_cosine_topk_blocked_bit_exact(spark):
     """The blocked-GEMM path must equal the JVM fold BIT-EXACTLY
-    (values, ties, ranks) — that is its contract vs cosine_topk_arrow
-    (which allows ulp drift). Multiple blocks exercised."""
+    (values, ties, ranks). Multiple blocks exercised."""
     import random
 
     from renard_spark.functions.similarity import (

@@ -10,11 +10,8 @@ from pyspark.sql import functions as F
 from renard_spark.functions import dedup, retrieval, similarity
 from renard_spark.io.catalog import get_catalog
 from renard_spark.operators import cooccur, unify
-from renard_spark.operators.cc import (
-    ConvergenceError,
-    connected_components,
-    connected_components_star,
-)
+import renard_spark.operators.cc as cc_mod
+from renard_spark.operators.cc import ConvergenceError, connected_components
 from renard_spark.operators.unify_scale import unify_distributed
 from renard_spark.streaming.ingest import write_batch_tables
 
@@ -44,27 +41,33 @@ def test_cc_star_random_graphs(spark):
     edges = [tuple(rng.sample(vertices, 2)) for _ in range(110)]
     edges += [(v, v) for v in vertices]  # isolates as self-loops
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r.vertex: r.component for r in connected_components_star(df).collect()}
+    got = {r.vertex: r.component for r in connected_components(df).collect()}
     assert got == _union_find_truth(vertices, edges)
 
 
 def test_cc_star_long_chain(spark):
-    # path graph of diameter 60: hash-to-min would need 60 rounds,
-    # large-star/small-star collapses it in O(log n)
+    # path graph of diameter 60: hash-to-min would need 61 rounds, more
+    # than its budget, so connected_components finishes it with the
+    # O(log n) large-star/small-star rounds
+    assert cc_mod.HASH_TO_MIN_ROUNDS < 61
     vertices = [f"c{i:03d}" for i in range(61)]
     edges = [(vertices[i], vertices[i + 1]) for i in range(60)]
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r.vertex: r.component for r in connected_components_star(df, max_iter=12).collect()}
+    got = {r.vertex: r.component for r in connected_components(df).collect()}
     assert set(got) == set(vertices)
     assert set(got.values()) == {"c000"}
 
 
-def test_cc_raises_on_non_convergence(spark):
+def test_cc_raises_on_non_convergence(spark, monkeypatch):
+    # both budgets too small for a 20-vertex chain: hash-to-min needs
+    # 20 rounds, and one star round can never confirm a fixpoint
+    monkeypatch.setattr(cc_mod, "HASH_TO_MIN_ROUNDS", 3)
+    monkeypatch.setattr(cc_mod, "STAR_ROUNDS", 1)
     vertices = [f"c{i:03d}" for i in range(20)]
     edges = [(vertices[i], vertices[i + 1]) for i in range(19)]
     df = spark.createDataFrame(edges, "src string, dst string")
     with pytest.raises(ConvergenceError):
-        connected_components(df, max_iter=3)
+        connected_components(df)
 
 
 # ------------------------------------------------------------- simhash

@@ -40,19 +40,18 @@ def test_dedup_clusters_numeric_min_not_lexicographic(spark):
     assert out[7]["cluster_id"] == 7 and out[7]["keep"] == 1
 
 
-def test_dedup_clusters_falls_back_to_star(spark, monkeypatch):
-    """On ConvergenceError (long near-dup chains) the star algorithm
-    takes over instead of crashing the dedup action (ADVICE medium)."""
-
-    def boom(*a, **k):
-        raise cc_mod.ConvergenceError("forced")
-
-    monkeypatch.setattr(cc_mod, "connected_components", boom)
-    docs = spark.createDataFrame([(1,), (2,), (3,)], ["doc_id"])
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], ["doc_a", "doc_b"])
-    out = {r["doc_id"]: r["cluster_id"] for r in
+def test_dedup_clusters_falls_back_to_star(spark):
+    """A near-dup chain longer than the hash-to-min budget is finished
+    by the star rounds instead of crashing the dedup action (ADVICE
+    medium)."""
+    n = cc_mod.HASH_TO_MIN_ROUNDS + 11
+    docs = spark.createDataFrame([(i,) for i in range(1, n + 1)], ["doc_id"])
+    pairs = spark.createDataFrame(
+        [(i + 1, i) for i in range(1, n)], ["doc_a", "doc_b"]
+    )
+    out = {r["doc_id"]: (r["cluster_id"], r["keep"]) for r in
            dedup_clusters(docs, pairs).collect()}
-    assert out == {1: 1, 2: 1, 3: 1}
+    assert out == {i: (1, int(i == 1)) for i in range(1, n + 1)}
 
 
 # ------------------------------------------------------- model cache keying
@@ -117,8 +116,8 @@ def test_cc_star_labels_match_hash_to_min(spark):
     )
     lab1 = {r["vertex"]: r["component"]
             for r in cc_mod.connected_components(edges).collect()}
-    lab2 = {r["vertex"]: r["component"]
-            for r in cc_mod.connected_components_star(edges).collect()}
+    lab2 = {r["vertex"]: r["component"] for r in
+            cc_mod._star_components(edges.toDF("a", "b")).collect()}
     assert lab1 == lab2 == {
         "a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "q": "q",
     }

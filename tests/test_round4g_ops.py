@@ -104,6 +104,23 @@ def test_owl_closure_no_sameas_is_identity_plus_rules(spark):
     assert got == {("a", "scans", "b"), ("b", "scanned_by", "a")}
 
 
+def test_owl_closure_long_sameas_chain(spark):
+    """A 60-link sameAs chain is longer than the hash-to-min budget;
+    the canonical rewrite still maps every alias to the chain's
+    smallest id (the CC finishes it with large-star/small-star)."""
+    ids = [f"e{i:03d}" for i in range(61)]
+    facts = [(ids[i], SAME_AS, ids[i + 1]) for i in range(60)]
+    facts += [(e, "knows", "x") for e in ids] + [("y", "likes", ids[-1])]
+    df = spark.createDataFrame(
+        facts, "subj string, pred string, obj string"
+    )
+    schema = spark.createDataFrame(
+        OWL_SCHEMA, "subj string, pred string, obj string"
+    )
+    got = {tuple(r) for r in owl_closure(df, schema).collect()}
+    assert got == {("e000", "knows", "x"), ("y", "likes", "e000")}
+
+
 TRIPLES = [
     ("a", "scans", "b"),
     ("a", "scans", "sink"),

@@ -1,7 +1,5 @@
 """Round-5 advisory fixes (VERDICT.md round-4 items 4/8 + ADVICE.md):
 
-- cosine_topk_arrow's bounded-candidate contract is enforced, not
-  just documented (ValueError past max_candidates);
 - link_prediction_ranks dedupes its input (duplicate triples no
   longer double-discount the filtered rank) and raises on entities
   missing from a supplied embedding table;
@@ -20,23 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from renard_spark.functions.kgembed import link_prediction_ranks
-from renard_spark.functions.similarity import cosine_topk_arrow
 from renard_spark.streaming.events import stream_interval_join
-
-
-def test_cosine_topk_arrow_cap_enforced(spark):
-    emb = spark.range(12).select(
-        F.col("id").alias("vec_id"),
-        F.array(
-            (F.col("id") % 3).cast("double"),
-            (F.col("id") % 5).cast("double"),
-        ).alias("embedding"),
-    )
-    with pytest.raises(ValueError, match="bounded-candidate"):
-        cosine_topk_arrow(emb, k=2, max_candidates=10)
-    # at or under the cap it still runs
-    out = cosine_topk_arrow(emb, k=2, max_candidates=12)
-    assert out.count() == 24
 
 
 def test_link_prediction_ranks_duplicate_input_is_deduped(spark):

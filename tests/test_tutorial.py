@@ -15,7 +15,7 @@ def test_tutorial_end_to_end(tmp_path):
     out = str(tmp_path / "art")
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "tutorial.py"),
-         "--docs", "40", "--out", out, "--cpus", "4"],
+         "--docs", "40", "--out", out],
         capture_output=True, text=True, timeout=600, cwd=REPO,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]

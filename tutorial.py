@@ -36,12 +36,10 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--docs", type=int, default=120)
     ap.add_argument("--out", default="/tmp/renard_tutorial")
-    ap.add_argument("--cpus", type=int, default=8)
     args = ap.parse_args()
     os.makedirs(args.out, exist_ok=True)
 
-    spark = get_spark("renard_tutorial", cpus=args.cpus,
-                      shuffle_partitions=args.cpus)
+    spark = get_spark("renard_tutorial")
 
     # ------------------------------------------------------------------
     # 1. A document table. The reference opens one novel from disk; the
