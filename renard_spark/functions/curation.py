@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from renard_spark.plans.stage import Stage
+
 
 def curate(
     docs: DataFrame,
@@ -49,7 +51,8 @@ def curate(
     normalize: bool = False,
 ) -> DataFrame:
     """→ (doc_id, cluster_id, keep_dedup, quality_score, contam_frac,
-    keep, split) — one row per training-candidate document.
+    keep, split) — one row per training-candidate document: the
+    ``curated`` table of :func:`curation_stages`, composed lazily.
 
     Scores and fractions are rounded to 6 decimals BEFORE the argmax /
     threshold comparisons (both engines, same rule), so last-ulp float
@@ -60,31 +63,94 @@ def curate(
     unicode-punctuation variants of one document dedup and
     decontaminate as the same bytes.
     """
+    from renard_spark import pipeline
+
+    stages = curation_stages(
+        shingle_w=shingle_w, num_hashes=num_hashes, bands=bands,
+        jaccard_threshold=jaccard_threshold, contam_w=contam_w,
+        quality_min=quality_min, contam_max=contam_max,
+        split_fracs=split_fracs, split_salt=split_salt, normalize=normalize,
+    )
+    inputs = {"documents": docs, "benchmark": bench}
+    return pipeline.compose(stages, inputs, persist=False)["curated"]
+
+
+def curation_stages(
+    *,
+    shingle_w: int,
+    num_hashes: int,
+    bands: int,
+    jaccard_threshold: float,
+    contam_w: int,
+    quality_min: float,
+    contam_max: float,
+    split_fracs: dict[str, float] | None,
+    split_salt: str,
+    normalize: bool,
+) -> list[Stage]:
+    """The curation DAG over the inputs ``documents`` and ``benchmark``,
+    in dependency order: (normalize →) near-dup pairs, quality,
+    contamination → dedup decisions → ``curated``; the parameters are
+    :func:`curate`'s. Each stage's config holds the parameters its fn
+    reads."""
     from renard_spark.functions import contamination, dedup, text
 
     if split_fracs is None:
         split_fracs = {"train": 0.8, "val": 0.1, "test": 0.1}
-    if normalize:
-        docs = text.normalize_text(docs, out_col="text")
-        bench = text.normalize_text(bench, out_col="text")
-
-    pairs = dedup.minhash_dedup(
-        docs, w=shingle_w, num_hashes=num_hashes, bands=bands,
+    dedup_cfg = dict(
+        w=shingle_w, num_hashes=num_hashes, bands=bands,
         threshold=jaccard_threshold,
     )
-    qual = text.quality_scores(docs).select(
-        "doc_id", F.round("quality_score", 6).alias("quality_score")
-    )
-    kb = dedup.dedup_keep_best(docs, pairs, qual).select(
-        "doc_id", "cluster_id",
-        F.col("keep").cast("long").alias("keep_dedup"),
-    )
-    contam = contamination.ngram_contamination(docs, bench, w=contam_w).select(
-        "doc_id", F.round("frac", 6).alias("contam_frac")
-    )
-    return _decide(
-        kb, qual, contam, quality_min, contam_max, split_fracs, split_salt
-    )
+    stages = []
+    doc_src, bench_src = "documents", "benchmark"
+    if normalize:
+        # normalization as stages of their own: the cleaned tables are
+        # what every downstream stage (and a resumed run) reads
+        doc_src, bench_src = "documents_norm", "benchmark_norm"
+        stages += [
+            Stage("documents_norm", ["documents"],
+                  lambda sp, d: text.normalize_text(d, out_col="text")),
+            Stage("benchmark_norm", ["benchmark"],
+                  lambda sp, b: text.normalize_text(b, out_col="text")),
+        ]
+    return stages + [
+        Stage(
+            "near_dup_pairs", [doc_src],
+            lambda sp, d: dedup.minhash_dedup(d, **dedup_cfg),
+            dedup_cfg,
+        ),
+        Stage(
+            "quality", [doc_src],
+            lambda sp, d: text.quality_scores(d).select(
+                "doc_id",
+                F.round("quality_score", 6).alias("quality_score"),
+            ),
+        ),
+        Stage(
+            "contamination", [doc_src, bench_src],
+            lambda sp, d, b: contamination.ngram_contamination(
+                d, b, w=contam_w
+            ).select("doc_id", F.round("frac", 6).alias("contam_frac")),
+            {"w": contam_w},
+        ),
+        Stage(
+            "dedup_decisions", [doc_src, "near_dup_pairs", "quality"],
+            lambda sp, d, p, q: dedup.dedup_keep_best(d, p, q).select(
+                "doc_id", "cluster_id",
+                F.col("keep").cast("long").alias("keep_dedup"),
+            ),
+        ),
+        Stage(
+            "curated", ["dedup_decisions", "quality", "contamination"],
+            lambda sp, kb, q, c: _decide(
+                kb, q, c, quality_min, contam_max, split_fracs, split_salt
+            ),
+            {
+                "quality_min": quality_min, "contam_max": contam_max,
+                "split_fracs": split_fracs, "split_salt": split_salt,
+            },
+        ),
+    ]
 
 
 def _decide(
@@ -92,9 +158,8 @@ def _decide(
     quality_min: float, contam_max: float,
     split_fracs: dict[str, float], split_salt: str,
 ) -> DataFrame:
-    """Final decision join shared by ``curate`` and the staged
-    pipeline: doc-count-sized equi-joins + the keep predicate + split
-    label."""
+    """The ``curated`` stage: doc-count-sized equi-joins + the keep
+    predicate + split label."""
     from renard_spark.functions import sampling
 
     base = kb.join(qual, "doc_id").join(contam, "doc_id")
@@ -131,78 +196,26 @@ def curation_pipeline(
     rerun_from: str | None = None,
     force: bool = False,
 ) -> dict[str, DataFrame]:
-    """``curate`` as a CHECKPOINT-RESUMABLE staged pipeline: each stage
-    persists to a catalog table with a manifest config-hash, so a
-    restarted job (or one with only the thresholds changed) re-executes
-    only the invalidated suffix — changing ``quality_min`` recomputes
-    the cheap decision join, never the shingle/band stages. Per-stage
+    """``curate`` as a CHECKPOINT-RESUMABLE staged pipeline: the same
+    :func:`curation_stages` run by ``StageRunner``, each stage persisted
+    to a catalog table with a manifest config-hash, so a restarted job
+    (or one with only the thresholds changed) re-executes only the
+    invalidated suffix — changing ``quality_min`` recomputes the cheap
+    decision join, never the shingle/band stages. Per-stage
     per-partition row/doc metrics land in the ``_metrics`` table like
-    every other staged run. Returns {stage: DataFrame}; the final
-    table is ``curated`` (same schema as :func:`curate`)."""
-    from renard_spark.functions import contamination, dedup, text
+    every other staged run. Returns {stage: DataFrame}; the final table
+    is ``curated`` (same schema as :func:`curate`)."""
     from renard_spark.io.catalog import get_catalog
     from renard_spark.plans.stage import StageRunner
 
-    if split_fracs is None:
-        split_fracs = {"train": 0.8, "val": 0.1, "test": 0.1}
-    cat = get_catalog(spark, workdir)
     r = StageRunner(
-        spark, cat, inputs={"documents": docs, "benchmark": bench}
+        spark, get_catalog(spark, workdir),
+        inputs={"documents": docs, "benchmark": bench},
     )
-    dedup_cfg = dict(
-        w=shingle_w, num_hashes=num_hashes, bands=bands,
-        threshold=jaccard_threshold,
-    )
-    doc_src, bench_src = "documents", "benchmark"
-    if normalize:
-        # normalization as checkpointed stages: the cleaned tables are
-        # what every downstream stage (and a resumed run) reads
-        doc_src, bench_src = "documents_norm", "benchmark_norm"
-        r.add(
-            "documents_norm", ["documents"],
-            lambda sp, d: text.normalize_text(d, out_col="text"),
-            config={},
-        )
-        r.add(
-            "benchmark_norm", ["benchmark"],
-            lambda sp, b: text.normalize_text(b, out_col="text"),
-            config={},
-        )
-    r.add(
-        "near_dup_pairs", [doc_src],
-        lambda sp, d: dedup.minhash_dedup(d, **dedup_cfg),
-        config=dedup_cfg,
-    )
-    r.add(
-        "quality", [doc_src],
-        lambda sp, d: text.quality_scores(d).select(
-            "doc_id", F.round("quality_score", 6).alias("quality_score")
-        ),
-        config={},
-    )
-    r.add(
-        "contamination", [doc_src, bench_src],
-        lambda sp, d, b: contamination.ngram_contamination(
-            d, b, w=contam_w
-        ).select("doc_id", F.round("frac", 6).alias("contam_frac")),
-        config={"w": contam_w},
-    )
-    r.add(
-        "dedup_decisions", [doc_src, "near_dup_pairs", "quality"],
-        lambda sp, d, p, q: dedup.dedup_keep_best(d, p, q).select(
-            "doc_id", "cluster_id",
-            F.col("keep").cast("long").alias("keep_dedup"),
-        ),
-        config={},
-    )
-    r.add(
-        "curated", ["dedup_decisions", "quality", "contamination"],
-        lambda sp, kb, q, c: _decide(
-            kb, q, c, quality_min, contam_max, split_fracs, split_salt
-        ),
-        config={
-            "quality_min": quality_min, "contam_max": contam_max,
-            "split_fracs": split_fracs, "split_salt": split_salt,
-        },
+    r.stages = curation_stages(
+        shingle_w=shingle_w, num_hashes=num_hashes, bands=bands,
+        jaccard_threshold=jaccard_threshold, contam_w=contam_w,
+        quality_min=quality_min, contam_max=contam_max,
+        split_fracs=split_fracs, split_salt=split_salt, normalize=normalize,
     )
     return r.run(rerun_from=rerun_from, force=force)

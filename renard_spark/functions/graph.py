@@ -9,12 +9,18 @@ relational operators here:
 
 - degree / strength: one symmetrize-union + one map-side-combined
   aggregation — no joins, no iteration.
-- PageRank: an iterative DataFrame fixpoint — per round ONE equi-join
-  (ranks → out-edges) and ONE aggregation (contributions → new ranks),
-  with lineage truncated by ``localCheckpoint`` every few rounds
-  exactly like the connected-components loop (operators/cc.py). At
-  cluster scale each round is a single shuffle keyed by node id;
-  skewed hub nodes are AQE's skew-join case, not a driver loop's.
+- rank propagation: ``pagerank``, ``personalized_pagerank`` and
+  ``katz_centrality`` (and ``text.textrank_scores``) are thin callers
+  of ONE power-iteration kernel (``_propagate``): per round ONE
+  equi-join (scores → the edge list) and ONE aggregation
+  (contributions → new scores). Only the iteration-invariant edge list
+  is checkpointed; the score vector is a linear chain, so the unrolled
+  plan stays shallow on that leaf. At cluster scale each round is a
+  single shuffle keyed by node id; skewed hub nodes are AQE's
+  skew-join case, not a driver loop's.
+- simple edges: operators that reduce an edge table to the undirected
+  simple graph read ``_canonical`` (one row per unordered pair,
+  a < b) or its symmetric view ``_symmetric``.
 - shortest distances: ``bfs_distances``, ``weighted_distances``,
   ``bfs_paths`` and the multi-source ``harmonic_centrality`` /
   ``eccentricity`` are thin callers of ONE keep-or-relax kernel
@@ -83,63 +89,79 @@ def degrees(
     )
 
 
+def _transitions(sym: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """Checkpointed random-walk edge list (*keys, u, v, p) of a
+    symmetric (*keys, u, v, w) table: p = w / strength(u), folded onto
+    the edges ONCE before a ``_propagate`` loop, which re-reads it
+    every round."""
+    ow = sym.groupBy(*keys, "u").agg(F.sum("w").alias("sw"))
+    return (
+        sym.join(ow, [*keys, "u"])
+        .select(*keys, "u", "v", (F.col("w") / F.col("sw")).alias("p"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _propagate(
+    e: DataFrame, x: DataFrame, restart, scale: float,
+    keys: tuple[str, ...] = (), iters: int = 10,
+) -> DataFrame:
+    """Power iteration shared by every rank operator: ``x`` (*keys,
+    node, x) → after ``iters`` rounds of
+
+        x(v) = restart + scale · Σ_{(u,v) ∈ e} x(u) · p(u, v)
+
+    over the invariant edge list ``e`` (*keys, u, v[, p]; p = 1 when
+    absent). ``restart`` is a number or a column over the round's
+    (*keys, node), e.g. a seed indicator or a key carried on ``e``.
+
+    Per round ONE equi-join of the score vector onto ``e`` and ONE
+    map-side-combined sum. The vector is referenced once per round, so
+    the unroll is a linear chain on top of the (checkpointed) edge
+    leaf: no mid-loop truncation, and each round's identical e-side
+    exchange is computed once by AQE exchange reuse. Per-round eager
+    checkpoints cost one synchronous job each (2.3x the remaining
+    query cost in the fixed-round TextRank A/B, PLANS.md round 5).
+    Every node with an incoming edge gets a row each round; on a
+    symmetric edge list that is every node of ``x``.
+    """
+    msg = F.col("x") * F.col("p") if "p" in e.columns else F.col("x")
+    for _ in range(iters):
+        x = (
+            e.join(x.withColumnRenamed("node", "u"), [*keys, "u"])
+            .select(*keys, F.col("v").alias("node"), msg.alias("c"))
+            .groupBy(*keys, "node")
+            .agg((F.lit(restart) + F.lit(scale) * F.sum("c")).alias("x"))
+        )
+    return x
+
+
 def pagerank(
     edges: DataFrame, damping: float = 0.85, iters: int = 10,
     src: str = "src", dst: str = "dst", weight: str | None = "weight",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Fixed-iteration PageRank on the undirected character network:
     → (node, rank).
 
     Weighted propagation: a node pushes ``rank * w_uv / strength(u)``
-    along each incident edge; new rank = (1-d)/N + d·Σ incoming. On
-    the symmetric graph every node has in- and out-edges, so there is
-    no dangling-mass term. Per iteration: one broadcast-or-shuffle
-    equi-join of the rank vector onto the edge list + one
-    map-side-combined sum — the classic bulk-synchronous shape that
-    scales linearly in |E| per round.
+    along each incident edge; new rank = (1-d)/N + d·Σ incoming
+    (``_propagate``). On the symmetric graph every node has in- and
+    out-edges, so there is no dangling-mass term.
     """
-    sym = symmetrize(edges, src, dst, weight)
-    # out-strength per node, folded onto the edge list ONCE before the
-    # loop (the edge list is iteration-invariant — checkpoint it so
-    # each round re-reads a materialized table, not the whole lineage);
-    # each round's e-side exchange is an identical subtree over the
-    # checkpointed leaf, so AQE exchange reuse computes it once and the
-    # explicit repartition alternative only pins the partition count
-    # against AQE coalescing (measured slower)
-    ow = sym.groupBy("u").agg(F.sum("w").alias("sw"))
-    e = (
-        sym.join(ow, "u")
-        .select("u", "v", (F.col("w") / F.col("sw")).alias("p"))
-        .localCheckpoint(eager=True)
-    )
+    e = _transitions(symmetrize(edges, src, dst, weight))
     nodes = e.select(F.col("u").alias("node")).distinct()
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
-    base = (1.0 - damping) / n
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    # the rank vector flows through ONE join + ONE aggregation per
-    # round (a linear chain — each round references the previous
-    # exactly once), so the unrolled plan stays shallow on top of the
-    # checkpointed edge leaf: no mid-loop truncation. Per-round eager
-    # checkpoints cost one synchronous RDD materialization job each
-    # and were measured at 2.3x the remaining query cost in the
-    # fixed-round textrank A/B (PLANS.md round-5).
-    for i in range(iters):
-        contrib = e.join(ranks, e["u"] == ranks["node"]).select(
-            F.col("v").alias("node"), (F.col("rank") * F.col("p")).alias("c")
-        )
-        ranks = contrib.groupBy("node").agg(
-            (F.lit(base) + F.lit(damping) * F.sum("c")).alias("rank")
-        )
-    return ranks
+    x = _propagate(e, nodes.withColumn("x", F.lit(1.0 / n)),
+                   (1.0 - damping) / n, damping, iters=iters)
+    return x.select("node", F.col("x").alias("rank"))
 
 
 def personalized_pagerank(
     edges: DataFrame, seeds: list[str], damping: float = 0.85,
     iters: int = 10, src: str = "src", dst: str = "dst",
-    weight: str | None = "weight", checkpoint_every: int = 3,
+    weight: str | None = "weight",
 ) -> DataFrame:
     """Fixed-iteration personalized PageRank (random walk with restart
     to a seed set) on the undirected character network → (node, rank).
@@ -149,65 +171,27 @@ def personalized_pagerank(
     The per-entity relevance primitive for KG neighborhoods ("which
     characters matter *around Elizabeth*"), vs global ``pagerank``.
 
-    Same bulk-synchronous plan as ``pagerank`` — per round ONE
-    equi-join of the rank vector onto the checkpointed edge list + ONE
-    map-side-combined sum — plus a left join back onto the node table
-    so nodes receiving no mass this round keep an explicit 0.0 row
-    (the restart term is seed-only, so far-from-seed nodes really are
-    0 until mass reaches them; a missing row would silently drop them
-    from later rounds' left side). Seeds are a driver-side literal
-    list (bounded — a seed set is a query parameter, not a corpus);
-    for seed sets that are themselves tables, join a seed DataFrame
-    instead of the ``isin`` literal.
+    ``pagerank``'s kernel (``_propagate``) with the seed restart term.
+    Every node of the edge list keeps a row, at 0.0 until mass reaches
+    it. Seeds are a driver-side literal list (bounded — a seed set is
+    a query parameter, not a corpus); for seed sets that are
+    themselves tables, join a seed DataFrame instead of the ``isin``
+    literal.
     """
     if not seeds:
         raise ValueError("personalized_pagerank needs >=1 seed node")
     seeds = sorted(set(seeds))
-    sym = symmetrize(edges, src, dst, weight)
-    ow = sym.groupBy("u").agg(F.sum("w").alias("sw"))
-    # checkpoint the iteration-invariant edge and node tables once.
-    # No mid-loop truncation: the rank vector is a linear chain (each
-    # round referenced once), so the unrolled plan stays shallow on the
-    # two checkpointed leaves (per-round eager checkpoints measured
-    # 2.3x the remaining cost — PLANS.md round-5 textrank A/B); each
-    # round's invariant-side exchanges are identical subtrees that AQE
-    # exchange reuse computes once.
-    e = (
-        sym.join(ow, "u")
-        .select("u", "v", (F.col("w") / F.col("sw")).alias("p"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
     s_mass = 1.0 / len(seeds)
-    seed_term = F.when(
-        F.col("node").isin(seeds), F.lit(s_mass)
-    ).otherwise(F.lit(0.0))
-    ranks = nodes.withColumn("rank", seed_term)
-    # unlike plain pagerank (2 narrow ops per round), each ppr round is
-    # a join + agg + node left-join — letting 10 of those unroll into
-    # one execution made AQE re-optimize the growing plan per stage
-    # (best-of-3: 5.6s vs 4.6s), so the every-few-rounds truncation
-    # stays here
-    for i in range(iters):
-        contrib = (
-            e.join(ranks, e["u"] == ranks["node"])
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("c"))
-        )
-        ranks = nodes.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.lit(1.0 - damping) * seed_term
-                + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    e = _transitions(symmetrize(edges, src, dst, weight))
+    seed = F.col("node").isin(seeds)
+    x0 = e.select(F.col("u").alias("node")).distinct().withColumn(
+        "x", F.when(seed, F.lit(s_mass)).otherwise(F.lit(0.0))
+    )
+    restart = F.when(seed, F.lit((1.0 - damping) * s_mass)).otherwise(
+        F.lit(0.0)
+    )
+    x = _propagate(e, x0, restart, damping, iters=iters)
+    return x.select("node", F.col("x").alias("rank"))
 
 
 def hits(
@@ -284,14 +268,7 @@ def triangles(
     list with a second equi-join. Both joins are equi-keyed — hub-node
     skew is AQE's skew-join case. clustering(v) =
     2·T(v) / (deg(v)·(deg(v)−1)), 0 where degree < 2."""
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
     # wedges a<b<c centred at b's lower endpoint a: (a,b) + (a,c), b<c
     w = (
         e.alias("e1")
@@ -336,7 +313,6 @@ def triangles(
 def label_propagation(
     edges: DataFrame, iters: int = 5, src: str = "src",
     dst: str = "dst", weight: str | None = "weight",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Community detection by synchronous weighted label propagation
     → (node, label).
@@ -348,7 +324,7 @@ def label_propagation(
     reproducible across cluster sizes and the DuckDB oracle can unroll
     the same rounds. Per round: one equi-join (labels onto the
     symmetric edge list) + one aggregation + one per-node window
-    argmax; lineage truncated like the PageRank loop. Synchronous
+    argmax over the checkpointed edge list. Synchronous
     updates can oscillate on bipartite structure — the fixed iteration
     count bounds that by construction (production tuning would use a
     higher ``iters`` or a semi-synchronous coloring; the operator
@@ -357,8 +333,7 @@ def label_propagation(
     from pyspark.sql import Window
 
     # invariant edge list checkpointed once; the label vector is a
-    # linear chain — no mid-loop truncation (see the pagerank loop
-    # note)
+    # linear chain — no mid-loop truncation (see ``_propagate``)
     sym = symmetrize(edges, src, dst, weight).localCheckpoint(eager=True)
     labels = (
         sym.select(F.col("u").alias("node"))
@@ -404,22 +379,7 @@ def core_number(
     whenever either has converged). ``iters=None`` ⇒ run to the
     fixpoint, detected by the strictly-decreasing total value sum.
     """
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    both = F.array(
-        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-        F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-    )
-    sym = (
-        e.select(F.explode(both).alias("p"))
-        .select("p.u", "p.v")
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetric(edges, src, dst)
     from pyspark.sql import Window
 
     vals = sym.groupBy(F.col("u").alias("node")).agg(
@@ -454,7 +414,6 @@ def core_number(
 
 def k_core(
     edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Maximal k-core of the undirected simple graph: iteratively peel
     nodes of degree < k until none remain → surviving (node, degree)
@@ -467,20 +426,11 @@ def k_core(
     equi-joins against the (usually tiny, broadcast) peel set, with
     the edge list checkpointed so each round starts from materialized
     state like the CC / PageRank / LPA loops."""
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
     # peeling terminates in ≤ |V| rounds (every non-final round removes
-    # ≥1 node), so never abort — on a path-like graph O(diameter) rounds
-    # is normal. Past ``max_iter`` keep going, doubling the budget with
-    # a logged warning each time (callers wanting few rounds should use
-    # ``core_number`` — the h-index iteration converges in far fewer).
-    budget, rounds = max_iter, 0
+    # ≥1 node); on a path-like graph O(diameter) rounds is normal
+    # (callers wanting few rounds use ``core_number`` — the h-index
+    # iteration converges in far fewer)
     while True:
         deg = (
             e.select(F.explode(F.array("a", "b")).alias("node"))
@@ -494,15 +444,6 @@ def k_core(
             return deg.select(
                 "node", F.col("d").cast("long").alias("degree")
             )
-        rounds += 1
-        if rounds >= budget:
-            import warnings
-
-            warnings.warn(
-                f"k_core: {rounds} peel rounds and still shrinking; "
-                f"doubling budget to {budget * 2} (long-diameter graph)"
-            )
-            budget *= 2
         e = (
             e.join(bad, e["a"] == bad["node"], "left_anti")
             .join(bad, e["b"] == bad["node"], "left_anti")
@@ -510,33 +451,45 @@ def k_core(
         )
 
 
+def _canonical(
+    edges: DataFrame, src: str, dst: str, value: Column | None = None,
+    agg=F.min, keys: tuple[str, ...] = (), loops: bool = False,
+) -> DataFrame:
+    """The undirected simple edge list (*keys, a, b[, w]): one row per
+    unordered pair, a = least(src, dst) < b = greatest(src, dst), so
+    self-loops and NULL endpoints drop out. ``value`` (a column over
+    ``edges``) is folded over parallel edges by ``agg`` into ``w``;
+    ``loops`` keeps self-loops as a == b rows."""
+    e = edges.select(
+        *keys, F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"),
+        *([] if value is None else [value.alias("w")]),
+    )
+    if not loops:
+        e = e.filter(F.col("a") < F.col("b"))
+    if value is None:
+        return e.distinct()
+    return e.groupBy(*keys, "a", "b").agg(agg(F.col("w")).alias("w"))
+
+
 def _symmetric(
     edges: DataFrame, src: str, dst: str, cost: str | None = None,
+    checkpoint: bool = True,
 ) -> DataFrame:
-    """Checkpointed symmetric simple edge list (u, v[, c]) of the
-    undirected graph: self-loops dropped, parallel edges collapsed
-    (keeping the cheapest ``cost`` when one is given)."""
-    a, b = F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
+    """Symmetric view (u, v[, c]) of ``_canonical``: each simple edge
+    in both directions, parallel edges collapsed to the cheapest
+    ``cost`` when one is given; checkpointed unless ``checkpoint`` is
+    False."""
     if cost is None:
-        e = edges.select(a, b).filter(F.col("a") < F.col("b")).distinct()
-        c = []
+        e, c = _canonical(edges, src, dst), []
     else:
-        e = (
-            edges.select(a, b, F.col(cost).cast("double").alias("c"))
-            .filter(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.min("c").alias("c"))
-        )
-        c = [F.col("c")]
+        e = _canonical(edges, src, dst, F.col(cost).cast("double"))
+        c = [F.col("w").alias("c")]
     both = F.array(
         F.struct(F.col("a").alias("u"), F.col("b").alias("v"), *c),
         F.struct(F.col("b").alias("u"), F.col("a").alias("v"), *c),
     )
-    return (
-        e.select(F.explode(both).alias("p"))
-        .select("p.*")
-        .localCheckpoint(eager=True)
-    )
+    sym = e.select(F.explode(both).alias("p")).select("p.*")
+    return sym.localCheckpoint(eager=True) if checkpoint else sym
 
 
 def _relax(
@@ -625,16 +578,9 @@ def pmi_edges(
     (PPMI). Narrow: one canonicalize, one strength aggregation joined
     back twice, one 1-row total broadcast — no iteration.
     """
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"),
-            F.col(weight).cast("double").alias("w"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical(
+        edges, src, dst, F.col(weight).cast("double"), F.sum
+    ).localCheckpoint(eager=True)
     total = e.agg(F.sum("w")).first()[0]
     if not total:
         return e.select(
@@ -794,22 +740,7 @@ def betweenness_centrality(
     computation in unrolled SQL with ``iters`` set; ``iters=None``
     runs the forward phase to frontier exhaustion.
     """
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    both = F.array(
-        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-        F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-    )
-    sym = (
-        e.select(F.explode(both).alias("p"))
-        .select("p.u", "p.v")
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetric(edges, src, dst)
     nodes = sym.select(F.col("u").alias("node")).distinct()
     if sources is not None:
         spark = edges.sparkSession
@@ -899,18 +830,7 @@ def assortativity(
     endpoint degrees over directed edge ends. One degree aggregation,
     one join of the degree vector onto the symmetric edge list, one
     global 4-sum aggregation — no iteration, no driver loop."""
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    both = F.array(
-        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-        F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-    )
-    sym = e.select(F.explode(both).alias("p")).select("p.u", "p.v")
+    sym = _symmetric(edges, src, dst, checkpoint=False)
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
     ends = (
         sym.join(deg.withColumnRenamed("u", "n1"), sym["u"] == F.col("n1"))
@@ -1010,19 +930,13 @@ def link_prediction_scores(
     (e.g. ("doc_id",)) scores each scope's network independently —
     all joins stay equi on (scope, key)."""
     sc = list(scope_cols)
-    canon = (
-        edges.select(
-            *sc,
-            F.least(F.col(src), F.col(dst)).alias("s"),
-            F.greatest(F.col(src), F.col(dst)).alias("d"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    canon = _canonical(
+        edges, src, dst, keys=scope_cols, loops=True
+    ).localCheckpoint(eager=False)
     # symmetrize() drops extra cols; do the two-direction explode here
     both = F.array(
-        F.struct(F.col("s").alias("u"), F.col("d").alias("v")),
-        F.struct(F.col("d").alias("u"), F.col("s").alias("v")),
+        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+        F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
     )
     sym = canon.select(*sc, F.explode(both).alias("e")).select(
         *sc, "e.u", "e.v"
@@ -1048,10 +962,7 @@ def link_prediction_scores(
             F.sum(F.lit(1.0) / F.log(F.col("_cdeg"))).alias("aa"),
         )
     )
-    existing = canon.select(
-        *sc, F.col("s").alias("a"), F.col("d").alias("b")
-    )
-    cand = scored.join(existing, sc + ["a", "b"], "left_anti")
+    cand = scored.join(canon, sc + ["a", "b"], "left_anti")
     da = deg.select(*sc, F.col("u").alias("a"), F.col("deg").alias("_da"))
     db = deg.select(*sc, F.col("u").alias("b"), F.col("deg").alias("_db"))
     return (
@@ -1393,33 +1304,22 @@ def katz_centrality(
     pulled to the driver (like the HITS normalizer), so alpha is a
     literal in the per-round plan, not a lazy cross join.
 
-    Per round: ONE equi-join of the score vector onto the checkpointed
-    symmetric edge list + ONE map-side-combined sum — the same
-    bulk-synchronous |E|-per-round shape as ``pagerank``.
+    ``pagerank``'s kernel (``_propagate``) with p = 1, restart beta
+    and scale alpha, over the checkpointed symmetric edge list.
     """
-    sym = symmetrize(edges, src, dst, weight=None).select("u", "v")
-    # checkpoint the invariant edge list once; the score vector is a
-    # linear chain (each round references the previous once), so no
-    # mid-loop truncation — see the pagerank loop note
-    e = sym.localCheckpoint(eager=True)
+    e = (
+        symmetrize(edges, src, dst, weight=None).select("u", "v")
+        .localCheckpoint(eager=True)
+    )
     nodes = e.select(F.col("u").alias("node")).distinct()
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    row = deg.agg(F.max("d")).first()
+    row = e.groupBy("u").agg(F.count(F.lit(1)).alias("d")).agg(
+        F.max("d")
+    ).first()
     if row[0] is None:
         return nodes.withColumn("katz", F.lit(0.0))
     alpha = alpha_scale / float(row[0])
-    x = nodes.withColumn("x", F.lit(float(beta)))
-    for i in range(iters):
-        inc = (
-            e.join(x, e["u"] == x["node"])
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum("x").alias("s"))
-        )
-        # every node has >=1 incident edge (nodes come off the edge
-        # list), so the inner join keeps the full node set
-        x = inc.select(
-            "node", (F.lit(float(beta)) + F.lit(alpha) * F.col("s")).alias("x")
-        )
+    x = _propagate(e, nodes.withColumn("x", F.lit(float(beta))),
+                   float(beta), alpha, iters=iters)
     return x.select("node", F.col("x").alias("katz"))
 
 
@@ -1610,18 +1510,11 @@ def spanning_forest(
     if mode not in ("min", "max"):
         raise ValueError(f"mode must be 'min' or 'max', got {mode!r}")
     sgn = 1 if mode == "min" else -1
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"),
-            F.greatest(src, dst).alias("b"),
-            F.col(weight).cast("long").alias("w"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        # parallel edges: keep the one the mode prefers
-        .agg((F.min(F.col("w") * sgn) * sgn).alias("w"))
-        .localCheckpoint(eager=True)
-    )
+    # parallel edges: keep the one the mode prefers
+    e = _canonical(
+        edges, src, dst, F.col(weight).cast("long"),
+        lambda w: F.min(w * sgn) * sgn,
+    ).localCheckpoint(eager=True)
     comp = (
         e.select(F.col("a").alias("node"))
         .unionByName(e.select(F.col("b").alias("node")))
@@ -1793,14 +1686,7 @@ def forman_curvature(
     common-neighbor count + one degree join per endpoint — all
     integer arithmetic, no iteration, no UDFs.
     """
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
     adj = symmetrize(
         e, "a", "b", weight=None
     ).select("u", "v")
@@ -1847,14 +1733,7 @@ def rich_club(
     histogram — two tiny (≤ distinct-degree-count rows) aggregates
     plus running windows over them. Rows with N_k < 2 report phi NULL.
     """
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
     deg = (
         e.select(F.explode(F.array("a", "b")).alias("n"))
         .groupBy("n")
@@ -1937,13 +1816,7 @@ def maximal_independent_set(
     Raises if max_rounds is hit with nodes still undecided (never
     silently returns a partial set).
     """
-    sym = (
-        symmetrize(edges, src, dst, weight=None)
-        .select("u", "v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetric(edges, src, dst)
     und = (
         sym.select(F.col("u").alias("node"))
         .distinct()
@@ -2090,13 +1963,7 @@ def neighborhood_function(
     """
     m = 1 << p
     alpha = 0.7213 / (1 + 1.079 / m)
-    sym = (
-        symmetrize(edges, src, dst, weight=None)
-        .select("u", "v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetric(edges, src, dst)
     nodes = sym.select(F.col("u").alias("node")).distinct()
     v32 = (
         F.conv(
@@ -2186,13 +2053,7 @@ def greedy_coloring(
     Rounds past convergence are no-ops (the uncolored set is empty),
     so a fixed-round oracle unroll lands on the identical table.
     """
-    sym = (
-        symmetrize(edges, src, dst, weight=None)
-        .select("u", "v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetric(edges, src, dst)
     nodes = sym.select(F.col("u").alias("node")).distinct() \
         .localCheckpoint(eager=True)
 
@@ -2474,7 +2335,6 @@ def grouped_transitive_closure(
 def louvain_moves(
     edges: DataFrame, iters: int = 2, src: str = "src",
     dst: str = "dst", weight: str | None = "weight",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Community detection by deterministic SYNCHRONOUS Louvain-style
     modularity moves → (node, community) — the modularity-gain upgrade
@@ -2506,9 +2366,9 @@ def louvain_moves(
     the symmetric edge list + one (u, C) aggregation (map-side
     combinable), one community-degree aggregation (|communities|
     rows), one broadcast 1-row 2m scalar, and one per-node argmax
-    window whose group size is bounded by the node's degree. Lineage
-    is truncated every ``checkpoint_every`` rounds like the other
-    iterative loops.
+    window whose group size is bounded by the node's degree. Each round
+    reads the state four times, so it is checkpointed every second
+    round to keep the unrolled plan from multiplying.
     """
     sym = (
         symmetrize(edges, src, dst, weight)
@@ -2596,6 +2456,6 @@ def louvain_moves(
                 "k",
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+        if (i + 1) % 2 == 0 and i + 1 < iters:
             state = state.localCheckpoint(eager=True)
     return state.select("node", F.col("comm").alias("community"))

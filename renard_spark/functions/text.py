@@ -1130,9 +1130,8 @@ def textrank_scores(
     same scope-carried pattern as wl_refinement). Pair generation is
     array-local (narrow): each token's forward window partners come
     from one flatten(transform(...)) over the token array, never a
-    positions self-join. Per round: ONE equi-join of the rank vector
-    onto the normalized edge list + one map-side-combined sum, lineage
-    truncated.
+    positions self-join. The rounds are ``graph.pagerank``'s kernel
+    (``graph._propagate``) keyed by the document and its node count.
 
     → (doc_id, token, score): every non-stopword token of every doc
     with >= 2 distinct tokens, score rounded to 6 dp (the engines'
@@ -1140,6 +1139,8 @@ def textrank_scores(
     Single-token docs have no graph and are absent — callers wanting
     them use a left join + coalesce.
     """
+    from renard_spark.functions.graph import _propagate, _transitions
+
     sw = [w for ws in STOPWORDS_BY_LANG.values() for w in ws] + list(STOPWORDS)
     toked = docs.select(
         F.col(id_col).alias("_doc"),
@@ -1186,52 +1187,22 @@ def textrank_scores(
     sym = ed.select("_doc", F.explode(both).alias("e")).select(
         "_doc", "e.u", "e.v", "e.w"
     )
-    ow = sym.groupBy("_doc", "u").agg(F.sum("w").alias("_sw"))
-    ep = (
-        sym.join(ow, ["_doc", "u"])
-        .select("_doc", "u", "v", (F.col("w") / F.col("_sw")).alias("p"))
+    # each document's node count N rides the edge list as a second
+    # key, so every round's teleport term (1-d)/N needs no join
+    nn = (
+        sym.select("_doc", "u").distinct()
+        .groupBy("_doc").agg(F.count(F.lit(1)).alias("_n"))
     )
-    # one explicit shuffle onto the round-join key: every iteration's
-    # ep-side join then reuses this partitioning instead of paying its
-    # own exchange
-    ep = ep.repartition("_doc", "u")
-    nd = sym.select("_doc", F.col("u").alias("node")).distinct()
-    nn = nd.groupBy("_doc").agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    # ep feeds every round, nn every round's teleport term. iters is a
-    # FIXED small constant, so lineage depth is bounded — persist()
-    # (freed by ContextCleaner when the DF is dropped) is the right
-    # cache here; localCheckpoint's per-round RDD materialization was
-    # measured at 2.3x the whole query's remaining cost (PLANS.md
-    # round-5 A/B: 8.9 s -> 3.3 s at sf0.1). Checkpointing stays in
-    # the UNBOUNDED loops (cc, pagerank-until-convergence), where
-    # lineage truly grows without bound.
-    ep = ep.persist()
-    nn = nn.persist()
-    pr = nd.join(nn, "_doc").select(
-        "_doc", "node", (F.lit(1.0) / F.col("_n")).alias("r")
+    keys = ("_doc", "_n")
+    e = _transitions(sym.join(nn, "_doc"), keys)
+    x0 = (
+        e.select(*keys, F.col("u").alias("node")).distinct()
+        .withColumn("x", F.lit(1.0) / F.col("_n"))
     )
-    for _ in range(iters):
-        agg = (
-            ep.join(
-                pr.select("_doc", F.col("node").alias("u"), "r"),
-                ["_doc", "u"],
-            )
-            .groupBy("_doc", "v")
-            .agg(F.sum(F.col("r") * F.col("p")).alias("_s"))
-        )
-        pr = (
-            agg.join(nn, "_doc")
-            .select(
-                "_doc",
-                F.col("v").alias("node"),
-                (
-                    (1.0 - damping) / F.col("_n")
-                    + damping * F.col("_s")
-                ).alias("r"),
-            )
-        )
+    pr = _propagate(e, x0, (1.0 - damping) / F.col("_n"), damping,
+                    keys=keys, iters=iters)
     return pr.select(
         F.col("_doc").alias(id_col),
         F.col("node").alias("token"),
-        F.round("r", 6).alias("score"),
+        F.round("x", 6).alias("score"),
     )

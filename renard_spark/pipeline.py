@@ -272,7 +272,7 @@ def compose(stages: list[Stage], inputs: dict[str, DataFrame],
     in order, the ``PERSISTED`` tables cached when ``persist``. Returns
     the inputs and every stage table by name."""
     tables = dict(inputs)
-    spark = tables["documents_raw"].sparkSession
+    spark = next(iter(inputs.values())).sparkSession
     for st in stages:
         df = st.fn(spark, *(tables[n] for n in st.needs))
         tables[st.name] = df.persist() if persist and st.name in PERSISTED else df

@@ -66,14 +66,19 @@ def test_personalized_pagerank_matches_reference(spark):
 
 
 def test_personalized_pagerank_mass_concentrates_near_seed(spark):
-    # path graph a-b-c-d: seeding at a must rank a > b > c > d
-    rows = [("a", "b", 1), ("b", "c", 1), ("c", "d", 1)]
+    # path graph a-b-c-d: seeding at a must rank a > b > c > d; the
+    # triangle x-y-z no walk from a reaches keeps a row per node, at
+    # exactly 0.0
+    rows = [("a", "b", 1), ("b", "c", 1), ("c", "d", 1),
+            ("x", "y", 2), ("y", "z", 1), ("z", "x", 3)]
     df = spark.createDataFrame(rows, "src string, dst string, weight int")
     got = {
         r["node"]: r["rank"]
         for r in gmetrics.personalized_pagerank(df, ["a"], iters=12).collect()
     }
-    assert got["a"] > got["b"] > got["c"] > got["d"]
+    assert set(got) == set("abcdxyz")
+    assert got["a"] > got["b"] > got["c"] > got["d"] > 0.0
+    assert got["x"] == got["y"] == got["z"] == 0.0
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 

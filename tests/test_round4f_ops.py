@@ -437,6 +437,41 @@ def test_textrank_matches_pure_python(spark):
     assert not any(doc == 3 or doc == 4 for doc, _ in got)
 
 
+def test_textrank_is_pagerank_of_the_window_graph(spark):
+    """One document's TextRank scores are graph.pagerank over its
+    window co-occurrence graph at the same damping and rounds."""
+    from renard_spark.functions import graph as gmetrics
+    from renard_spark.functions.text import textrank_scores
+
+    toks = ("spark engines shuffle data engines shuffle partitions fast "
+            "spark data shuffle").split()
+    w, d, iters = 3, 0.85, 5
+    df = spark.createDataFrame(
+        [(1, " ".join(toks))], "doc_id long, text string"
+    )
+    got = {
+        r["token"]: r["score"]
+        for r in textrank_scores(df, window=w, damping=d, iters=iters).collect()
+    }
+    edges = {}
+    for i in range(len(toks)):
+        for j in range(i + 1, min(i + w, len(toks))):
+            if toks[i] != toks[j]:
+                key = tuple(sorted((toks[i], toks[j])))
+                edges[key] = edges.get(key, 0) + 1
+    ge = spark.createDataFrame(
+        [(a, b, c) for (a, b), c in edges.items()],
+        "src string, dst string, weight long",
+    )
+    want = {
+        r["node"]: r["rank"]
+        for r in gmetrics.pagerank(ge, damping=d, iters=iters)
+        .select("node", F.round("rank", 6).alias("rank")).collect()
+    }
+    assert len(want) == 6
+    assert got == want
+
+
 @pytest.mark.parametrize("seed", [11, 12])
 def test_bfs_paths_shortest_and_lexmin(spark, seed):
     from renard_spark.functions.graph import bfs_paths
