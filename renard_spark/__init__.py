@@ -2,7 +2,7 @@
 
 Re-expresses the capabilities of the CompNet/Renard per-document pipeline
 (reference: /root/reference, Renard 0.7.1) as a Spark-first engine:
-DataFrame / SQL declarative plans, Arrow-vectorized pandas UDFs for the
+DataFrame / SQL declarative plans, Arrow-batched Python steps for the
 genuinely sequential per-document algorithms, explicit partitioning and
 skew handling, checkpoint-resumable stage boundaries with lineage +
 metrics side tables.

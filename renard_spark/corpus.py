@@ -16,8 +16,8 @@ full names, bare first names, titled last names, nicknames
 and quoted speech (quote detection / conversational graphs).
 
 Generation is deterministic **per doc_id** (seeded by ``seed * P + doc_id``)
-so it can run distributed via ``spark.range(n).mapInPandas`` — no
-driver-side document loop, arbitrarily scalable, reproducible at any
+so it can run distributed as one batch step over ``spark.range(n)`` —
+no driver-side document loop, arbitrarily scalable, reproducible at any
 parallelism.
 """
 
@@ -28,6 +28,8 @@ import random
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from renard_spark.operators.utils import map_batches
 
 # ---------------------------------------------------------------- cast
 
@@ -186,26 +188,19 @@ def generate_documents_pdf(n_docs: int, seed: int = 13, start: int = 0,
 
 def generate_documents(spark: SparkSession, n_docs: int, seed: int = 13,
                        partitions: int | None = None, **kw) -> DataFrame:
-    """Distributed generator: spark.range → mapInPandas, no driver loop."""
+    """Distributed generator: spark.range → one Arrow-batch step
+    (``operators.utils.map_batches``), no driver loop."""
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 8)
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for k in pdf["id"]:
-                out.append(
-                    {
-                        "doc_id": f"doc_{int(k):010d}",
-                        "spans": [
-                            (s["kind"], s["text"], s["media_ref"], s["offset"])
-                            for s in gen_doc_spans(int(k), seed=seed, **kw)
-                        ],
-                    }
-                )
-            yield pd.DataFrame(out)
+    def step(batches):
+        for batch in batches:
+            yield [
+                (f"doc_{k:010d}", gen_doc_spans(k, seed=seed, **kw))
+                for k in batch["id"]
+            ]
 
-    return (
-        spark.range(0, n_docs, numPartitions=partitions)
-        .mapInPandas(gen, schema=DOCUMENTS_SCHEMA)
+    return map_batches(
+        spark.range(0, n_docs, numPartitions=partitions), step,
+        DOCUMENTS_SCHEMA,
     )

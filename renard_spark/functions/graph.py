@@ -1815,9 +1815,12 @@ def maximal_independent_set(
     SHRINKING undecided subgraph, lineage truncated per round.
     Raises if max_rounds is hit with nodes still undecided (never
     silently returns a partial set).
+
+    Works on the simple graph, like ``greedy_coloring``: self-loops
+    drop out, so a node whose only edges are self-loops gets no row.
     """
     sym = _symmetric(edges, src, dst)
-    und = (
+    nodes = und = (
         sym.select(F.col("u").alias("node"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -1866,11 +1869,6 @@ def maximal_independent_set(
             raise RuntimeError(
                 f"Luby MIS did not converge in {max_rounds} rounds"
             )
-    nodes = (
-        symmetrize(edges, src, dst, weight=None)
-        .select(F.col("u").alias("node"))
-        .distinct()
-    )
     mis = mis_parts[0] if mis_parts else nodes.limit(0)
     for p in mis_parts[1:]:
         mis = mis.unionByName(p)
@@ -2052,6 +2050,10 @@ def greedy_coloring(
     raises if ``max_rounds`` is hit with nodes still uncolored.
     Rounds past convergence are no-ops (the uncolored set is empty),
     so a fixed-round oracle unroll lands on the identical table.
+
+    Works on the simple graph, like ``maximal_independent_set``:
+    self-loops drop out, so a node whose only edges are self-loops
+    gets no row.
     """
     sym = _symmetric(edges, src, dst)
     nodes = sym.select(F.col("u").alias("node")).distinct() \

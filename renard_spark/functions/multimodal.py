@@ -22,9 +22,10 @@ from __future__ import annotations
 import hashlib
 import struct
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from renard_spark.operators.utils import map_batches
 
 MEDIA_FEATURES_SCHEMA = (
     "doc_id string, media_ref string, kind string, span_order int,"
@@ -160,63 +161,38 @@ def decode_media_bytes(
     media_df: DataFrame, strict: bool = False, payload_col: str = "payload"
 ) -> DataFrame:
     """(doc_id, span_order, kind, media_ref, payload binary) → decoded
-    features via Arrow-batched mapInPandas, REAL byte parsing for
-    WAV/PPM/BMP (see decode_payload)."""
+    features in one Arrow-batch step (``utils.map_batches``), REAL byte
+    parsing for WAV/PPM/BMP (see decode_payload); a NULL payload decodes
+    like an unknown format."""
+    cols = ["doc_id", "span_order", "kind", "media_ref", payload_col]
 
-    def run(batches):
-        for pdf in batches:
+    def step(batches):
+        for batch in batches:
             rows = []
             for doc_id, order, kind, ref, payload in zip(
-                pdf["doc_id"], pdf["span_order"], pdf["kind"],
-                pdf["media_ref"], pdf[payload_col],
+                *(batch[c] for c in cols)
             ):
-                data = bytes(payload) if payload is not None else b""
-                w, hgt, dur, feat = decode_payload(data, ref, kind, strict)
-                rows.append((doc_id, ref, kind, int(order), w, hgt, dur, feat))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "kind", "span_order",
-                    "width", "height", "duration_ms", "feature",
-                ],
-            )
+                w, hgt, dur, feat = decode_payload(
+                    payload or b"", ref, kind, strict)
+                rows.append((doc_id, ref, kind, order, w, hgt, dur, feat))
+            yield rows
 
-    return media_df.mapInPandas(run, schema=MEDIA_FEATURES_SCHEMA)
+    return map_batches(media_df.select(*cols), step, MEDIA_FEATURES_SCHEMA)
 
 
 def decode_media(media_spans_df: DataFrame, strict: bool = False) -> DataFrame:
     """media spans (doc_id, span_order, kind, media_ref, offset) →
-    decoded features via Arrow-batched mapInPandas.
+    decoded features: ``decode_media_bytes`` with no payload.
 
     strict=True raises NotImplementedError (the codec integration
     point); strict=False emits the deterministic fake so downstream
     plumbing (similarity over media features, joins back to spans) is
     testable in this container.
     """
-
-    def run(batches):
-        for pdf in batches:
-            if strict:
-                raise NotImplementedError(
-                    "media decode requires an image/audio codec library "
-                    "(not available in this container); integrate the "
-                    "real decoder here"
-                )
-            rows = []
-            for doc_id, order, kind, ref in zip(
-                pdf["doc_id"], pdf["span_order"], pdf["kind"], pdf["media_ref"]
-            ):
-                w, hgt, dur, feat = _fake_decode(ref, kind)
-                rows.append((doc_id, ref, kind, int(order), w, hgt, dur, feat))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "kind", "span_order",
-                    "width", "height", "duration_ms", "feature",
-                ],
-            )
-
-    return media_spans_df.mapInPandas(run, schema=MEDIA_FEATURES_SCHEMA)
+    return decode_media_bytes(
+        media_spans_df.withColumn("_payload", F.lit(None).cast("binary")),
+        strict, "_payload",
+    )
 
 
 def frame_sample_plan(decoded: DataFrame, every_ms: int = 1000) -> DataFrame:

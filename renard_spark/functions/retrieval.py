@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from renard_spark.operators.tokenize import TOKEN_RE
+from renard_spark.operators.utils import cached_model, map_batches
 
 
 def samenoun_context(
@@ -158,29 +159,21 @@ def neural_rerank_context(
         )
     )
 
-    from renard_spark.operators.ner import cached_model
+    passed = ["doc_id", "sent_idx", "ctx_doc_id", "ctx_sent_idx", "side"]
 
-    def run(batches):
+    def step(batches):
         scorer = cached_model("reranker", cache_key, scorer_factory)
-        import pandas as pd
-
-        for pdf in batches:
-            batch = [
-                (list(e), list(c), s)
-                for e, c, s in zip(
-                    pdf["_el_toks"], pdf["_ctx_toks"], pdf["side"]
-                )
-            ]
-            scores = scorer(batch) if batch else []
-            out = pdf[
-                ["doc_id", "sent_idx", "ctx_doc_id", "ctx_sent_idx", "side"]
-            ].copy()
+        for batch in batches:
+            pairs = list(zip(batch["_el_toks"], batch["_ctx_toks"],
+                             batch["side"]))
+            scores = scorer(pairs) if pairs else []
+            out = {c: batch.arrow.column(c) for c in passed}
             out["score"] = [float(s) for s in scores]
             yield out
 
-    scored = j.mapInPandas(
-        run,
-        schema="doc_id string, sent_idx int, ctx_doc_id string,"
+    scored = map_batches(
+        j, step,
+        "doc_id string, sent_idx int, ctx_doc_id string,"
         " ctx_sent_idx int, side string, score double",
     )
     w = Window.partitionBy("doc_id", "sent_idx").orderBy(

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from renard_spark.operators.utils import map_batches
+
 
 def _norm(col):
     # element-order fold in double precision: bit-reproducible and
@@ -107,7 +109,6 @@ def cosine_topk_blocked(
     import math
 
     import numpy as np
-    import pandas as pd
 
     n = emb.count()
     n_blocks = max(1, math.ceil(n / block_rows))
@@ -141,15 +142,17 @@ def cosine_topk_blocked(
             acc = acc + A[:, j] * B[:, j]
         return acc
 
-    def run(batches):
+    def step(batches):
         take = k + cushion
-        for pdf in batches:
-            rows = []
-            for r in range(len(pdf)):
-                a_ids = np.asarray(pdf["a_ids"].iloc[r], dtype=np.int64)
-                b_ids = np.asarray(pdf["b_ids"].iloc[r], dtype=np.int64)
-                A = np.array(list(pdf["a_vecs"].iloc[r]), dtype=np.float64)
-                B = np.array(list(pdf["b_vecs"].iloc[r]), dtype=np.float64)
+        for batch in batches:
+            for a_ids, b_ids, a_vecs, b_vecs in zip(
+                batch["a_ids"], batch["b_ids"], batch["a_vecs"],
+                batch["b_vecs"],
+            ):
+                a_ids = np.asarray(a_ids, dtype=np.int64)
+                b_ids = np.asarray(b_ids, dtype=np.int64)
+                A = np.array(a_vecs, dtype=np.float64)
+                B = np.array(b_vecs, dtype=np.float64)
                 na = np.sqrt(_seq_dot(A, A))
                 nb = np.sqrt(_seq_dot(B, B))
                 G = (A @ B.T) / np.outer(na, nb)  # selection only
@@ -162,25 +165,11 @@ def cosine_topk_blocked(
                 ai, bi = ai[keep], bi[keep]
                 # exact sequential recompute for the survivors
                 cos = _seq_dot(A[ai], B[bi]) / (na[ai] * nb[bi])
-                rows.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": a_ids[ai],
-                            "neighbor_id": b_ids[bi],
-                            "cosine": cos,
-                        }
-                    )
-                )
-            yield pd.concat(rows) if rows else pd.DataFrame(
-                {
-                    "vec_id": pd.Series([], dtype="int64"),
-                    "neighbor_id": pd.Series([], dtype="int64"),
-                    "cosine": pd.Series([], dtype="float64"),
-                }
-            )
+                yield {"vec_id": a_ids[ai], "neighbor_id": b_ids[bi],
+                       "cosine": cos}
 
-    cand = pairs.mapInPandas(
-        run, schema="vec_id long, neighbor_id long, cosine double"
+    cand = map_batches(
+        pairs, step, "vec_id long, neighbor_id long, cosine double"
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()

@@ -39,6 +39,8 @@ from operator import itemgetter
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from renard_spark.operators.utils import map_batches
+
 
 def doc_edges(
     ms: list[tuple[str, int, int]],
@@ -123,13 +125,9 @@ def cooccurrence_edges(
 
     Mentions and sentence rows are UNIONED with a kind tag,
     repartitioned+sorted by doc_id, and scanned by ``doc_edges`` in ONE
-    ``mapInPandas`` call per Arrow batch (trailing doc carried across
-    batch boundaries, ``utils.map_in_pandas_by_key``).
+    Python call per Arrow batch (trailing doc carried across batch
+    boundaries, ``utils.map_batches``).
     """
-    import pandas as pd
-
-    from renard_spark.operators.utils import map_in_pandas_by_key
-
     if unit not in ("tokens", "sentences"):
         raise ValueError(f"unknown unit: {unit}")
     with_pol = polarities_df is not None
@@ -140,55 +138,51 @@ def cooccurrence_edges(
     def ddl(col: str) -> str:
         return mentions_df.schema[col].dataType.simpleString()
 
-    # the group key crosses as the string _group (exact for any atomic
-    # type, unlike an integer column with NULLs, which pandas reads as
-    # float); without group_col it is NULL, one group per document
-    group = [group_col] if group_col else []
+    # the group key crosses as _group in its own type; without
+    # group_col it is NULL, one group per document
+    group_type = ddl(group_col) if group_col else "string"
     schema = ", ".join(
-        [f"doc_id {ddl('doc_id')}"] + [f"{c} string" for c in group]
+        [f"doc_id {ddl('doc_id')}"]
+        + ([f"{group_col} {group_type}"] if group_col else [])
         + ["src string, dst string, weight long"]
         + (["polarity double"] if with_pol else [])
     )
-    cols = ["doc_id", *group, "src", "dst", "weight"] + (
-        ["polarity"] if with_pol else [])
 
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        # plain lists, one pass: per-document pandas indexing costs
-        # several times the scan itself
-        rows = []
-        recs = zip(*(pdf[c].tolist() for c in (
-            "doc_id", "_kind", "_group", "sent_idx", "sent_start",
-            "sent_end", "polarity", "char_id", "start_idx", "end_idx")))
-        for doc_id, doc in groupby(recs, key=itemgetter(0)):
-            sents, ms = [], {}
-            for _, kind, key, si, ss, se, p, char, start, end in doc:
-                if kind == 0:
-                    sents.append((si, int(ss), int(se), p))
-                else:
-                    ms.setdefault(key, []).append(
-                        (char, int(start), int(end)))
-            sent_start = sent_end = pol = None
-            if need_sent:
-                if not sents:  # no sentences, no blocks
-                    continue
-                sents.sort()
-                sent_start = [ss for _, ss, _, _ in sents]
-                sent_end = [se for _, _, se, _ in sents]
-                if with_pol:
-                    pol = [p for _, _, _, p in sents]
-            for key, gm in ms.items():
-                gm.sort(key=lambda m: (m[1], m[2], m[0]))
-                head = (doc_id, key) if group_col else (doc_id,)
-                rows.extend(
-                    head + e for e in doc_edges(
-                        gm, dist, unit, sent_start, sent_end, pol)
-                )
-        return pd.DataFrame(rows, columns=cols)
+    def step(batches):
+        for batch in batches:
+            rows = []
+            recs = zip(*(batch[c] for c in (
+                "doc_id", "_kind", "_group", "sent_idx", "sent_start",
+                "sent_end", "polarity", "char_id", "start_idx", "end_idx")))
+            for doc_id, doc in groupby(recs, key=itemgetter(0)):
+                sents, ms = [], {}
+                for _, kind, key, si, ss, se, p, char, start, end in doc:
+                    if kind == 0:
+                        sents.append((si, ss, se, p))
+                    else:
+                        ms.setdefault(key, []).append((char, start, end))
+                sent_start = sent_end = pol = None
+                if need_sent:
+                    if not sents:  # no sentences, no blocks
+                        continue
+                    sents.sort()
+                    sent_start = [ss for _, ss, _, _ in sents]
+                    sent_end = [se for _, _, se, _ in sents]
+                    if with_pol:
+                        pol = [p for _, _, _, p in sents]
+                for key, gm in ms.items():
+                    gm.sort(key=lambda m: (m[1], m[2], m[0]))
+                    head = (doc_id, key) if group_col else (doc_id,)
+                    rows.extend(
+                        head + e for e in doc_edges(
+                            gm, dist, unit, sent_start, sent_end, pol)
+                    )
+            yield rows
 
     m = mentions_df.select(
         "doc_id",
         F.lit(1).alias("_kind"),
-        (F.col(group_col).cast("string") if group_col
+        (F.col(group_col) if group_col
          else F.lit(None).cast("string")).alias("_group"),
         F.lit(None).cast("int").alias("sent_idx"),
         F.lit(None).cast("int").alias("sent_start"),
@@ -215,7 +209,7 @@ def cooccurrence_edges(
             sents = sents.withColumn("polarity", F.lit(None).cast("double"))
         m = sents.select(
             "doc_id", F.lit(0).alias("_kind"),
-            F.lit(None).cast("string").alias("_group"),
+            F.lit(None).cast(group_type).alias("_group"),
             "sent_idx", "sent_start", "sent_end", "polarity",
             F.lit(None).cast("string").alias("char_id"),
             F.lit(None).cast("int").alias("start_idx"),
@@ -224,12 +218,9 @@ def cooccurrence_edges(
 
     # explicit count: AQE would coalesce the doc_id shuffle of a
     # mention-sized table to one or two tasks, serializing the scan
-    edges = map_in_pandas_by_key(
-        m, process, schema=schema,
+    return map_batches(
+        m, step, schema, key="doc_id",
         partitions=m.sparkSession.sparkContext.defaultParallelism)
-    for c in group:
-        edges = edges.withColumn(c, F.col(c).cast(ddl(c)))
-    return edges
 
 
 def cooccurrence_edges_grouped(
@@ -247,9 +238,9 @@ def cooccurrence_edges_grouped(
     (doc_id, text) table, which goes through the single text span
     ``ingest.normalize_documents`` builds. The JVM only reads the
     stored spans; they cross into Python once, one row per document,
-    through ``mapInArrow``. There each document's text spans are
-    joined (``ingest.join_text_spans``) and tokenized
-    (``tokenize.sentence_tokens_py``), then rule NER
+    through one batch step (``utils.map_batches``). There each
+    document's text spans are joined (``ingest.join_text_spans``) and
+    tokenized (``tokenize.sentence_tokens_py``), then rule NER
     (``ner.gazetteer_runs``), graph-rules unification
     (``unify_core.unify_doc`` with ``min_appearances``) and
     ``doc_edges`` run back to back. A document is one row, so doc_id
@@ -265,19 +256,17 @@ def cooccurrence_edges_grouped(
     if "spans" not in documents_df.columns:
         documents_df = ingest.normalize_documents(documents_df)
 
-    def run(batches):
-        import pyarrow as pa
-
+    def step(batches):
         from renard_spark.operators.ner import gazetteer_runs
         from renard_spark.operators.tokenize import sentence_tokens_py
         from renard_spark.operators.unify_core import unify_doc
         from renard_spark.sources.ingest import join_text_spans
 
         for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            texts = join_text_spans(batch.column(1)).to_pylist()
+            # the spans are joined with Arrow compute, never converted
+            texts = join_text_spans(batch.arrow.column("spans")).to_pylist()
             out_doc, out_src, out_dst, out_w = [], [], [], []
-            for doc_id, text in zip(doc_ids, texts):
+            for doc_id, text in zip(batch["doc_id"], texts):
                 if not text:
                     continue
                 mentions, sent_start, sent_end = [], [], []
@@ -302,17 +291,12 @@ def cooccurrence_edges_grouped(
                     out_src.append(src)
                     out_dst.append(dst)
                     out_w.append(w)
-            if out_doc:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_doc, pa.string()),
-                     pa.array(out_src, pa.string()),
-                     pa.array(out_dst, pa.string()),
-                     pa.array(out_w, pa.int64())],
-                    names=["doc_id", "src", "dst", "weight"],
-                )
+            yield {"doc_id": out_doc, "src": out_src, "dst": out_dst,
+                   "weight": out_w}
 
-    return documents_df.select("doc_id", "spans").mapInArrow(
-        run, schema="doc_id string, src string, dst string, weight long"
+    return map_batches(
+        documents_df.select("doc_id", "spans"), step,
+        "doc_id string, src string, dst string, weight long",
     )
 
 

@@ -23,7 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from renard_spark.operators.utils import cached_model, map_batches
 from renard_spark.resources.gazetteers import FEMALE_PRONOUNS, MALE_PRONOUNS
+
+COREFS_SCHEMA = ("doc_id string, chain_id int, start_idx int, end_idx int,"
+                 " mention_str string")
 
 # A coref *scorer* is the injectable model seam (the reference's tibert
 # predict call, corefs/corefs.py:97-132): given a batch of token blocks
@@ -147,7 +151,27 @@ def make_rule_scorer(
     return scorer
 
 
-_SCORER_CACHE: dict[str, object] = {}
+def _map_chains(
+    doc_tokens_df: DataFrame, cols: list[str], namespace: str,
+    scorer_factory, cache_key: str | None, resolve,
+) -> DataFrame:
+    """The model resolvers' one crossing: per document,
+    ``resolve(tokens, scorer, *extra)`` over the rows of ``cols``
+    (doc_id, tokens, *extra) → its chains, emitted as ``COREFS_SCHEMA``
+    rows with canonical chain ids (chain order). The scorer is loaded
+    once per task through ``cached_model(namespace, cache_key, ...)``."""
+
+    def step(batches):
+        scorer = cached_model(namespace, cache_key, scorer_factory)
+        for batch in batches:
+            yield [
+                (doc_id, cid, s, e, " ".join(toks[s:e]))
+                for doc_id, toks, *extra in zip(*(batch[c] for c in cols))
+                for cid, chain in enumerate(resolve(toks, scorer, *extra))
+                for s, e in chain
+            ]
+
+    return map_batches(doc_tokens_df.select(*cols), step, COREFS_SCHEMA)
 
 
 def model_corefs(
@@ -168,37 +192,11 @@ def model_corefs(
     callable returning the scorer; ``cache_key`` memoizes it per
     executor worker (model singleton).
     """
-    import pandas as pd
-
-    def run(batches):
-        scorer = _SCORER_CACHE.get(cache_key) if cache_key else None
-        if scorer is None:
-            scorer = scorer_factory()
-            if cache_key:
-                _SCORER_CACHE[cache_key] = scorer
-        for pdf in batches:
-            rows = []
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                toks = list(toks)
-                chains = resolve_doc_corefs(
-                    toks, scorer, block_size, hierarchical_merging
-                )
-                for cid, chain in enumerate(chains):
-                    for s, e in chain:
-                        rows.append(
-                            (doc_id, cid, s, e, " ".join(toks[s:e]))
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "chain_id", "start_idx", "end_idx", "mention_str",
-                ],
-            )
-
-    return doc_tokens_df.select("doc_id", "tokens").mapInPandas(
-        run,
-        schema="doc_id string, chain_id int, start_idx int, end_idx int,"
-        " mention_str string",
+    return _map_chains(
+        doc_tokens_df, ["doc_id", "tokens"], "coref", scorer_factory,
+        cache_key,
+        lambda toks, scorer: resolve_doc_corefs(
+            toks, scorer, block_size, hierarchical_merging),
     )
 
 
@@ -347,41 +345,9 @@ def coreferee_corefs(
     """SpacyCoreferee-style resolver over (doc_id, tokens) [+ optional
     ``blocks_col``: array<array<string>> of dynamic-block tokens] —
     same output schema as ``model_corefs``/``rule_corefs``."""
-    import pandas as pd
-
-    from renard_spark.operators.ner import cached_model
-
-    def run(batches):
-        scorer = cached_model("coreferee", cache_key, scorer_factory)
-        for pdf in batches:
-            rows = []
-            for idx in range(len(pdf)):
-                doc_id = pdf["doc_id"].iloc[idx]
-                toks = list(pdf["tokens"].iloc[idx])
-                blocks = None
-                if blocks_col is not None:
-                    raw = pdf[blocks_col].iloc[idx]
-                    if raw is not None:
-                        blocks = [list(b) for b in raw]
-                chains = coreferee_doc_corefs(
-                    toks, scorer, max_chunk_size, blocks
-                )
-                for cid, chain in enumerate(chains):
-                    for s, e in chain:
-                        rows.append(
-                            (doc_id, cid, s, e, " ".join(toks[s:e]))
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "chain_id", "start_idx", "end_idx",
-                    "mention_str",
-                ],
-            )
-
     cols = ["doc_id", "tokens"] + ([blocks_col] if blocks_col else [])
-    return doc_tokens_df.select(*cols).mapInPandas(
-        run,
-        schema="doc_id string, chain_id int, start_idx int,"
-        " end_idx int, mention_str string",
+    return _map_chains(
+        doc_tokens_df, cols, "coreferee", scorer_factory, cache_key,
+        lambda toks, scorer, blocks=None: coreferee_doc_corefs(
+            toks, scorer, max_chunk_size, blocks),
     )

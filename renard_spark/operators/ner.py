@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from renard_spark.operators.utils import cached_model, map_batches
+
 ENTITY_COLS = ["doc_id", "start_idx", "end_idx", "mention_str", "tag"]
 
 
@@ -234,24 +236,6 @@ def hf_ner_model(model_path: str, max_length: int = 512):
     return predict  # pragma: no cover
 
 
-_PREDICT_CACHE: dict[tuple[str, str], object] = {}
-
-
-def cached_model(namespace: str, cache_key: str | None, factory):
-    """Executor-local model cache, namespaced per operator: the same
-    caller-supplied ``cache_key`` (e.g. one shared model path) used by
-    two different stages (NER vs speaker scorer vs reranker ...) must
-    never return the other stage's callable, so the real key is
-    ``(namespace, cache_key)``."""
-    key = (namespace, cache_key)
-    fn = _PREDICT_CACHE.get(key) if cache_key else None
-    if fn is None:
-        fn = factory()
-        if cache_key:
-            _PREDICT_CACHE[key] = fn
-    return fn
-
-
 def model_ner(
     sent_tokens_df: DataFrame,
     model_factory,
@@ -273,14 +257,13 @@ def model_ner(
     ``predict`` function; pass ``cache_key`` (e.g. the model path) to
     memoize the loaded model per executor worker.
     """
-    import pandas as pd
 
-    def run(batches):
+    def step(batches):
         predict = cached_model("ner", cache_key, model_factory)
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            sents = [list(s) for s in pdf["toks"]]
-            metas = list(zip(pdf["doc_id"], pdf["sent_start"]))
+            sents = batch["toks"]
+            metas = list(zip(batch["doc_id"], batch["sent_start"]))
             for off in range(0, len(sents), batch_size):
                 chunk = sents[off:off + batch_size]
                 preds = predict(chunk)
@@ -291,13 +274,12 @@ def model_ner(
                         wpl, w2w, cm, len(toks_), strict=strict_realign
                     )
                     for i, (t, lab) in enumerate(zip(toks_, labels)):
-                        rows.append((doc_id, int(s0) + i, t, lab))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "tok_idx", "token", "bio_tag"]
-            )
+                        rows.append((doc_id, s0 + i, t, lab))
+            yield rows
 
-    tagged = sent_tokens_df.select("doc_id", "sent_start", "toks").mapInPandas(
-        run, schema="doc_id string, tok_idx int, token string, bio_tag string"
+    tagged = map_batches(
+        sent_tokens_df.select("doc_id", "sent_start", "toks"), step,
+        "doc_id string, tok_idx int, token string, bio_tag string",
     )
     return bio_decode(tagged, resolve_inconsistencies)
 
@@ -343,29 +325,22 @@ def rule_ner_sentences(
     Maximal runs of capitalized tokens whose joined surface form is in
     the gazetteer become entities. Runs never cross sentence boundaries
     (the terminal punctuation token breaks them), so run detection is
-    sentence-local: one Arrow-batched mapInPandas, gazetteer broadcast
-    in the closure. Checked against a sequential whole-document oracle
-    (``tests/oracle.py:rule_ner_oracle``)."""
-    import pandas as pd
-
+    sentence-local: one Arrow-batched step (``utils.map_batches``),
+    gazetteer broadcast in the closure. Checked against a sequential
+    whole-document oracle (``tests/oracle.py:rule_ner_oracle``)."""
     gaz = set(surface_gazetteer)
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, off, toks in zip(
-                pdf["doc_id"], pdf["sent_start"], pdf["toks"]
-            ):
-                rows.extend(
-                    (doc_id, s, e, surface)
-                    for surface, s, e in gazetteer_runs(list(toks), gaz, int(off))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "start_idx", "end_idx", "mention_str"]
-            )
+    def step(batches):
+        for batch in batches:
+            yield [
+                (doc_id, s, e, surface)
+                for doc_id, off, toks in zip(
+                    batch["doc_id"], batch["sent_start"], batch["toks"])
+                for surface, s, e in gazetteer_runs(toks, gaz, off)
+            ]
 
-    out = sent_tokens_df.select("doc_id", "sent_start", "toks").mapInPandas(
-        run,
-        schema="doc_id string, start_idx int, end_idx int, mention_str string",
+    out = map_batches(
+        sent_tokens_df.select("doc_id", "sent_start", "toks"), step,
+        "doc_id string, start_idx int, end_idx int, mention_str string",
     )
     return out.withColumn("tag", F.lit(tag))

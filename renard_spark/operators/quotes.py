@@ -4,8 +4,8 @@ QuoteDetector (reference quote_detection.py:17-71) is a stateful
 open/close scan over quote-mark tokens: an opening mark opens a quote
 when none is open; ANY quote mark closes an open quote. The engine
 filters the token stream to quote marks first (a tiny fraction of
-tokens — JVM-side filter), then runs the alternating scan per doc in an
-Arrow-batched per-batch scan (map_in_pandas_by_key).
+tokens — JVM-side filter), then runs the alternating scan per doc in
+one keyed Arrow-batch step (``utils.map_batches``).
 
 Speaker attribution: the reference uses a neural scorer
 (speaker_attribution.py:21-136, score>0.5 else None). The engine ships
@@ -20,9 +20,10 @@ from __future__ import annotations
 from itertools import groupby
 from operator import itemgetter
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from renard_spark.operators.utils import cached_model, map_batches
 
 DEFAULT_QUOTE_PAIRS = [('"', '"'), ("``", "''"), ("«", "»"), ("“", "”")]
 
@@ -34,7 +35,7 @@ def detect_quotes(
     (both quote-mark tokens included in [start, end)).
 
     Quote-mark rows (a tiny filtered fraction of tokens) are
-    repartitioned+sorted by doc and scanned in ONE mapInPandas call per
+    repartitioned+sorted by doc and scanned in ONE Python call per
     Arrow batch (one pass over plain lists, trailing doc carried) —
     not one Python call per document."""
     pairs = quote_pairs or DEFAULT_QUOTE_PAIRS
@@ -45,29 +46,27 @@ def detect_quotes(
         "doc_id", "tok_idx", "token"
     )
 
-    from renard_spark.operators.utils import map_in_pandas_by_key
+    def step(batches):
+        for batch in batches:
+            # the alternating open/close scan
+            rows = []
+            recs = zip(batch["doc_id"], batch["tok_idx"], batch["token"])
+            for doc_id, doc in groupby(recs, key=itemgetter(0)):
+                open_start = None
+                qid = 0
+                for _, tok_idx, token in doc:
+                    if open_start is None:
+                        if token in opens:
+                            open_start = tok_idx
+                    else:
+                        rows.append((doc_id, qid, open_start, tok_idx + 1))
+                        qid += 1
+                        open_start = None
+            yield rows
 
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        # plain lists, one pass: the alternating open/close scan
-        rows = []
-        recs = zip(*(pdf[c].tolist() for c in ("doc_id", "tok_idx", "token")))
-        for doc_id, doc in groupby(recs, key=itemgetter(0)):
-            open_start = None
-            qid = 0
-            for _, tok_idx, token in doc:
-                if open_start is None:
-                    if token in opens:
-                        open_start = int(tok_idx)
-                else:
-                    rows.append((doc_id, qid, open_start, int(tok_idx) + 1))
-                    qid += 1
-                    open_start = None
-        return pd.DataFrame(rows, columns=["doc_id", "quote_id", "start", "end"])
-
-    return map_in_pandas_by_key(
-        qtoks, process,
-        schema="doc_id string, quote_id int, start int, end int",
-        sort_cols=("tok_idx",),
+    return map_batches(
+        qtoks, step, "doc_id string, quote_id int, start int, end int",
+        key="doc_id", sort_cols=("tok_idx",),
     )
 
 
@@ -151,25 +150,17 @@ def model_speakers(
         .join(ma, "doc_id", "left")
     )
 
-    from renard_spark.operators.ner import cached_model
-
-    def run(batches):
+    def step(batches):
         scorer = cached_model("speaker", cache_key, scorer_factory)
-        import pandas as pd
-
-        for pdf in batches:
+        for batch in batches:
             rows = []
             for doc_id, tokens, qs, ms in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["_qs"], pdf["_ms"]
+                batch["doc_id"], batch["tokens"], batch["_qs"], batch["_ms"]
             ):
-                tokens = list(tokens)
-                quotes = [
-                    (int(q["quote_id"]), int(q["start"]), int(q["end"]))
-                    for q in qs
-                ]
+                quotes = [(q["quote_id"], q["start"], q["end"]) for q in qs]
                 mentions = [
-                    (m["char_id"], int(m["start_idx"]), int(m["end_idx"]))
-                    for m in (ms if ms is not None else [])
+                    (m["char_id"], m["start_idx"], m["end_idx"])
+                    for m in ms or []
                 ]
                 examples = build_speaker_examples(
                     len(tokens), quotes, mentions, ctx_len, repr_nb
@@ -188,25 +179,16 @@ def model_speakers(
                     if cur is None or (-sc, cid) < (-cur[0], cur[1]):
                         best[qid] = (float(sc), cid)
                 for qid, s, e in quotes:
-                    sc_cid = best.get(qid)
-                    if sc_cid is not None and sc_cid[0] > 0.5:
-                        rows.append((doc_id, qid, s, e, sc_cid[1], sc_cid[0]))
-                    else:
-                        rows.append(
-                            (doc_id, qid, s, e, None,
-                             sc_cid[0] if sc_cid else None)
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "quote_id", "start", "end",
-                    "speaker_char_id", "speaker_score",
-                ],
-            )
+                    sc, cid = best.get(qid, (None, None))
+                    # kept only when the score clears 0.5
+                    rows.append((doc_id, qid, s, e,
+                                 cid if sc is not None and sc > 0.5 else None,
+                                 sc))
+            yield rows
 
-    return assembled.mapInPandas(
-        run,
-        schema="doc_id string, quote_id int, start int, end int,"
+    return map_batches(
+        assembled, step,
+        "doc_id string, quote_id int, start int, end int,"
         " speaker_char_id string, speaker_score double",
     )
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from renard_spark.operators.utils import cached_model, map_batches
+
 TRIPLE_RE = r"\(([^,]+), ?([^,]+), ?([^,]+)\)"
 
 # verb → relation label for the deterministic extractor
@@ -74,27 +76,21 @@ def model_relations(
     (doc_id, sent_idx, toks). → raw triples
     (doc_id, sent_idx, raw_subj, rel, raw_obj), feed to resolve_triples.
     """
-    import pandas as pd
 
-    from renard_spark.operators.ner import cached_model
-
-    def run(batches):
+    def step(batches):
         generate = cached_model("relgen", cache_key, generator_factory)
-        for pdf in batches:
-            sents = [list(s) for s in pdf["toks"]]
+        for batch in batches:
+            sents = batch["toks"]
             outs: list[str] = []
             for off in range(0, len(sents), batch_size):
                 outs.extend(generate(sents[off:off + batch_size]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sent_idx": pdf["sent_idx"],
-                    "generated": outs,
-                }
-            )
+            yield {"doc_id": batch.arrow.column("doc_id"),
+                   "sent_idx": batch.arrow.column("sent_idx"),
+                   "generated": outs}
 
-    generated = sent_tokens_df.select("doc_id", "sent_idx", "toks").mapInPandas(
-        run, schema="doc_id string, sent_idx int, generated string"
+    generated = map_batches(
+        sent_tokens_df.select("doc_id", "sent_idx", "toks"), step,
+        "doc_id string, sent_idx int, generated string",
     )
     return parse_text_triples(generated).select(
         "doc_id", "sent_idx", "raw_subj", "rel", "raw_obj"

@@ -31,9 +31,10 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from renard_spark.operators.utils import map_batches
 
 # word characters (incl. apostrophes) run, else any single non-space
 # char. UNICODE-aware (\p{L}\p{N}) so accented / non-Latin text
@@ -198,27 +199,19 @@ def tokens_with_offsets(df: DataFrame, text_col: str = "text") -> DataFrame:
     (doc_id, sent_idx, tok_idx, token, char_start, char_end).
     Only needed when downstream blocks are char-addressed."""
 
-    def run(batches):
-        for pdf in batches:
+    def step(batches):
+        for batch in batches:
             rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for doc_id, text in zip(batch["doc_id"], batch[text_col]):
                 tk, si, off = tokenize_text_py(text or "")
                 for i, (t, s, (cs, ce)) in enumerate(zip(tk, si, off)):
                     rows.append((doc_id, s, i, t, cs, ce))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sent_idx", "tok_idx", "token",
-                    "char_start", "char_end",
-                ],
-            )
+            yield rows
 
-    return df.select("doc_id", text_col).mapInPandas(
-        run,
-        schema=(
-            "doc_id string, sent_idx int, tok_idx int, token string,"
-            " char_start int, char_end int"
-        ),
+    return map_batches(
+        df.select("doc_id", text_col), step,
+        "doc_id string, sent_idx int, tok_idx int, token string,"
+        " char_start int, char_end int",
     )
 
 

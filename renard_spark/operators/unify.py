@@ -8,9 +8,9 @@
   (character_unification.py:159-464). Pair rules + contradiction edge
   removal + connected components run **per document** (the per-doc
   graph is tiny — distinct PER names of one document — while docs
-  distribute across executors) via the per-Arrow-batch execution in
-  ``operators.utils.map_in_pandas_by_key`` — one Python call per batch,
-  never per document. The cross-document entity table (one alias graph
+  distribute across executors) in one keyed Arrow-batch step
+  (``operators.utils.map_batches``) — one Python call per batch, never
+  per document. The cross-document entity table (one alias graph
   over a whole corpus) is ``operators.unify_scale.unify_distributed``.
 
 Unified-mention schema (stage table):
@@ -24,11 +24,11 @@ from __future__ import annotations
 from itertools import groupby, repeat
 from operator import itemgetter
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from renard_spark.operators.unify_core import unify_doc
+from renard_spark.operators.utils import map_batches
 
 UNIFIED_SCHEMA = (
     "doc_id string, char_id string, names array<string>, gender string,"
@@ -117,8 +117,6 @@ def graph_rules_unify(
     entities_df: (doc_id, start_idx, end_idx, mention_str, tag)
     corefs_df:   (doc_id, chain_id, start_idx, end_idx, mention_str)
     """
-    from renard_spark.operators.utils import map_in_pandas_by_key
-
     kwargs = dict(
         lang=lang,
         min_appearances=min_appearances,
@@ -127,33 +125,29 @@ def graph_rules_unify(
         ignore_leading_determiner=ignore_leading_determiner,
     )
     with_chains = corefs_df is not None
-    cols = ["doc_id", "char_id", "names", "gender",
-            "mention_str", "start_idx", "end_idx"]
 
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        # plain lists, one pass: per-document pandas indexing costs
-        # several times the unification itself
-        rows = []
-        tags = ((pdf["_kind"].tolist(), pdf["chain_id"].tolist())
-                if with_chains else (repeat(1), repeat(None)))
-        recs = zip(*(pdf[c].tolist() for c in (
-            "doc_id", "mention_str", "start_idx", "end_idx")), *tags)
-        for doc_id, doc in groupby(recs, key=itemgetter(0)):
-            mentions, chains = [], {}
-            for _, surface, s, e, kind, chain in doc:
-                if kind == 1:
-                    mentions.append((surface, int(s), int(e)))
-                else:
-                    chains.setdefault(chain, []).append(
-                        (surface, int(s), int(e)))
-            # chain and mention order within a document do not change
-            # unify_doc's result
-            chain_list = list(chains.values()) if with_chains else None
-            for c in unify_doc(mentions, chain_list, **kwargs):
-                for surface, s, e in c["mentions"]:
-                    rows.append((doc_id, c["char_id"], c["names"],
-                                 c["gender"], surface, s, e))
-        return pd.DataFrame(rows, columns=cols)
+    def step(batches):
+        for batch in batches:
+            rows = []
+            tags = ((batch["_kind"], batch["chain_id"]) if with_chains
+                    else (repeat(1), repeat(None)))
+            recs = zip(batch["doc_id"], batch["mention_str"],
+                       batch["start_idx"], batch["end_idx"], *tags)
+            for doc_id, doc in groupby(recs, key=itemgetter(0)):
+                mentions, chains = [], {}
+                for _, surface, s, e, kind, chain in doc:
+                    if kind == 1:
+                        mentions.append((surface, s, e))
+                    else:
+                        chains.setdefault(chain, []).append((surface, s, e))
+                # chain and mention order within a document do not
+                # change unify_doc's result
+                chain_list = list(chains.values()) if with_chains else None
+                for c in unify_doc(mentions, chain_list, **kwargs):
+                    for surface, s, e in c["mentions"]:
+                        rows.append((doc_id, c["char_id"], c["names"],
+                                     c["gender"], surface, s, e))
+            yield rows
 
     tagged = entities_df.filter(F.col("tag") == character_tag).select(
         "doc_id", "start_idx", "end_idx", "mention_str"
@@ -169,7 +163,7 @@ def graph_rules_unify(
             ),
             allowMissingColumns=True,
         )
-    return map_in_pandas_by_key(tagged, process, schema=UNIFIED_SCHEMA)
+    return map_batches(tagged, step, UNIFIED_SCHEMA, key="doc_id")
 
 
 def characters_table(unified_mentions: DataFrame) -> DataFrame:

@@ -17,8 +17,8 @@ SURVEY.md §5 determinism caveat):
 
 This module has no Spark imports: it is unit-testable standalone. It
 runs once per document, many documents per Python call: in the batch
-``mapInPandas`` body of ``unify.graph_rules_unify`` and in the one
-``mapInArrow`` crossing of ``cooccur.cooccurrence_edges_grouped``. The
+steps (``utils.map_batches``) of ``unify.graph_rules_unify`` and of
+``cooccur.cooccurrence_edges_grouped``. The
 cross-document ``unify_scale.unify_distributed`` evaluates the same
 alias rule (``_NameFeatures.related``) on its candidate pairs and runs
 ``alias_components`` once per initial component.

@@ -1,5 +1,12 @@
-"""Small dataflow utilities from the reference's helper inventory.
+"""The engine's one Python crossing, and small dataflow utilities
+from the reference's helper inventory.
 
+- ``map_batches``: every per-batch Python step (NER, tokenization with
+  offsets, quote scans, unification, co-occurrence, model inference,
+  media decode, ...) crosses here: one ``mapInArrow`` over plain-list
+  batches, optionally keyed so a batch holds complete groups, with
+  output types taken from the declared schema. ``cached_model`` is the
+  executor-local model cache the model-backed steps share.
 - ``make_vocab``: first-seen-order element→index map
   (/root/reference/renard/utils.py:137-152) as a window over first
   occurrence.
@@ -18,48 +25,123 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 
-def map_in_pandas_by_key(
+_PREDICT_CACHE: dict[tuple[str, str], object] = {}
+
+
+def cached_model(namespace: str, cache_key: str | None, factory):
+    """Executor-local model cache, namespaced per operator: the same
+    caller-supplied ``cache_key`` (e.g. one shared model path) used by
+    two different stages (NER vs speaker scorer vs reranker ...) must
+    never return the other stage's callable, so the real key is
+    ``(namespace, cache_key)``. Without a ``cache_key`` the factory
+    runs on every call; a step calls this once per task, before its
+    batch loop."""
+    key = (namespace, cache_key)
+    fn = _PREDICT_CACHE.get(key) if cache_key else None
+    if fn is None:
+        fn = factory()
+        if cache_key:
+            _PREDICT_CACHE[key] = fn
+    return fn
+
+
+class Batch(dict):
+    """One Arrow record batch as plain Python lists: ``batch[name]`` is
+    that column's ``to_pylist()``, converted on first use. ``arrow`` is
+    the record batch itself, for a column a step passes through or
+    reduces with Arrow compute instead of converting it."""
+
+    def __init__(self, arrow):
+        super().__init__()
+        self.arrow = arrow
+
+    def __missing__(self, name: str) -> list:
+        col = self[name] = self.arrow.column(name).to_pylist()
+        return col
+
+
+def map_batches(
     df: DataFrame,
-    process,
-    schema: str,
-    key: str = "doc_id",
+    step,
+    schema: str | StructType,
+    key: str | None = None,
     sort_cols: tuple[str, ...] = (),
     partitions: int | None = None,
 ) -> DataFrame:
-    """Per-key imperative logic WITHOUT per-key Python calls: the
-    per-group applyInPandas/cogroup APIs invoke Python once per GROUP —
-    measured ~10× the algorithm cost at 5k-doc scale and the dominant
-    constant at 10^12 docs. Instead: repartition+sort by ``key``, then
-    ONE ``mapInPandas`` call per Arrow batch; ``process(pdf)`` receives
-    a frame of complete key-groups (group rows are contiguous; the
-    trailing group of each batch is carried into the next batch of the
-    same partition, which the iterator delivers in order).
-    ``partitions``: the repartition's count; None lets AQE coalesce it,
-    which runs a mention-sized table as one or two tasks."""
-    import pandas as pd
+    """The engine's one Python crossing: ``df``'s Arrow batches through
+    ``mapInArrow``, one ``step`` call per task.
+
+    ``step(batches)`` is a generator over the task's batches, each a
+    :class:`Batch`; work before its loop (loading a model) runs once
+    per task. It yields outputs in ``schema``'s columns: a list of row
+    tuples, or a dict of columns (lists, numpy arrays or Arrow arrays).
+    Each becomes a record batch of the Arrow types derived once, on the
+    driver, from ``schema`` (a DDL string or ``StructType``):
+    ``mapInArrow`` rejects a batch whose types differ from the schema,
+    such as int64 Python ints for an ``int`` column, and an all-NULL or
+    empty output column comes out typed.
+
+    ``key``: per-key logic without one Python call per key (the grouped
+    ``applyInPandas`` APIs cost ~10x the algorithm at 5k-document
+    scale). ``df`` is repartitioned and sorted by ``key`` (then
+    ``sort_cols``), and each batch the step sees holds complete
+    key-groups: the trailing group of an Arrow batch is carried into
+    the next batch of its partition, which the iterator delivers in
+    order. ``partitions``: the repartition's count; None lets AQE
+    coalesce it, which runs a mention-sized table as one or two
+    tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+
+    def complete_groups(batches):
+        import pyarrow.compute as pc
+
+        pending = None
+        for b in batches:
+            if pending is not None:
+                b = pa.Table.from_batches([pending, b]).combine_chunks() \
+                    .to_batches()[0]
+                pending = None
+            if b.num_rows == 0:
+                continue
+            keys = b.column(key)
+            # sorted ⇒ the trailing group starts at its key's first
+            # row; a NULL key matches no row, so nothing is carried
+            cut = pc.index(keys, keys[-1]).as_py()
+            cut = b.num_rows if cut < 0 else cut
+            if cut < b.num_rows:
+                pending = b.slice(cut)
+            if cut:
+                yield b.slice(0, cut)
+        if pending is not None:
+            yield pending
+
+    def to_batch(out) -> pa.RecordBatch:
+        if isinstance(out, dict):
+            cols = [out[name] for name in arrow_schema.names]
+        else:
+            cols = list(zip(*out)) or [()] * len(arrow_schema)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
 
     def run(batches):
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if pdf.empty:
-                continue
-            last = pdf[key].iloc[-1]
-            mask = pdf[key] == last
-            pending = pdf[mask]
-            work = pdf[~mask]
-            if not work.empty:
-                yield process(work)
-        if pending is not None and not pending.empty:
-            yield process(pending)
+        if key is not None:
+            batches = complete_groups(batches)
+        for out in step(Batch(b) for b in batches):
+            yield to_batch(out)
 
-    part = (df.repartition(partitions, key) if partitions
-            else df.repartition(key)).sortWithinPartitions(key, *sort_cols)
-    return part.mapInPandas(run, schema=schema)
+    if key is not None:
+        df = (df.repartition(partitions, key) if partitions
+              else df.repartition(key)).sortWithinPartitions(key, *sort_cols)
+    return df.mapInArrow(run, schema=struct)
 
 
 def global_running_total(
@@ -184,7 +266,6 @@ def char_blocks_to_token_blocks(
     is one doc_id equi-join + O(B log T) lookups, bounded fanout.
     """
     import numpy as np
-    import pandas as pd
 
     toks = offsets_df.groupBy("doc_id").agg(
         F.array_sort(
@@ -202,41 +283,28 @@ def char_blocks_to_token_blocks(
     )
     joined = b.join(toks, "doc_id", "left")
 
-    def run(batches):
-        for pdf in batches:
+    def step(batches):
+        for batch in batches:
             rows = []
             for doc_id, blocks, cs, ti in zip(
-                pdf["doc_id"], pdf["_blocks"], pdf["_cs"], pdf["_ti"]
+                batch["doc_id"], batch["_blocks"], batch["_cs"], batch["_ti"]
             ):
-                cs_arr = np.asarray(
-                    cs if cs is not None else [], dtype=np.int64
-                )
-                ti_arr = np.asarray(
-                    ti if ti is not None else [], dtype=np.int64
-                )
+                cs_arr = np.asarray(cs or [], dtype=np.int64)
                 for blk in blocks:
                     if len(cs_arr) == 0:
                         s = e = 0
                     else:
-                        i1 = int(
-                            np.searchsorted(
-                                cs_arr, blk["char_start"], side="right"
-                            )
+                        i1, i2 = np.searchsorted(
+                            cs_arr, (blk["char_start"], blk["char_end"]),
+                            side="right",
                         ) - 1
-                        i2 = int(
-                            np.searchsorted(
-                                cs_arr, blk["char_end"], side="right"
-                            )
-                        ) - 1
-                        s = int(ti_arr[i1]) if i1 >= 0 else 0
-                        e = int(ti_arr[i2]) if i2 >= 0 else 0
-                    rows.append((doc_id, int(blk["block_id"]), s, e))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "block_id", "start", "end"]
-            )
+                        s = ti[i1] if i1 >= 0 else 0
+                        e = ti[i2] if i2 >= 0 else 0
+                    rows.append((doc_id, blk["block_id"], s, e))
+            yield rows
 
-    return joined.mapInPandas(
-        run, schema="doc_id string, block_id int, start int, end int"
+    return map_batches(
+        joined, step, "doc_id string, block_id int, start int, end int"
     )
 
 

@@ -2,7 +2,7 @@
 
 Local-mode friendly but configured the way a multi-executor cluster run
 would be: AQE on (runtime join re-planning + skew-join splitting), Arrow
-on (every pandas UDF crossing is Arrow-batched), shuffle partitions
+on (every Python crossing is Arrow-batched), shuffle partitions
 sized to the parallelism rather than the 200 default.
 """
 

@@ -49,6 +49,31 @@ def test_default_pipeline_triples_is_one_crossing(spark):
     assert "lambdafunction" not in below, plan
 
 
+def test_production_stages_cross_python_only_through_arrow(spark, tmp_path):
+    """Every Python node in the executed plan of every stage of the
+    production stage set (``run.build_runner``: KG, speech and media
+    stages, rule corefs, lexicon polarities) is a ``MapInArrow``, the
+    one batch crossing: no ``MapInPandas``, no row-at-a-time
+    ``BatchEvalPython``."""
+    from renard_spark import run
+
+    docs = spark.createDataFrame(
+        corpus.generate_documents_pdf(5), corpus.DOCUMENTS_SCHEMA
+    )
+    runner = run.build_runner(spark, docs, str(tmp_path / "kg"))
+    names = run.KG_STAGES + run.SPEECH_STAGES + run.MEDIA_STAGES
+    assert {st.name for st in runner.stages} == set(names)
+    tables = pipeline.compose(runner.stages, runner.inputs, persist=False)
+    for name in names:
+        plan = _plan(tables[name])
+        python_nodes = [
+            line for line in plan.splitlines()
+            if re.search(r"MapIn|InPandas|EvalPython", line)
+        ]
+        assert all("MapInArrow" in line for line in python_nodes), (
+            name, plan)
+
+
 def test_column_pruning_reaches_scan(spark, tmp_path):
     # write a wide table, read two columns → ReadSchema must be pruned
     p = str(tmp_path / "wide")

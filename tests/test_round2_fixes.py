@@ -258,35 +258,40 @@ def test_gender_tie_component_parity_vs_scale(spark):
     assert len(pg) == 1 and next(iter(pg))[1] == "MALE"
 
 
-def test_map_in_pandas_by_key_batch_boundary_carry(spark):
+def test_map_batches_key_batch_boundary_carry(spark):
     """Force 7-row Arrow batches so key-groups SPAN batch boundaries:
-    the trailing-group carry must reassemble every group exactly (the
-    default 10k batches never exercise this path in other tests)."""
-    from renard_spark.operators.utils import map_in_pandas_by_key
+    the keyed helper's trailing-group carry must reassemble every group
+    exactly (the default 10k batches never exercise this path in other
+    tests)."""
+    from itertools import groupby
+
+    from renard_spark.operators.utils import map_batches
 
     rows = [
         (f"doc{d:02d}", i, d * 100 + i) for d in range(9) for i in range(5)
     ]
     df = spark.createDataFrame(rows, "doc_id string, i int, v int")
 
-    def process(pdf):
-        import pandas as pd
-
-        out = []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            # group must arrive COMPLETE and in sort order
-            out.append((doc_id, len(g), int(g["v"].sum()),
-                        list(g["i"]) == sorted(g["i"])))
-        return pd.DataFrame(out, columns=["doc_id", "n", "s", "ordered"])
+    def step(batches):
+        for batch in batches:
+            recs = zip(batch["doc_id"], batch["i"], batch["v"])
+            out = []
+            for doc_id, g in groupby(recs, key=lambda r: r[0]):
+                g = list(g)
+                # group must arrive COMPLETE and in sort order
+                idx = [i for _, i, _ in g]
+                out.append((doc_id, len(g), sum(v for _, _, v in g),
+                            idx == sorted(idx)))
+            yield out
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
         got = {
             r.doc_id: (r.n, r.s, r.ordered)
-            for r in map_in_pandas_by_key(
-                df, process, "doc_id string, n int, s long, ordered boolean",
-                sort_cols=("i",),
+            for r in map_batches(
+                df, step, "doc_id string, n int, s long, ordered boolean",
+                key="doc_id", sort_cols=("i",),
             ).collect()
         }
     finally:
@@ -296,6 +301,85 @@ def test_map_in_pandas_by_key_batch_boundary_carry(spark):
         for d in range(9)
     }
     assert got == want
+
+
+def test_map_batches_output_types(spark):
+    """Outputs come out in the declared schema's Arrow types whatever
+    the Python values: zero-row outputs, all-NULL columns, Python ints
+    for ``int`` and ``long`` columns, and a NULL-bearing integer group
+    key through ``cooccurrence_edges``."""
+    from renard_spark.operators.cooccur import doc_edges
+    from renard_spark.operators.quotes import model_speakers
+    from renard_spark.operators.utils import map_batches
+
+    df = spark.range(0, 20, numPartitions=2)
+
+    def step(batches):
+        for batch in batches:
+            ids = batch["id"]
+            # zero rows for every batch that starts at an even id
+            yield [] if ids[0] % 2 == 0 else [(i, i * 2**40) for i in ids]
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
+    try:
+        got = sorted(map(tuple, map_batches(
+            df, step, "a int, b long").collect()))
+        assert got == [(i, i * 2**40) for i in range(1, 20, 2)]
+        empty = map_batches(df, lambda bs: ([] for _ in bs), "a int")
+        assert empty.collect() == []
+
+        # one document per batch: d1 has no candidate speakers, so its
+        # batch's speaker columns are all NULL; d2's candidate scores
+        # 0.2, under the gate
+        doc_tokens = spark.createDataFrame(
+            [("d1", ["t"] * 30), ("d2", ["t"] * 30)],
+            "doc_id string, tokens array<string>",
+        )
+        quotes = spark.createDataFrame(
+            [("d1", 0, 2, 5), ("d1", 1, 9, 12), ("d2", 0, 2, 5)],
+            "doc_id string, quote_id int, start int, end int",
+        )
+        mentions = spark.createDataFrame(
+            [("d2", "amy", 7, 8)],
+            "doc_id string, char_id string, start_idx int, end_idx int",
+        )
+        speakers = {
+            (r.doc_id, r.quote_id): (r.speaker_char_id, r.speaker_score)
+            for r in model_speakers(
+                doc_tokens, quotes, mentions,
+                lambda: (lambda b: [0.2] * len(b)),
+            ).collect()
+        }
+        assert speakers == {("d1", 0): (None, None), ("d1", 1): (None, None),
+                            ("d2", 0): (None, 0.2)}
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+    # window_id NULL is its own group, next to windows 0 and 1
+    ms = [("A", 0, 1, 0), ("B", 2, 3, 0), ("A", 4, 5, None),
+          ("C", 6, 7, None), ("B", 8, 9, 1), ("C", 8, 9, 1)]
+    mdf = spark.createDataFrame(
+        [("d1", c, s, e, w) for c, s, e, w in ms],
+        "doc_id string, char_id string, start_idx int, end_idx int,"
+        " window_id int",
+    )
+    toks = spark.createDataFrame(
+        [("d1", t // 3, t) for t in range(10)],
+        "doc_id string, sent_idx int, tok_idx int",
+    )
+    edges = cooccur.cooccurrence_edges(
+        mdf, 1, "sentences", tokens_df=toks, group_col="window_id")
+    assert dict(edges.dtypes)["window_id"] == "int"
+    got = {(r.window_id, r.src, r.dst): r.weight for r in edges.collect()}
+    want = {}
+    for w in (0, None, 1):
+        sub = sorted(((c, s, e) for c, s, e, g in ms if g == w),
+                     key=lambda m: (m[1], m[2], m[0]))
+        for src, dst, weight in doc_edges(
+                sub, 1, "sentences", [0, 3, 6, 9], [3, 6, 9, 10]):
+            want[(w, src, dst)] = weight
+    assert want and got == want
 
 
 def test_graph_rules_unify_coref_path_matches_core(spark):

@@ -5,7 +5,7 @@ import pytest
 import renard_spark.operators.cc as cc_mod
 from renard_spark.functions.dedup import dedup_clusters
 from renard_spark.operators.coref import resolve_doc_corefs, split_blocks
-from renard_spark.operators.ner import _PREDICT_CACHE, cached_model
+from renard_spark.operators.utils import _PREDICT_CACHE, cached_model
 
 
 # ---------------------------------------------------- dedup_clusters typing
@@ -64,9 +64,11 @@ def test_cached_model_namespaced_per_operator():
     _PREDICT_CACHE.clear()
     a = cached_model("ner", "shared/path", lambda: "ner-model")
     b = cached_model("speaker", "shared/path", lambda: "speaker-model")
-    assert a == "ner-model" and b == "speaker-model"
+    c = cached_model("coref", "shared/path", lambda: "coref-model")
+    assert a == "ner-model" and b == "speaker-model" and c == "coref-model"
     # memoized per namespace
     assert cached_model("ner", "shared/path", lambda: "new") == "ner-model"
+    assert cached_model("coref", "shared/path", lambda: "new") == "coref-model"
     # no cache_key → no memoization
     assert cached_model("ner", None, lambda: "fresh") == "fresh"
     _PREDICT_CACHE.clear()

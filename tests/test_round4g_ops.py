@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from renard_spark.functions.graph import (
     conductance,
     greedy_coloring,
+    maximal_independent_set,
     neighborhood_function,
 )
 from renard_spark.functions.kgquery import bgp_match, bgp_union
@@ -288,6 +289,17 @@ def test_greedy_coloring_python_twin(spark):
             c += 1
         want[n] = c
     assert got == want
+
+
+def test_mis_and_coloring_drop_self_loop_only_nodes(spark):
+    """Both schedulers work on the simple graph: a node whose only
+    edge is a self-loop gets no row in either."""
+    e = spark.createDataFrame([("a", "a"), ("b", "c")], "src string, dst string")
+    mis = {r["node"]: r["in_mis"] for r in maximal_independent_set(e).collect()}
+    colors = {r["node"]: r["color"] for r in greedy_coloring(e).collect()}
+    assert set(mis) == set(colors) == {"b", "c"}
+    assert sorted(mis.values()) == [0, 1]
+    assert colors["b"] != colors["c"]
 
 
 def test_conductance_two_cliques_bridge(spark):
