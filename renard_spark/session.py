@@ -3,7 +3,9 @@
 Local-mode friendly but configured the way a multi-executor cluster run
 would be: AQE on (runtime join re-planning + skew-join splitting), Arrow
 on (every Python crossing is Arrow-batched), shuffle partitions
-sized to the parallelism rather than the 200 default.
+sized to the parallelism rather than the 200 default. The driver JVM
+it launches gets one JIT policy (``JIT_FLAGS``): C2 compiles only code
+that is really hot, one-off planner and codegen code stays in C1.
 """
 
 from __future__ import annotations
@@ -30,6 +32,27 @@ def driver_memory() -> str:
         kb = next(int(line.split()[1]) for line in f
                   if line.startswith("MemTotal:"))
     return f"{kb // 4 // 1024}m"
+
+
+# C2 (tier-4) thresholds at 10x their JDK 17 defaults (5000, 600, 15000,
+# 40000). A query's Catalyst, planner and generated code runs only a few
+# times, yet at the defaults C2 compiled it on the first execution of
+# every query: JIT compile time was over half of a short job's CPU.
+# Hot loops (operators over many rows, iterative graph rounds) still
+# reach C2, so steady-state passes keep their speed; C1-only
+# (-XX:TieredStopAtLevel=1) would not: repeated near_dup_pairs at sf0.1
+# took 1.6x the CPU and 2x the wall. The flags go in defaultJavaOptions,
+# which spark-submit puts in front of extraJavaOptions, so a caller's
+# own extraJavaOptions (e.g. perfbench's tmpdir) adds to them instead of
+# replacing them. A caller who passes spark.driver.defaultJavaOptions
+# in extra_conf replaces the policy, and a JVM that is already running
+# (e.g. one launched by spark-submit) is unaffected.
+JIT_FLAGS = (
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=150000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+)
 
 
 def get_spark(
@@ -64,6 +87,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_memory())
+        .config("spark.driver.defaultJavaOptions", " ".join(JIT_FLAGS))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # let the planner pick shuffled-hash join when its size
