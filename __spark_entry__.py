@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from renard_spark.operators import cooccur, ner, tokenize, triples, unify
 from renard_spark.operators.tokenize import TOKEN_RE
+from renard_spark.operators.utils import local_table
 from renard_spark.sources import ingest
 
 # tokens of the driver's synthetic documents treated as the "cast":
@@ -1825,8 +1826,8 @@ def q_entity_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renard_spark.operators import linking
 
     docs = ingest.normalize_documents(_docs_spread(spark, sf_dir))
-    kb = spark.createDataFrame(
-        KB_ENTITIES,
+    kb = local_table(
+        spark, KB_ENTITIES,
         "entity_id string, aliases array<string>,"
         " context array<string>, prior double",
     )
@@ -2032,8 +2033,8 @@ def q_alias_priors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renard_spark.operators import linking
 
     docs = ingest.normalize_documents(_docs_spread(spark, sf_dir))
-    kb = spark.createDataFrame(
-        KB_ENTITIES,
+    kb = local_table(
+        spark, KB_ENTITIES,
         "entity_id string, aliases array<string>,"
         " context array<string>, prior double",
     )
@@ -2184,8 +2185,8 @@ def q_stream_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs.repartition(3).write.parquet(in_dir)
 
-    kb = spark.createDataFrame(
-        KB_ENTITIES,
+    kb = local_table(
+        spark, KB_ENTITIES,
         "entity_id string, aliases array<string>,"
         " context array<string>, prior double",
     )
@@ -2283,8 +2284,8 @@ def q_kb_characters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renard_spark.operators import linking
 
     docs = ingest.normalize_documents(_docs_spread(spark, sf_dir))
-    kb = spark.createDataFrame(
-        KB_ENTITIES,
+    kb = local_table(
+        spark, KB_ENTITIES,
         "entity_id string, aliases array<string>,"
         " context array<string>, prior double",
     )
@@ -2366,7 +2367,7 @@ def q_polarity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sent_idx",
         F.floor(F.col("tok_idx") / POLARITY_SENT_LEN).cast("int"),
     ).localCheckpoint(eager=False)
-    lex = spark.createDataFrame(BENCH_LEXICON, "word string, valence double")
+    lex = local_table(spark, BENCH_LEXICON, "word string, valence double")
     # round BEFORE the per-pair |p|-argmax: two sentences with nominally
     # opposite polarities (±x) must tie EXACTLY on |p| in both engines
     # (raw doubles differ in the 1e-17s from summation order, flipping
@@ -2983,7 +2984,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renard_spark.functions import retrieval
 
     idx = retrieval.bm25_index(_docs_spread(spark, sf_dir))
-    q = spark.createDataFrame(BM25_QUERIES, "query_id int, term string")
+    q = local_table(spark, BM25_QUERIES, "query_id int, term string")
     t = retrieval.bm25_topk(idx, q, k=5)
     return t.select(
         "query_id", "doc_id", F.round("score", 6).alias("score"), "rank"
@@ -3091,7 +3092,7 @@ def q_type_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.lit(x) for kv in ONTOLOGY_TYPES.items() for x in kv]
     )
     typed = ents.select("entity", tmap[F.col("entity")].alias("cls"))
-    hier = spark.createDataFrame(SUBCLASS_EDGES, "sub string, sup string")
+    hier = local_table(spark, SUBCLASS_EDGES, "sub string, sup string")
     closure = gmetrics.transitive_closure(
         hier, src="sub", dst="sup", max_rounds=TYPE_CLOSURE_ROUNDS
     )
@@ -3211,8 +3212,8 @@ def q_rdfs_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renard_spark.functions.ontology import rdfs_closure
 
     facts = _relation_triples(spark, sf_dir)
-    schema = spark.createDataFrame(
-        RDFS_SCHEMA, "subj string, pred string, obj string"
+    schema = local_table(
+        spark, RDFS_SCHEMA, "subj string, pred string, obj string"
     )
     return rdfs_closure(facts, schema, max_rounds=RDFS_ROUNDS)
 
@@ -3236,8 +3237,8 @@ def q_bgp_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renard_spark.functions.kgquery import bgp_match
 
     gt = _relation_triples(spark, sf_dir)
-    extra = spark.createDataFrame(
-        [BGP_OPT_EXTRA], "subj string, pred string, obj string"
+    extra = local_table(
+        spark, [BGP_OPT_EXTRA], "subj string, pred string, obj string"
     )
     return bgp_match(
         gt.unionByName(extra), BGP_OPT_REQUIRED, optionals=BGP_OPT_OPTIONAL
@@ -3302,8 +3303,8 @@ def q_kg_construct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renard_spark.functions.kgquery import bgp_match, construct
 
     gt = _relation_triples(spark, sf_dir)
-    extra = spark.createDataFrame(
-        [BGP_OPT_EXTRA], "subj string, pred string, obj string"
+    extra = local_table(
+        spark, [BGP_OPT_EXTRA], "subj string, pred string, obj string"
     )
     bindings = bgp_match(
         gt.unionByName(extra), BGP_OPT_REQUIRED, optionals=BGP_OPT_OPTIONAL
@@ -3393,16 +3394,16 @@ def q_owl_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when(F.col("pred") == "scans", F.col("subj"))).alias("x"),
         F.min(F.when(F.col("pred") == "sorts", F.col("obj"))).alias("y"),
     ).first()
-    schema = spark.createDataFrame(
-        [
+    schema = local_table(
+        spark, [
             ("scans", INVERSE_OF, "scanned_by"),
             ("groups", TYPE, SYMMETRIC),
             ("sorts", TYPE, TRANSITIVE),
         ],
         "subj string, pred string, obj string",
     )
-    extra = spark.createDataFrame(
-        [
+    extra = local_table(
+        spark, [
             (OWL_ALIAS, SAME_AS, row["x"]),
             (OWL_ALIAS2, SAME_AS, OWL_ALIAS),
             (OWL_ALIAS2, "sorts", row["y"]),
@@ -3444,8 +3445,8 @@ def q_kg_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renard_spark.functions.kgquery import bgp_match
 
     gt = _relation_triples(spark, sf_dir)
-    extra = spark.createDataFrame(
-        [BGP_OPT_EXTRA], "subj string, pred string, obj string"
+    extra = local_table(
+        spark, [BGP_OPT_EXTRA], "subj string, pred string, obj string"
     )
     return bgp_match(
         gt.unionByName(extra), BGP_MINUS_REQUIRED, minus=BGP_MINUS_GROUPS
@@ -4135,8 +4136,8 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = ftext.learn_bpe_merges(
         _docs_spread(spark, sf_dir), n_merges=BPE_MERGES_N
     )
-    return spark.createDataFrame(
-        [(i, l, r, c) for i, (l, r, c) in enumerate(merges)],
+    return local_table(
+        spark, [(i, l, r, c) for i, (l, r, c) in enumerate(merges)],
         "merge_idx int, left string, right string, pair_freq long",
     )
 
@@ -4406,8 +4407,8 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs_spread(spark, sf_dir)
     cms = sketch.count_min(docs, d=4, w=256)
-    probes = spark.createDataFrame(
-        [(t,) for t in PROBE_TOKENS], "token string"
+    probes = local_table(
+        spark, [(t,) for t in PROBE_TOKENS], "token string"
     )
     est = sketch.cms_estimate(cms, probes, d=4, w=256)
     toks = docs.select(
@@ -5320,8 +5321,8 @@ def q_kg_path_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renard_spark.functions.kgquery import eval_path
 
     gt = _relation_triples(spark, sf_dir)
-    extra = spark.createDataFrame(
-        PATH_EXTRA, "subj string, pred string, obj string"
+    extra = local_table(
+        spark, PATH_EXTRA, "subj string, pred string, obj string"
     )
     return eval_path(gt.unionByName(extra), PATH_EXPR)
 
@@ -5365,8 +5366,8 @@ def q_kg_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     from renard_spark.functions.kgquery import bgp_match
 
     gt = _relation_triples(spark, sf_dir)
-    extra = spark.createDataFrame(
-        [BGP_OPT_EXTRA], "subj string, pred string, obj string"
+    extra = local_table(
+        spark, [BGP_OPT_EXTRA], "subj string, pred string, obj string"
     )
     g = gt.unionByName(extra).localCheckpoint(eager=False)
     req = [("?a", "scans", "?b")]
@@ -5464,8 +5465,8 @@ def q_kg_subselect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     gt = _relation_triples(spark, sf_dir)
-    extra = spark.createDataFrame(
-        KG_SUB_EXTRA, "subj string, pred string, obj string"
+    extra = local_table(
+        spark, KG_SUB_EXTRA, "subj string, pred string, obj string"
     )
     g = gt.unionByName(extra).localCheckpoint(eager=False)
     outer = bgp_match(g, [("?a", "?p", "?b")])
@@ -5808,8 +5809,8 @@ def q_kg_service(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer = bgp_match(
         _relation_triples(spark, sf_dir), [("?a", "?r", "?b")]
     )
-    schema = spark.createDataFrame(
-        RDFS_SCHEMA, "subj string, pred string, obj string"
+    schema = local_table(
+        spark, RDFS_SCHEMA, "subj string, pred string, obj string"
     )
     return service_solutions(
         outer,

@@ -201,9 +201,9 @@ def curation_pipeline(
     to a catalog table with a manifest config-hash, so a restarted job
     (or one with only the thresholds changed) re-executes only the
     invalidated suffix — changing ``quality_min`` recomputes the cheap
-    decision join, never the shingle/band stages. Per-stage
-    per-partition row/doc metrics land in the ``_metrics`` table like
-    every other staged run. Returns {stage: DataFrame}; the final table
+    decision join, never the shingle/band stages. Each stage's row and
+    document counts land in its manifest entry like every other staged
+    run (``StageRunner.metrics``). Returns {stage: DataFrame}; the final table
     is ``curated`` (same schema as :func:`curate`)."""
     from renard_spark.io.catalog import get_catalog
     from renard_spark.plans.stage import StageRunner

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from renard_spark.operators.tokenize import TOKEN_RE
+from renard_spark.operators.utils import local_table
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BANDS = 4  # rows per band = num_hashes / bands
@@ -879,8 +880,8 @@ def blocking_quality(
     spark = docs.sparkSession
     # ratios via F.round (half-up, same as the SQL engines) — Python's
     # round() is banker's rounding and can disagree at the boundary
-    base = spark.createDataFrame(
-        [(n_docs, int(truth), n_cands, hits)],
+    base = local_table(
+        spark, [(n_docs, int(truth), n_cands, hits)],
         "n_docs long, n_truth_pairs long, n_cand_pairs long, n_hits long",
     )
     return base.select(

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from renard_spark.operators.utils import local_table
+
 
 def symmetrize(
     edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -555,8 +557,8 @@ def bfs_distances(
     diameter — pytest-asserted vs networkx); ``iters=None`` runs to
     the fixpoint."""
     sym = _symmetric(edges, src, dst)
-    seed = edges.sparkSession.createDataFrame(
-        [(source, 0)], "node string, d int"
+    seed = local_table(
+        edges.sparkSession, [(source, 0)], "node string, d int"
     )
     dist = _relax(sym, seed, F.col("d") + 1, iters=iters,
                   max_rounds=max_rounds)
@@ -623,8 +625,8 @@ def weighted_distances(
     diameter) are oracle-unrollable; ``iters=None`` runs to the
     fixpoint."""
     sym = _symmetric(edges, src, dst, cost)
-    seed = edges.sparkSession.createDataFrame(
-        [(source, 0.0)], "node string, d double"
+    seed = local_table(
+        edges.sparkSession, [(source, 0.0)], "node string, d double"
     )
     dist = _relax(sym, seed, F.col("d") + F.col("c"), iters=iters,
                   max_rounds=max_rounds)
@@ -673,8 +675,8 @@ def _multi_source_distances(
     sym = _symmetric(edges, src, dst)
     seeds = sym.select(F.col("u").alias("node")).distinct()
     if sources is not None:
-        want = edges.sparkSession.createDataFrame(
-            [(s,) for s in sources], ["node"]
+        want = local_table(
+            edges.sparkSession, [(s,) for s in sources], ["node"]
         ).distinct()
         seeds = seeds.join(want, "node")
     state = seeds.select(
@@ -743,9 +745,8 @@ def betweenness_centrality(
     sym = _symmetric(edges, src, dst)
     nodes = sym.select(F.col("u").alias("node")).distinct()
     if sources is not None:
-        spark = edges.sparkSession
-        want = spark.createDataFrame(
-            [(s,) for s in sources], ["node"]
+        want = local_table(
+            edges.sparkSession, [(s,) for s in sources], ["node"]
         ).distinct()
         seeds = nodes.join(want, "node")
     else:
@@ -874,9 +875,7 @@ def modularity(
     la = labels.select(F.col("node"), F.col(label_col).alias("label"))
     m = float(e.agg(F.sum("w")).first()[0] or 0.0)
     if m == 0.0:
-        return e.sparkSession.createDataFrame(
-            [(0.0,)], "modularity double"
-        )
+        return local_table(e.sparkSession, [(0.0,)], "modularity double")
     intra = (
         e.join(la.withColumnRenamed("node", "a").withColumnRenamed(
             "label", "lab_a"), "a")
@@ -1906,8 +1905,8 @@ def bfs_paths(
     chains (use bfs_distances + on-demand backtracking there).
     """
     sym = _symmetric(edges, src, dst)
-    seed = edges.sparkSession.createDataFrame(
-        [(source, (0, [source]))],
+    seed = local_table(
+        edges.sparkSession, [(source, (0, [source]))],
         "node string, d struct<distance: int, path: array<string>>",
     )
     step = F.struct(

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from renard_spark.operators.utils import local_table
+
 Pattern = tuple[str, str, str]
 
 
@@ -584,7 +586,7 @@ def select_solutions(
                 "UNDEF in VALUES is not supported — omit the variable"
             )
         spark = bindings.sparkSession
-        block = spark.createDataFrame(rows, cols).distinct()
+        block = local_table(spark, rows, cols).distinct()
         out = out.join(F.broadcast(block), cols, "inner")
 
     if aggregates:
@@ -698,8 +700,8 @@ def describe(
     else:
         if not resources:
             raise ValueError("describe needs >= 1 resource")
-        res = spark.createDataFrame(
-            [(r,) for r in sorted(set(resources))], ["resource"]
+        res = local_table(
+            spark, [(r,) for r in sorted(set(resources))], ["resource"]
         )
         res = F.broadcast(res)
     t = triples.select(subj, pred, obj)

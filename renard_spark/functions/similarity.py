@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from renard_spark.operators.utils import map_batches
+from renard_spark.operators.utils import local_table, map_batches
 
 
 def _norm(col):
@@ -219,8 +219,8 @@ def ivf_centroids(
         StructField("centroid_id", IntegerType(), False),
         StructField("cvec", vec_type, True),
     ])
-    return spark.createDataFrame(
-        [(i, list(r["cvec"])) for i, r in enumerate(cents)], schema
+    return local_table(
+        spark, [(i, list(r["cvec"])) for i, r in enumerate(cents)], schema
     )
 
 
@@ -664,8 +664,8 @@ def pq_codebooks(
         sd = len(v) // m
         for sub in range(m):
             out.append((sub, code, v[sub * sd : (sub + 1) * sd]))
-    return emb.sparkSession.createDataFrame(
-        out, "sub_id int, code int, cvec array<double>"
+    return local_table(
+        emb.sparkSession, out, "sub_id int, code int, cvec array<double>"
     )
 
 

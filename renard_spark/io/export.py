@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from renard_spark.operators.utils import local_table
+
 MANIFEST_DIR = "_manifest"
 
 
@@ -144,8 +146,9 @@ def verify_corpus_shards(
     except Exception:
         # an empty export wrote no shard dirs — nothing to aggregate;
         # verification degenerates to "manifest must be empty too"
-        actual = spark.createDataFrame(
-            [], "shard int, n_docs long, n_bytes long, content_xor long"
+        actual = local_table(
+            spark, [],
+            "shard int, n_docs long, n_bytes long, content_xor long",
         )
     joined = actual.join(stored, "shard", "full_outer")
     ok = (

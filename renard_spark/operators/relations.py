@@ -20,7 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from renard_spark.operators.utils import cached_model, map_batches
+from renard_spark.operators.utils import (
+    cached_model, local_table, map_batches,
+)
 
 TRIPLE_RE = r"\(([^,]+), ?([^,]+), ?([^,]+)\)"
 
@@ -160,9 +162,7 @@ def pattern_relations(
     raw triple (doc_id, sent_idx, raw_subj, rel, raw_obj)."""
     verbs = verbs or RELATION_VERBS
     spark = tokens_df.sparkSession
-    vdf = spark.createDataFrame(
-        [(k, v) for k, v in verbs.items()], "verb string, rel string"
-    )
+    vdf = local_table(spark, verbs.items(), "verb string, rel string")
     sent_of = tokens_df.select(
         F.col("doc_id").alias("_d"),
         F.col("tok_idx").alias("_t"),

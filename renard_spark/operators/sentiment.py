@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from renard_spark.resources.valence import EXTENDED_VALENCE
+from renard_spark.operators.utils import local_table
 
 ALPHA = 15.0  # VADER's normalization constant
 
@@ -40,8 +41,8 @@ LEXICON: dict[str, float] = {**EXTENDED_VALENCE, **_CORE}
 
 
 def lexicon_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [(w, v) for w, v in LEXICON.items()], "word string, valence double"
+    return local_table(
+        spark, LEXICON.items(), "word string, valence double"
     )
 
 

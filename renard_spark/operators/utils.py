@@ -7,6 +7,9 @@ from the reference's helper inventory.
   batches, optionally keyed so a batch holds complete groups, with
   output types taken from the declared schema. ``cached_model`` is the
   executor-local model cache the model-backed steps share.
+- ``local_table``: a driver-side literal table (seed rows, lexicons,
+  VALUES blocks) built as one typed Arrow table, planned as a
+  ``LocalTableScan``: no Python task, no second worker pool.
 - ``make_vocab``: first-seen-order element→index map
   (/root/reference/renard/utils.py:137-152) as a window over first
   occurrence.
@@ -94,10 +97,8 @@ def map_batches(
     coalesce it, which runs a mention-sized table as one or two
     tasks."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
-    arrow_schema = to_arrow_schema(struct)
+    struct, arrow_schema = _schemas(schema)
 
     def complete_groups(batches):
         import pyarrow.compute as pc
@@ -122,26 +123,59 @@ def map_batches(
         if pending is not None:
             yield pending
 
-    def to_batch(out) -> pa.RecordBatch:
-        if isinstance(out, dict):
-            cols = [out[name] for name in arrow_schema.names]
-        else:
-            cols = list(zip(*out)) or [()] * len(arrow_schema)
-        return pa.RecordBatch.from_arrays(
-            [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
-            schema=arrow_schema,
-        )
-
     def run(batches):
         if key is not None:
             batches = complete_groups(batches)
         for out in step(Batch(b) for b in batches):
-            yield to_batch(out)
+            yield _record_batch(out, arrow_schema)
 
     if key is not None:
         df = (df.repartition(partitions, key) if partitions
               else df.repartition(key)).sortWithinPartitions(key, *sort_cols)
     return df.mapInArrow(run, schema=struct)
+
+
+def _schemas(schema: str | StructType):
+    """(``StructType``, Arrow schema) of a DDL string or ``StructType``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    return struct, to_arrow_schema(struct)
+
+
+def _record_batch(out, arrow_schema):
+    """Row tuples, or a dict of columns, as one record batch of
+    ``arrow_schema``'s types."""
+    import pyarrow as pa
+
+    if isinstance(out, dict):
+        cols = [out[name] for name in arrow_schema.names]
+    else:
+        cols = list(zip(*out)) or [()] * len(arrow_schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
+def local_table(spark, rows, schema) -> DataFrame:
+    """Driver-side row tuples as a DataFrame planned as a
+    ``LocalTableScan``, typed by ``schema`` (a DDL string or
+    ``StructType``; ints fill double columns) or, given column names,
+    by the types ``spark.createDataFrame`` infers from the rows.
+
+    ``spark.createDataFrame(<list>, ...)`` is a PythonRDD instead: each
+    scan runs one Python task per default-parallelism slice, in a
+    worker pool of its own (PySpark keys pools by worker environment,
+    and the RDD runner's differs from the SQL runners')."""
+    import pyarrow as pa
+
+    rows = list(rows)
+    if isinstance(schema, (list, tuple)):
+        schema = spark._inferSchemaFromList(rows, names=list(schema))
+    struct, arrow_schema = _schemas(schema)
+    table = pa.Table.from_batches([_record_batch(rows, arrow_schema)])
+    return spark.createDataFrame(table, struct)
 
 
 def global_running_total(
@@ -182,7 +216,7 @@ def global_running_total(
         acc += int(t or 0)
     if not offsets:
         return df.withColumn(out_col, F.lit(0).cast("long")).limit(0)
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
+    off_df = local_table(spark, offsets, "_pid int, _off long")
     w = (
         Window.partitionBy("_pid")
         .orderBy(*order_cols)

@@ -1,5 +1,5 @@
 """Stage registry and the materializing executor: dataflow validation,
-checkpointed materialization, resume, per-partition metrics.
+checkpointed materialization, resume, per-stage counters.
 
 A ``Stage`` is (name, needs, fn, config). The narrative DAG is one
 ordered list of them (``pipeline.narrative_stages``) with two
@@ -14,10 +14,10 @@ reference's pipeline framework:
   resumes from the last stage whose manifest entry is still valid);
   ``config`` holds every parameter the stage fn reads, so changing one
   recomputes the stage and everything downstream;
-- per-partition metrics (north_rule): after each materialization, a
-  metrics table rows (stage, partition_id, rows, docs, wall_ms) is
-  appended, computed on the *written* table so it reflects the real
-  physical layout.
+- per-stage counters: the write job itself counts the stage's rows and
+  (approximately) its distinct ``doc_id``s through ``DataFrame.observe``,
+  stored in the manifest entry next to ``wall_ms``; no job reads the
+  table back to count it.
 
 No driver-side document loops anywhere: a "stage" is one DataFrame
 expression; the runner only sequences materializations.
@@ -32,10 +32,11 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from renard_spark.io.catalog import ParquetCatalog
+from renard_spark.operators.utils import local_table
 
 
 @dataclass
@@ -54,8 +55,6 @@ class Stage:
 
 
 class StageRunner:
-    METRICS_TABLE = "_metrics"
-
     def __init__(self, spark: SparkSession, catalog: ParquetCatalog,
                  inputs: dict[str, DataFrame] | None = None):
         self.spark = spark
@@ -105,28 +104,6 @@ class StageRunner:
             return self.inputs[name]
         raise KeyError(name)
 
-    def _write_metrics(self, stage: str, wall_ms: float) -> None:
-        df = self.catalog.read(stage)
-        doc_col = "doc_id" if "doc_id" in df.columns else None
-        agg = [F.count(F.lit(1)).alias("rows")]
-        if doc_col:
-            agg.append(F.approx_count_distinct(doc_col).alias("docs"))
-        else:
-            agg.append(F.lit(None).cast("long").alias("docs"))
-        metrics = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(*agg)
-            .select(
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                "rows",
-                "docs",
-                F.lit(float(wall_ms)).alias("wall_ms"),
-            )
-        )
-        mode = "append" if self.catalog.exists(self.METRICS_TABLE) else "overwrite"
-        self.catalog.write(self.METRICS_TABLE, metrics, mode=mode)
-
     def run(self, rerun_from: str | None = None,
             force: bool = False,
             ignored_stages: set[str] | None = None) -> dict[str, DataFrame]:
@@ -162,6 +139,12 @@ class StageRunner:
             deps = [out[n] if n in out else self._resolve(n) for n in st.needs]
             t0 = time.perf_counter()
             df = st.fn(self.spark, *deps)
+            # the write job counts the stage: no job reads it back
+            counts = Observation()
+            aggs = [F.count(F.lit(1)).alias("rows")]
+            if "doc_id" in df.columns:
+                aggs.append(F.approx_count_distinct("doc_id").alias("docs"))
+            df = df.observe(counts, *aggs)
             # bucketed-by-doc layout (Iceberg bucket(doc_id) analog):
             # downstream per-doc stages co-locate on read
             if "doc_id" in df.columns:
@@ -172,16 +155,26 @@ class StageRunner:
             else:
                 self.catalog.write(st.name, df)
             wall_ms = (time.perf_counter() - t0) * 1000
-            self._write_metrics(st.name, wall_ms)
+            seen = counts.get
             manifest[st.name] = {
                 "config_hash": h,
                 "wall_ms": round(wall_ms, 1),
                 "finished_at": time.time(),
+                "rows": seen["rows"],
+                "docs": seen.get("docs"),
             }
             self._save_manifest(manifest)
             out[st.name] = self.catalog.read(st.name)
         return out
 
     def metrics(self) -> DataFrame:
-        return self.catalog.read(self.METRICS_TABLE)
+        """(stage, rows, docs, wall_ms) of every stage in the manifest,
+        from its last materialization; ``docs`` is NULL for a stage
+        without ``doc_id``."""
+        return local_table(
+            self.spark,
+            [(name, e.get("rows"), e.get("docs"), e["wall_ms"])
+             for name, e in sorted(self._load_manifest().items())],
+            "stage string, rows long, docs long, wall_ms double",
+        )
 

@@ -176,7 +176,8 @@ def main() -> None:
     out = runner.run(rerun_from=args.rerun_from)
     n = out["triples"].count()
     print(f"triples: {n}")
-    runner.metrics().groupBy("stage").sum("rows").show(50, truncate=False)
+    # rows, distinct doc_ids and wall time of each stage's last write
+    runner.metrics().show(50, truncate=False)
     if args.export_graph:
         from renard_spark.io.export import write_graph_tables
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from renard_spark.operators.utils import local_table
+
 
 def read_conll2002_bio(
     spark: SparkSession,
@@ -134,12 +136,10 @@ def labeled_sentences(bio_df: DataFrame) -> DataFrame:
         r["tag"] for r in retagged.select("tag").distinct().collect()
     )
     spark = bio_df.sparkSession
-    vocab = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(tags)], "tag string, label int"
+    vocab = local_table(
+        spark, [(t, i) for i, t in enumerate(tags)], "tag string, label int"
     )
-    names = spark.createDataFrame(
-        [(tags,)], "label_names array<string>"
-    )
+    names = local_table(spark, [(tags,)], "label_names array<string>")
     return (
         retagged.join(F.broadcast(vocab), "tag")
         .groupBy("doc_id", "sent_idx")

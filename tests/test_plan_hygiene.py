@@ -74,6 +74,63 @@ def test_production_stages_cross_python_only_through_arrow(spark, tmp_path):
             name, plan)
 
 
+def test_literal_tables_scan_locally(spark):
+    """Driver-side literal tables (the BFS seed, the default lexicon,
+    the relation-verb table) are planned as a ``LocalTableScan``, never
+    as a scan of an RDD of Python rows, whose every scan runs Python
+    tasks in a worker pool of its own."""
+    from pyspark.sql import functions as F
+
+    from renard_spark.functions import graph
+    from renard_spark.operators import relations, sentiment
+
+    edges = spark.range(4).select(
+        F.col("id").cast("string").alias("src"),
+        (F.col("id") + 1).cast("string").alias("dst"),
+    )
+    toks = tokenize.tokens(
+        ingest.normalize_documents(corpus.generate_documents(spark, 3))
+    )
+    mentions = toks.select(
+        "doc_id", F.col("token").alias("char_id"),
+        F.col("token").alias("mention_str"),
+        F.col("tok_idx").alias("start_idx"), F.col("tok_idx").alias("end_idx"),
+    )
+    for df, cols in (
+        (graph.bfs_distances(edges, "0", iters=5), "node, d"),
+        (sentiment.sentence_polarities(toks), "word, valence"),
+        (relations.pattern_relations(mentions, toks), "verb, rel"),
+    ):
+        plan = _plan(df)
+        scan = r"\[" + r", ".join(c + r"#\d+" for c in cols.split(", "))
+        assert re.search("LocalTableScan " + scan, plan), plan
+        assert not re.search("ExistingRDD" + scan, plan), plan
+
+
+def test_local_table_equals_list_path(spark):
+    """``local_table`` gives the schema and rows of
+    ``spark.createDataFrame`` over the same list: an empty table, a
+    struct column, column names only (types inferred), and ints in a
+    double column, which the list path takes only as floats."""
+    from renard_spark.operators.utils import local_table
+
+    struct = "node string, d struct<distance: int, path: array<string>>"
+    for rows, schema, listed in (
+        ([], "shard int, n_docs long", []),
+        ([("a", (0, ["a"])), ("b", (1, ["a", "b"]))], struct, None),
+        ([("a",), ("b",)], ["node"], None),
+        ([(1, "x")], ["id", "v"], None),
+        ([("w", 1), ("x", -2.5)], "word string, valence double",
+         [("w", 1.0), ("x", -2.5)]),
+    ):
+        got = local_table(spark, rows, schema)
+        want = spark.createDataFrame(rows if listed is None else listed,
+                                     schema)
+        assert got.schema == want.schema, schema
+        assert got.collect() == want.collect(), schema
+        assert "ExistingRDD" not in _plan(got)
+
+
 def test_column_pruning_reaches_scan(spark, tmp_path):
     # write a wide table, read two columns → ReadSchema must be pruned
     p = str(tmp_path / "wide")

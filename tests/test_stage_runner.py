@@ -70,6 +70,30 @@ def full_run(spark, tmp_path_factory):
     return docs, runner, runner.run()
 
 
+def test_stage_counters_come_from_the_write_job(spark, full_run):
+    """Each stage's manifest entry holds its table's row count and,
+    for a stage with ``doc_id``, its distinct document count within
+    HyperLogLog error (relative standard deviation 5%; three of them
+    allowed); no ``_metrics`` table is written. ``metrics()`` reads
+    the same numbers."""
+    _, runner, out = full_run
+    root = runner.catalog.root
+    with open(os.path.join(root, "_manifest.json")) as f:
+        manifest = json.load(f)
+    assert not os.path.exists(os.path.join(root, "_metrics"))
+    metrics = {r.stage: (r.rows, r.docs) for r in runner.metrics().collect()}
+    assert metrics.keys() == manifest.keys() == out.keys()
+    for name, df in out.items():
+        entry = manifest[name]
+        assert entry["rows"] == df.count(), name
+        if "doc_id" in df.columns:
+            exact = df.select("doc_id").distinct().count()
+            assert abs(entry["docs"] - exact) <= 0.15 * exact, name
+        else:
+            assert entry["docs"] is None, name
+        assert metrics[name] == (entry["rows"], entry["docs"]), name
+
+
 def test_runner_edges_equal_token_table_wiring(spark, full_run):
     """The production edges (co-occurrence over the sentence_tokens
     bounds, narrow polarities) and triples equal the token-table wiring
